@@ -5,7 +5,7 @@ engine designed for 100 TB scale.
 Layers
 ------
 - ``types``       pure-Python Hive type lattice (inference + merge + render)
-- ``infer``       distributed schema inference (mapInPandas + treeAggregate)
+- ``infer``       distributed schema inference (one Arrow mapInPandas lattice fold)
 - ``shred``       distributed JSON shredding (explode to (path, value) rows)
 - ``functions``   column-function pack (classifiers, text, vectors)
 - ``operators``   relational + dedup + similarity + text-analysis operators

@@ -13,11 +13,13 @@ Scale design (100 TB):
   type tree per partition crosses the wire.
 - **Concatenated multi-line JSON or .gz**: not splittable (the same
   constraint the reference has — gzip forces sequential reads,
-  JsonSchemaFinder.java:234-236). Parallelism is per *file* via
-  ``binaryFiles``; throughput scales with file count.
-- **In-table JSON columns**: ``mapInPandas`` over Arrow batches — one
-  pickled partial per partition, merged on the driver. The driver merges
-  #partitions items (KBs each), never data.
+  JsonSchemaFinder.java:234-236). Read with ``spark.read.text(...,
+  wholetext=True)``: one row per *file*, decompressed by Hadoop's codec
+  from the ``.gz`` suffix; throughput scales with file count.
+- Every entry point, in-table JSON columns included, ends in the same
+  ``mapInPandas`` fold over Arrow batches — one pickled partial per
+  partition, merged on the driver. The driver merges #partitions items
+  (KBs each), never data.
 - Result determinism: the reference is fold-order-sensitive for union
   branch order (UnionType.java:89-100); distributed folds are unordered, so
   entry points canonicalize (sorted union branches) by default.
@@ -147,51 +149,36 @@ def infer_schema(
     *,
     ndjson: bool = True,
     canonical: bool = True,
-    min_partitions: Optional[int] = None,
     on_error: str = "raise",
 ) -> InferResult:
-    """Distributed inference over JSON corpus files.
+    """Distributed inference over JSON corpus files (plain or ``.gz``).
 
-    ndjson=True  → line-splittable ``spark.read.text`` scan (scale path).
-    ndjson=False → whole-file parallelism via ``binaryFiles`` (concatenated
-                   docs / .gz corpora — the reference's sequential constraint,
-                   parallel across files).
+    ndjson=True  → one row per line (splittable scan, the scale path).
+    ndjson=False → one row per whole file: concatenated documents and .gz
+                   corpora, read sequentially per file as the reference
+                   does, parallel across files.
+
+    Either way the rows go through the same Arrow fold as a JSON column,
+    so ``on_error`` applies per row: under ``"skip"`` a bad document
+    keeps the documents before it in that line or file and counts one
+    corrupt text. A named or globbed file Spark would silently skip
+    (hidden ``_``/``.`` basename) raises ``ValueError`` instead.
     """
     paths = _expand(paths)
-    sc = spark.sparkContext
-    if ndjson:
-        # Arrow path: one JSONDecoder per batch, zero per-row pickling —
-        # measured ~5× the df.rdd.map row-shuttle throughput
-        df = spark.read.text(list(paths))
-        return _fold_column_partials(
-            df, "value", canonical=canonical, on_error=on_error, dedup=False
-        )
-    else:
-        n_parts = min_partitions or max(len(paths), 1)
-        binaries = sc.binaryFiles(",".join(paths), minPartitions=n_parts)
+    hidden = [
+        p
+        for p in paths
+        if os.path.basename(p).startswith(("_", ".")) and not os.path.isdir(p)
+    ]
+    if hidden:
+        # Spark's file index drops such files silently (a directory named so
+        # is still listed); a named input must not vanish
+        raise ValueError(f"Spark skips files named with a leading '_' or '.': {hidden}")
+    df = spark.read.text(paths, wholetext=not ndjson)
+    return _fold_column_partials(
+        df, "value", canonical=canonical, on_error=on_error, dedup=False
+    )
 
-        def decode(kv):
-            path, data = kv
-            if path.endswith(".gz"):
-                data = gzip.decompress(data)
-            return data.decode("utf-8")
-
-        rdd = binaries.map(decode)
-
-    def seq(acc, text):
-        t, n, bad = _fold_texts([text], on_error)
-        return merge_types(acc[0], t), acc[1] + n, acc[2] + bad
-
-    def comb(a, b):
-        return merge_types(a[0], b[0]), a[1] + b[1], a[2] + b[2]
-
-    htype, records, corrupt = rdd.treeAggregate((None, 0, 0), seq, comb, depth=2)
-    if canonical and htype is not None:
-        htype = canonicalize(htype)
-    return InferResult(htype, records, corrupt)
-
-
-_COLUMN_INFER_MEMO: dict = {}
 
 # max partials merged in one place (one executor task or the driver); above
 # this, _fold_column_partials inserts executor-side tree-merge rounds
@@ -260,9 +247,8 @@ def _fold_column_partials(
     # a flat driver merge is a long single-threaded tail and a large
     # collect. Above _MERGE_FAN_IN partitions, insert executor-side merge
     # rounds (each shuffles only the tiny partials and reduces their count
-    # by the fan-in) until a driver-sized set remains — the same shape as
-    # treeAggregate(depth=2) used by the RDD path in infer_files. merge_types
-    # is the lattice join (associative), so the tree grouping leaves the
+    # by the fan-in) until a driver-sized set remains. merge_types is the
+    # lattice join (associative), so the tree grouping leaves the
     # canonicalized result unchanged.
     n_parts = partials_df.rdd.getNumPartitions()
     while n_parts > _MERGE_FAN_IN:
@@ -291,7 +277,6 @@ def infer_schema_of_column(
     column: str,
     *,
     canonical: bool = True,
-    memo: bool = True,
     on_error: str = "raise",
     max_struct_fields: Optional[int] = None,
 ) -> InferResult:
@@ -300,28 +285,9 @@ def infer_schema_of_column(
     Arrow-batched: ``mapInPandas`` folds each partition locally and emits ONE
     pickled partial per partition; the driver merges #partitions partials.
     Each partition folds only its *distinct* values (scaled by frequency).
-
-    memo=True caches the result per (plan semantic hash, input files,
-    column) within the process — repeated inference over the same immutable
-    files (the common "infer then load then query" pattern) folds once.
+    Nothing is cached: every call folds the column as it is now.
     """
-    memo_key = None
-    if memo:
-        try:
-            memo_key = (
-                df.semanticHash(),
-                tuple(sorted(df.inputFiles())),
-                column,
-                canonical,
-                on_error,
-                max_struct_fields,
-            )
-        except Exception:
-            memo_key = None
-        if memo_key is not None and memo_key in _COLUMN_INFER_MEMO:
-            return _COLUMN_INFER_MEMO[memo_key]
-
-    result = _fold_column_partials(
+    return _fold_column_partials(
         df,
         column,
         canonical=canonical,
@@ -329,9 +295,6 @@ def infer_schema_of_column(
         dedup=True,
         max_struct_fields=max_struct_fields,
     )
-    if memo_key is not None:
-        _COLUMN_INFER_MEMO[memo_key] = result
-    return result
 
 
 # --- loading under the inferred schema (incl. union data) --------------------

@@ -316,7 +316,8 @@ def q_flat_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 # end-to-end. Bounded harness: the corpus is a fixed ≤2000-doc prefix
 # (event_id < 2000 — constant at every sf), so the driver-side gz write is
 # constant-sized at any corpus scale; the library path itself
-# (infer_schema ndjson=False) is the distributed binaryFiles fold.
+# (infer_schema ndjson=False) reads one row per file and runs the same Arrow
+# fold as every column inference.
 @query(
     "q_infer_props_schema_gz",
     """

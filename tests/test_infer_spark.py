@@ -31,6 +31,8 @@ def corpus(tmp_path_factory):
     (d / "b.json").write_text(concat)
     with gzip.open(d / "c.json.gz", "wt") as f:
         f.write(ndjson)
+    # a comma in a file name must not split the path list
+    (d / "c,d.json").write_text(concat)
     # multi-file split of the same corpus
     (d / "part1.json").write_text("\n".join(json.dumps(x) for x in CORPUS_DOCS[:2]))
     (d / "part2.json").write_text("\n".join(json.dumps(x) for x in CORPUS_DOCS[2:]))
@@ -57,9 +59,87 @@ def test_distributed_matches_local_ndjson(spark, corpus):
 
 
 def test_distributed_whole_file_mode_gz(spark, corpus):
-    r = infer_schema(spark, [str(corpus / "b.json"), str(corpus / "c.json.gz")], ndjson=False)
-    assert r.records == 8
+    names = ["b.json", "c.json.gz", "c,d.json"]
+    r = infer_schema(spark, [str(corpus / n) for n in names], ndjson=False)
+    assert r.records == 12
     assert str(r.htype) == EXPECTED
+
+
+def test_whole_file_hidden_names_raise(spark, tmp_path):
+    """Spark's file index silently drops files whose name starts with '_'
+    or '.'; a file the caller named, directly or through a glob, must
+    raise instead of vanishing from the fold."""
+    doc = '{"a": 1}'
+    for name in ("_x.json", ".y.json"):
+        (tmp_path / name).write_text(doc)
+        with pytest.raises(ValueError, match=name):
+            infer_schema(spark, str(tmp_path / name), ndjson=False)
+    sub = tmp_path / "sub"
+    sub.mkdir()
+    (sub / "v.json").write_text(doc)
+    (sub / "_w.json").write_text(doc)
+    with pytest.raises(ValueError, match="_w.json"):
+        infer_schema(spark, str(sub / "*.json"), ndjson=False)
+    # a directory so named is still listed by Spark, so it stays readable
+    hidden_dir = tmp_path / "_dir"
+    hidden_dir.mkdir()
+    (hidden_dir / "z.json").write_text(doc)
+    assert infer_schema(spark, str(hidden_dir), ndjson=False).records == 1
+
+
+def test_whole_file_malformed_input_pinned(spark, tmp_path):
+    """Pinned behaviour of the whole-file (.gz / concatenated) discover
+    path on malformed input."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    failures = (Py4JJavaError, PySparkException)
+    full = gzip.compress(b'{"a": 1}{"a": 2}' * 200)
+    truncated = tmp_path / "truncated.json.gz"
+    truncated.write_bytes(full[: len(full) // 2])
+    bad_utf8 = tmp_path / "bad_utf8.json"
+    bad_utf8.write_bytes(b'{"a": "\xff\xfe"}')
+    for path in (truncated, bad_utf8):
+        for on_error in ("raise", "skip"):
+            with pytest.raises(failures):
+                infer_schema(spark, str(path), ndjson=False, on_error=on_error)
+
+    # a bad document mid-file: the documents before it count, the rest
+    # of the file is one corrupt text
+    mid = tmp_path / "mid.json"
+    mid.write_text('{"a":1}{"a":2}{"a":{"a":3}')
+    r = infer_schema(spark, str(mid), ndjson=False, on_error="skip")
+    assert (r.records, r.corrupt) == (2, 1)
+    assert str(r.htype) == "struct<a:tinyint>"
+    with pytest.raises(failures):
+        infer_schema(spark, str(mid), ndjson=False)
+
+    # an empty file folds to the lattice bottom with no records (the local
+    # path, infer_files_local, returns no type at all here)
+    empty = tmp_path / "empty.json"
+    empty.write_text("")
+    r = infer_schema(spark, str(empty), ndjson=False)
+    assert (str(r.htype), r.records) == ("void", 0)
+
+    with pytest.raises(failures):
+        infer_schema(spark, str(tmp_path / "missing.json"), ndjson=False)
+
+
+def test_column_reinferred_after_rewrite_in_place(spark, tmp_path):
+    """A parquet file rewritten in place under the same path is folded
+    again: inference reflects the file as it is now, not a cached result."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"js": ['{"k": 1}', '{"k": 2}']}), path)
+    first = infer_schema_of_column(spark.read.parquet(path), "js")
+    assert str(first.htype) == "struct<k:tinyint>"
+
+    pq.write_table(pa.table({"js": ['{"k": "x"}', '{"k": "y"}', '{"k": "z"}']}), path)
+    second = infer_schema_of_column(spark.read.parquet(path), "js")
+    assert str(second.htype) == "struct<k:string>"
+    assert second.records == 3
 
 
 def test_infer_column_events_props(spark, sf_dir):
@@ -171,7 +251,7 @@ def test_infer_on_error_skip_counts_corrupt(spark):
     import pytest as _pt
 
     with _pt.raises(Exception):
-        infer_schema_of_column(df, "js", memo=False)
+        infer_schema_of_column(df, "js")
 
 
 def test_infer_wide_struct_decays_to_map(spark):
@@ -186,7 +266,7 @@ def test_infer_wide_struct_decays_to_map(spark):
     r = infer_schema_of_column(df, "js", max_struct_fields=64)
     assert str(r.htype) == "map<string,tinyint>"
     # without the guard: 600-field struct
-    r2 = infer_schema_of_column(df, "js", memo=False)
+    r2 = infer_schema_of_column(df, "js")
     assert str(r2.htype).count("key_") == 600
 
 
@@ -359,8 +439,8 @@ def test_column_fold_tree_merge_matches_flat(spark, sf_dir, monkeypatch):
     import hive_json_spark.infer as infer_mod
 
     df = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(16)
-    flat = infer_mod.infer_schema_of_column(df, "props", canonical=True, memo=False)
+    flat = infer_mod.infer_schema_of_column(df, "props", canonical=True)
     monkeypatch.setattr(infer_mod, "_MERGE_FAN_IN", 2)  # force 3 tree rounds
-    tree = infer_mod.infer_schema_of_column(df, "props", canonical=True, memo=False)
+    tree = infer_mod.infer_schema_of_column(df, "props", canonical=True)
     assert tree.htype == flat.htype
     assert (tree.records, tree.corrupt) == (flat.records, flat.corrupt)
