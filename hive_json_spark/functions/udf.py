@@ -78,8 +78,10 @@ def register_shred_udtf(spark: SparkSession, name: str = "shred_json") -> str:
     This is the UDTF tier of the function surface (scalar SQL functions
     and Arrow pandas_udfs are registered by `register_engine_udfs`): the
     per-row fan-out shape that scalar UDFs cannot express. The row walk
-    reuses `shred.shred_records`, so SQL, DataFrame (`shred_column`), and
-    CLI shredding share one set of semantics.
+    is `shred.shred_text`, the one `shred_column` uses, so a text of
+    several concatenated documents shreds every one of them. Skip
+    semantics: a null text gives no rows, and an undecodable document
+    ends the text's rows without raising.
     """
     from pyspark.sql.functions import udtf
 
@@ -88,14 +90,12 @@ def register_shred_udtf(spark: SparkSession, name: str = "shred_json") -> str:
         def eval(self, doc: str):  # noqa: ANN001 — UDTF protocol signature
             if doc is None:
                 return
-            from hive_json_spark.shred import shred_records
-            from hive_json_spark.types import loads_first
+            from hive_json_spark.shred import shred_text
 
             try:
-                parsed = loads_first(doc)
+                yield from shred_text(doc)
             except ValueError:
-                return  # undecodable doc: contribute no rows (skip semantics)
-            yield from shred_records(parsed)
+                return  # undecodable document: stop here (skip semantics)
 
     spark.udtf.register(name, ShredJson)
     return name

@@ -16,13 +16,14 @@ Scale design (100 TB):
   JsonSchemaFinder.java:234-236). Read with ``spark.read.text(...,
   wholetext=True)``: one row per *file*, decompressed by Hadoop's codec
   from the ``.gz`` suffix; throughput scales with file count.
-- Every entry point, in-table JSON columns included, ends in the same
-  ``mapInPandas`` fold over Arrow batches — one pickled partial per
-  partition, merged on the driver. The driver merges #partitions items
-  (KBs each), never data.
+- Every entry point, in-table JSON columns and per-group inference
+  included, ends in the same ``mapInPandas`` fold over Arrow batches — one
+  pickled partial per partition (per group and partition when grouped) —
+  and the same partial merge, on the driver, in executor tree rounds, or
+  per group. The driver merges #partitions items (KBs each), never data.
 - Result determinism: the reference is fold-order-sensitive for union
   branch order (UnionType.java:89-100); distributed folds are unordered, so
-  entry points canonicalize (sorted union branches) by default.
+  entry points always canonicalize (sorted union branches).
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ from __future__ import annotations
 import glob as _glob
 import gzip
 import io
-import json
 import os
 import pickle
 import re
@@ -39,7 +39,6 @@ from typing import Iterable, Iterator, List, Optional, Sequence, Tuple
 
 from hive_json_spark.types import (
     HType,
-    JsonNumber,
     canonicalize,
     decay_wide_structs,
     infer_type,
@@ -106,41 +105,86 @@ def infer_files_local(paths: Sequence[str] | str) -> InferResult:
 
 # --- distributed paths -------------------------------------------------------
 
+_EMPTY: Tuple[Optional[HType], int, int] = (None, 0, 0)
 
-def _fold_texts(
-    texts: Iterable[str], on_error: str = "raise"
+
+def _fold(
+    pairs: Iterable[Tuple[str, int]],
+    on_error: str,
+    max_struct_fields: Optional[int] = None,
+    acc: Tuple[Optional[HType], int, int] = _EMPTY,
 ) -> Tuple[Optional[HType], int, int]:
-    """Fold texts into (type, records, corrupt). ``on_error="skip"`` drops
-    an undecodable text (counting it) instead of failing the task — at
-    100 TB a handful of truncated documents must not kill a 10-hour job;
-    the corrupt count keeps the skip visible instead of silent."""
-    t: Optional[HType] = None
-    n = 0
-    corrupt = 0
-    dec = json.JSONDecoder(parse_int=JsonNumber, parse_float=JsonNumber)
-    for text in texts:
-        if text is None:
-            continue
-        s = text.strip()
-        if not s:
-            continue
-        if "\n" not in s and s[0] in "{[" and s[-1] in "}]":
-            # single-doc fast path (NDJSON line)
-            try:
-                t = merge_types(t, infer_type(dec.decode(s)))
-                n += 1
-                continue
-            except ValueError:
-                pass
+    """Fold ``(text, freq)`` pairs into ``acc = (type, records, corrupt)``.
+
+    Each text holds any number of concatenated documents; its records and
+    corrupt count scale by ``freq``. ``on_error="skip"`` stops a text at
+    its first undecodable document (the documents before it count) and
+    counts the text corrupt instead of failing the task — at 100 TB a
+    handful of truncated documents must not kill a 10-hour job; the
+    corrupt count keeps the skip visible instead of silent."""
+    t, n, bad = acc
+    for text, freq in pairs:
+        docs = 0
         try:
-            for doc in iter_json_documents(s):
+            for doc in iter_json_documents(text):
                 t = merge_types(t, infer_type(doc))
-                n += 1
+                docs += 1
         except ValueError:
             if on_error != "skip":
                 raise
-            corrupt += 1
-    return t, n, corrupt
+            bad += int(freq)
+        n += docs * int(freq)
+        if max_struct_fields is not None and t is not None:
+            t = decay_wide_structs(t, max_struct_fields)
+    return t, n, bad
+
+
+def _merge(blobs: Iterable[bytes]) -> Tuple[Optional[HType], int, int]:
+    """Merge pickled ``(type, records, corrupt)`` partials; no partials, or
+    only empty ones, merge to no type."""
+    t, n, bad = _EMPTY
+    for blob in blobs:
+        pt, pn, pbad = pickle.loads(blob)
+        t = merge_types(t, pt)
+        n += pn
+        bad += pbad
+    return t, n, bad
+
+
+def _partials(
+    df,
+    column: str,
+    on_error: str,
+    *,
+    group_col: Optional[str] = None,
+    max_struct_fields: Optional[int] = None,
+):
+    """One pickled partial per partition — per group seen in the partition
+    when ``group_col`` is given. Each batch folds its *distinct* values
+    once, scaled by frequency (JSON columns are often low-cardinality)."""
+    import pandas as pd
+
+    from hive_json_spark.operators.util import ensure_parallelism
+
+    keys = [group_col] if group_col else []
+    schema = "".join(f"{k} {dict(df.dtypes)[k]}, " for k in keys) + "partial binary"
+
+    def fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        accs: dict = {}
+        for pdf in batches:
+            groups = pdf.groupby(group_col, dropna=False) if group_col else [(None, pdf)]
+            for g, sub in groups:
+                accs[g] = _fold(
+                    sub[column].value_counts().items(),
+                    on_error,
+                    max_struct_fields,
+                    accs.get(g, _EMPTY),
+                )
+        out = {k: list(accs) for k in keys}
+        out["partial"] = [pickle.dumps(a) for a in accs.values()]
+        yield pd.DataFrame(out)
+
+    return ensure_parallelism(df.select(*keys, column)).mapInPandas(fold_partition, schema)
 
 
 def infer_schema(
@@ -148,7 +192,6 @@ def infer_schema(
     paths: Sequence[str] | str,
     *,
     ndjson: bool = True,
-    canonical: bool = True,
     on_error: str = "raise",
 ) -> InferResult:
     """Distributed inference over JSON corpus files (plain or ``.gz``).
@@ -158,11 +201,12 @@ def infer_schema(
                    corpora, read sequentially per file as the reference
                    does, parallel across files.
 
-    Either way the rows go through the same Arrow fold as a JSON column,
-    so ``on_error`` applies per row: under ``"skip"`` a bad document
-    keeps the documents before it in that line or file and counts one
-    corrupt text. A named or globbed file Spark would silently skip
-    (hidden ``_``/``.`` basename) raises ``ValueError`` instead.
+    Either way the rows are a JSON column folded by
+    ``infer_schema_of_column``, so ``on_error`` applies per row: under
+    ``"skip"`` a bad document keeps the documents before it in that line
+    or file and counts one corrupt text. A named or globbed file Spark
+    would silently skip (hidden ``_``/``.`` basename) raises
+    ``ValueError`` instead.
     """
     paths = _expand(paths)
     hidden = [
@@ -175,74 +219,37 @@ def infer_schema(
         # is still listed); a named input must not vanish
         raise ValueError(f"Spark skips files named with a leading '_' or '.': {hidden}")
     df = spark.read.text(paths, wholetext=not ndjson)
-    return _fold_column_partials(
-        df, "value", canonical=canonical, on_error=on_error, dedup=False
-    )
+    return infer_schema_of_column(df, "value", on_error=on_error)
 
 
 # max partials merged in one place (one executor task or the driver); above
-# this, _fold_column_partials inserts executor-side tree-merge rounds
+# this, infer_schema_of_column inserts executor-side tree-merge rounds
 _MERGE_FAN_IN = 64
 
 
-def _fold_column_partials(
+def infer_schema_of_column(
     df,
     column: str,
     *,
-    canonical: bool,
     on_error: str = "raise",
-    dedup: bool = True,
     max_struct_fields: Optional[int] = None,
 ) -> InferResult:
-    """Shared Arrow partial+final fold over a string column.
+    """Infer the schema of a JSON-string column (e.g. ``events.props``).
 
-    dedup=True folds each distinct value once scaled by frequency (JSON
-    *columns* are often low-cardinality); dedup=False streams rows directly
-    (an NDJSON corpus is nearly all-unique — value_counts would only add a
-    hash pass there).
+    Arrow-batched: ``mapInPandas`` folds each partition locally and emits ONE
+    pickled partial per partition; the driver merges #partitions partials.
+    Each partition folds only its *distinct* values (scaled by frequency).
+    Nothing is cached: every call folds the column as it is now. A column
+    with no documents infers no type (``htype=None``).
     """
     import pandas as pd
 
-    def fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        t: Optional[HType] = None
-        n = 0
-        bad = 0
-        for pdf in batches:
-            if dedup:
-                for text, freq in pdf[column].value_counts().items():
-                    pt, pn, pbad = _fold_texts([text], on_error)
-                    t = merge_types(t, pt)
-                    if max_struct_fields is not None and t is not None:
-                        t = decay_wide_structs(t, max_struct_fields)
-                    n += pn * int(freq)
-                    bad += pbad * int(freq)
-            else:
-                pt, pn, pbad = _fold_texts(pdf[column].tolist(), on_error)
-                t = merge_types(t, pt)
-                if max_struct_fields is not None and t is not None:
-                    t = decay_wide_structs(t, max_struct_fields)
-                n += pn
-                bad += pbad
-        yield pd.DataFrame({"partial": [pickle.dumps((t, n, bad))]})
+    def merge_round(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        merged = _merge(blob for pdf in batches for blob in pdf["partial"])
+        yield pd.DataFrame({"partial": [pickle.dumps(merged)]})
 
-    from hive_json_spark.operators.util import ensure_parallelism
-
-    def merge_partials(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        t: Optional[HType] = None
-        n = 0
-        bad = 0
-        for pdf in batches:
-            for blob in pdf["partial"]:
-                pt, pn, pbad = pickle.loads(bytes(blob))
-                t = merge_types(t, pt)
-                n += pn
-                bad += pbad
-        yield pd.DataFrame({"partial": [pickle.dumps((t, n, bad))]})
-
-    partials_df = ensure_parallelism(df.select(column)).mapInPandas(
-        fold_partition, schema="partial binary"
-    )
-    # Tree final-merge: the driver loop below is fine for the usual few
+    partials_df = _partials(df, column, on_error, max_struct_fields=max_struct_fields)
+    # Tree final-merge: the driver merge below is fine for the usual few
     # hundred partials (KB each), but at 10⁴-10⁵ input partitions (100 TB)
     # a flat driver merge is a long single-threaded tail and a large
     # collect. Above _MERGE_FAN_IN partitions, insert executor-side merge
@@ -254,47 +261,14 @@ def _fold_column_partials(
     while n_parts > _MERGE_FAN_IN:
         n_parts = -(-n_parts // _MERGE_FAN_IN)  # ceil division
         partials_df = partials_df.repartition(n_parts).mapInPandas(
-            merge_partials, schema="partial binary"
+            merge_round, schema="partial binary"
         )
-    partials = partials_df.collect()
-    htype: Optional[HType] = None
-    records = 0
-    corrupt = 0
-    for row in partials:
-        t, n, bad = pickle.loads(row["partial"])
-        htype = merge_types(htype, t)
-        records += n
-        corrupt += bad
-    if max_struct_fields is not None and htype is not None:
-        htype = decay_wide_structs(htype, max_struct_fields)
-    if canonical and htype is not None:
+    htype, records, corrupt = _merge(row["partial"] for row in partials_df.collect())
+    if htype is not None:
+        if max_struct_fields is not None:
+            htype = decay_wide_structs(htype, max_struct_fields)
         htype = canonicalize(htype)
     return InferResult(htype, records, corrupt)
-
-
-def infer_schema_of_column(
-    df,
-    column: str,
-    *,
-    canonical: bool = True,
-    on_error: str = "raise",
-    max_struct_fields: Optional[int] = None,
-) -> InferResult:
-    """Infer the schema of a JSON-string column (e.g. ``events.props``).
-
-    Arrow-batched: ``mapInPandas`` folds each partition locally and emits ONE
-    pickled partial per partition; the driver merges #partitions partials.
-    Each partition folds only its *distinct* values (scaled by frequency).
-    Nothing is cached: every call folds the column as it is now.
-    """
-    return _fold_column_partials(
-        df,
-        column,
-        canonical=canonical,
-        on_error=on_error,
-        dedup=True,
-        max_struct_fields=max_struct_fields,
-    )
 
 
 # --- loading under the inferred schema (incl. union data) --------------------
@@ -438,10 +412,8 @@ def infer_schema_by_group(
     group_col: str,
     column: str,
     *,
-    canonical: bool = True,
     on_error: str = "raise",
     render: str = "compact",
-    distinct_docs: bool = False,
 ):
     """Per-group schema inference: the lattice fold as a *grouped aggregate*.
 
@@ -451,11 +423,11 @@ def infer_schema_by_group(
     (`JsonSchemaFinder.java:227-247`); grouping is what a multi-tenant /
     multi-event-type feed needs to detect per-stream drift.
 
-    Two-level plan, same shape as the global fold's partial+final:
+    Two-level plan, same shape and same fold as `infer_schema_of_column`:
 
     1. ``mapInPandas`` folds each partition's rows into one partial type
        accumulator *per group seen in that partition* (distinct values
-       scaled by frequency, like `infer_schema_of_column`);
+       scaled by frequency);
     2. one shuffle of those pickled partials on the group key, then
        ``applyInPandas`` merges partials per group.
 
@@ -467,93 +439,25 @@ def infer_schema_by_group(
 
     ``render``: ``"compact"`` emits ``str(htype)`` in ``hive_type``;
     ``"ddl"`` emits the full ``to_hive_ddl`` create-table string per group
-    (printTopType parity at depth — `JsonSchemaFinder.java:203-221`), with
-    the ``"void\\n"`` sentinel for a group whose every document was skipped;
+    (printTopType parity at depth — `JsonSchemaFinder.java:203-221`);
     ``"flat"`` emits the ``to_flat`` dotted-path lines (printFlat parity —
     one ``root.path: leaf`` line per leaf), the machine-diffable form the
-    schema-drift monitor consumes.
-
-    ``distinct_docs``: pre-aggregate ``(group, doc) -> count`` JVM-side
-    before the Python fold, so each distinct document is parsed ONCE
-    globally and folded with its multiplicity (the fold already scales
-    records by frequency). Opt-in, and the bar for opting in is HIGHER
-    than it looks: the per-partition ``value_counts`` dedup inside the
-    fold already collapses repetition map-side (each partition parses
-    each of ITS distinct docs once), so the JVM pre-distinct only wins
-    when per-partition distinct sets are still large AND parsing
-    dominates — and it always costs a full-corpus ``(group, doc)``
-    shuffle. On the drift monitor's template corpus the r9 re-measure
-    reversed the r8 call: dist 3.2 s / nodist 2.0 s at sf0.1, 14.5 s /
-    10.9 s at sf1 (the r8 3.5 -> 0.9 s figure did not reproduce under
-    matched conditions).
+    schema-drift monitor consumes. A group with no documents (every one
+    skipped under ``on_error="skip"``) renders ``"void"`` in compact form
+    and the ``"void\\n"`` sentinel in the other two.
     """
     import pandas as pd
 
-    if render not in ("compact", "ddl", "flat"):
+    renderers = {"compact": str, "ddl": to_hive_ddl, "flat": to_flat}
+    if render not in renderers:
         raise ValueError(f"render must be 'compact', 'ddl' or 'flat', got {render!r}")
 
-    gtype = dict(df.dtypes)[group_col]
-
-    def fold_partials(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        accs: dict = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby(group_col, dropna=False):
-                t, n, bad = accs.get(g, (None, 0, 0))
-                # closes over distinct_docs directly — column-name sniffing
-                # ("_freq" in sub.columns) would misfire if the user's doc
-                # or group column were literally named _freq
-                pairs = (
-                    zip(sub[column], sub["_freq"])
-                    if distinct_docs
-                    else sub[column].value_counts().items()
-                )
-                for text, freq in pairs:
-                    pt, pn, pbad = _fold_texts([text], on_error)
-                    t = merge_types(t, pt)
-                    n += pn * int(freq)
-                    bad += pbad * int(freq)
-                accs[g] = (t, n, bad)
-        yield pd.DataFrame(
-            {
-                group_col: list(accs.keys()),
-                "partial": [pickle.dumps(v) for v in accs.values()],
-            }
-        )
-
-    from hive_json_spark.operators.util import ensure_parallelism
-
-    base = df.select(group_col, column)
-    if distinct_docs:
-        from pyspark.sql import functions as F
-
-        if "_freq" in (group_col, column):
-            raise ValueError(
-                "distinct_docs=True reserves the internal column name "
-                "'_freq'; rename the input column"
-            )
-        base = base.groupBy(group_col, column).agg(F.count("*").alias("_freq"))
-    partials = ensure_parallelism(base).mapInPandas(
-        fold_partials,
-        schema=f"{group_col} {gtype}, partial binary",
-    )
-
     def merge_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        t = None
-        n = 0
-        bad = 0
-        for blob in pdf["partial"]:
-            pt, pn, pbad = pickle.loads(blob)
-            t = merge_types(t, pt)
-            n += pn
-            bad += pbad
-        if canonical and t is not None:
-            t = canonicalize(t)
-        if render == "ddl":
-            rendered = to_hive_ddl(t) if t is not None else "void\n"
-        elif render == "flat":
-            rendered = to_flat(t) if t is not None else "void\n"
+        t, n, bad = _merge(pdf["partial"])
+        if t is None:
+            rendered = "void" if render == "compact" else "void\n"
         else:
-            rendered = str(t) if t is not None else "void"
+            rendered = renderers[render](canonicalize(t))
         return pd.DataFrame(
             {
                 group_col: [pdf[group_col].iloc[0]],
@@ -563,7 +467,12 @@ def infer_schema_by_group(
             }
         )
 
-    return partials.groupBy(group_col).applyInPandas(
-        merge_group,
-        schema=f"{group_col} {gtype}, hive_type string, records bigint, corrupt bigint",
+    gtype = dict(df.dtypes)[group_col]
+    return (
+        _partials(df, column, on_error, group_col=group_col)
+        .groupBy(group_col)
+        .applyInPandas(
+            merge_group,
+            schema=f"{group_col} {gtype}, hive_type string, records bigint, corrupt bigint",
+        )
     )

@@ -6,10 +6,6 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
-# path -> parquet row-group count; metadata-only reads, cached because the
-# same corpus file backs many operators in one session
-_ROW_GROUP_CACHE: dict[str, int] = {}
-
 
 def _scan_row_groups(df: DataFrame) -> int | None:
     """Total parquet row groups behind this frame's file scans, or None
@@ -17,7 +13,8 @@ def _scan_row_groups(df: DataFrame) -> int | None:
     file scan). Spark cannot split a parquet row group, so this is the
     scan's TRUE maximum parallelism — `getNumPartitions()` counts
     PLANNED byte-range splits, and every split beyond the row-group
-    count is an empty partition."""
+    count is an empty partition. Footers are read on every call: a file
+    rewritten in place must not keep its old count."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -28,17 +25,12 @@ def _scan_row_groups(df: DataFrame) -> int | None:
     for uri in files:
         if not uri.endswith(".parquet"):
             return None
-        path = urlparse(uri).path
-        rg = _ROW_GROUP_CACHE.get(path)
-        if rg is None:
-            try:
-                import pyarrow.parquet as pq
+        try:
+            import pyarrow.parquet as pq
 
-                rg = pq.ParquetFile(path).num_row_groups
-            except Exception:
-                return None
-            _ROW_GROUP_CACHE[path] = rg
-        total += rg
+            total += pq.ParquetFile(urlparse(uri).path).num_row_groups
+        except Exception:
+            return None
     return total
 
 
@@ -56,8 +48,8 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
        empty. `getNumPartitions()` looks parallel; the stage runs on one
        core (r7: the zipf-sf10 minhash signature kernel ran 39 s
        single-core behind 24 planned splits; 6 s after this check). The
-       row-group probe is a driver-side parquet-footer read, cached per
-       file, and backs off to trusting Spark whenever the inputs aren't
+       row-group probe is a driver-side parquet-footer read per file,
+       and backs off to trusting Spark whenever the inputs aren't
        local parquet scans.
 
     At real scale inputs are written with many row groups and this is a
@@ -91,7 +83,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     floor = max(target // 2, 2)
     if df.rdd.getNumPartitions() < floor:
         return df.repartition(target)
-    # Footer probe first — it is cached per file and cheap, and in the
+    # Footer probe first — it is cheap (no Spark job), and in the
     # common case (well-written many-row-group inputs) it exits without
     # touching the physical plan.
     rg = _scan_row_groups(df)

@@ -50,7 +50,7 @@ def q_infer_props_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literal projection over range(1) stays a JVM LocalTableScan;
     # createDataFrame([...]) would detour through the Python-RDD pickle path
     return spark.range(1).select(
-        F.lit(str(result.htype)).alias("hive_type"),
+        F.lit(str(result.htype or "void")).alias("hive_type"),
         F.lit(result.records).cast("bigint").alias("records"),
     )
 
@@ -362,7 +362,7 @@ def q_infer_props_schema_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
             paths.append(p)
         result = infer_schema(spark, paths, ndjson=False)
         return spark.range(1).select(
-            F.lit(str(result.htype)).alias("hive_type"),
+            F.lit(str(result.htype or "void")).alias("hive_type"),
             F.lit(result.records).cast("bigint").alias("records"),
         )
     finally:
@@ -498,17 +498,7 @@ def q_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("\x01", "event_type", F.col("day").cast("string")).alias("grp"),
         doc.alias("doc"),
     )
-    # distinct_docs=False (r9 re-measure, reversing the r8 choice): the
-    # derived corpus is template-shaped (600 distinct docs across 100k
-    # events at sf0.1), but the per-partition value_counts dedup inside
-    # the fold already collapses that repetition MAP-SIDE — each partition
-    # parses each distinct doc once — so the opt-in JVM pre-distinct only
-    # adds a full-corpus (grp, doc) shuffle on top: measured dist 3.2 s /
-    # nodist 2.0 s at sf0.1 and 14.5 s / 10.9 s at sf1. The no-shuffle
-    # path also matches the 100 TB shape (partials are schema-sized).
-    flat = infer_schema_by_group(
-        corpus, "grp", "doc", render="flat", distinct_docs=False
-    )
+    flat = infer_schema_by_group(corpus, "grp", "doc", render="flat")
     # single consumer since the r9 one-pass diff below — no persist needed
     # (the r8 version cached this for its three consumers)
     cells = (

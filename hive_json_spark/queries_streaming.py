@@ -159,25 +159,16 @@ def _staged(name: str, sf_dir: str, build, n_files: int = 2, by=None, range_by=N
     return src
 
 
-_STAGED_SCHEMAS: dict[str, object] = {}
-
-
 def _staged_schema(spark: SparkSession, src: str):
     """Schema of a staged dir: driver-side footer read (zero Spark jobs;
     r11 — each ``spark.read.parquet().schema`` probe was a 1-task
-    inference JOB billed to the entry), cached for the process lifetime
-    because staged dirs are immutable. Falls back to Spark inference for
+    inference JOB billed to the entry). Falls back to Spark inference for
     any layout/type the footer mapping doesn't cover — same contract as
     ``sources.tables.parquet_schema``, which pins mapping equality."""
-    schema = _STAGED_SCHEMAS.get(src)
-    if schema is None:
-        from hive_json_spark.sources.tables import parquet_schema
+    from hive_json_spark.sources.tables import parquet_schema
 
-        schema = parquet_schema(src)
-        if schema is None:
-            schema = spark.read.parquet(src).schema
-        _STAGED_SCHEMAS[src] = schema
-    return schema
+    schema = parquet_schema(src)
+    return schema if schema is not None else spark.read.parquet(src).schema
 
 
 def _stream_over(spark: SparkSession, src: str) -> DataFrame:

@@ -23,7 +23,7 @@ from typing import Iterator, List, Optional, Sequence, Tuple
 from hive_json_spark.infer import _expand, _open_text
 from hive_json_spark.types import iter_json_documents
 
-__all__ = ["shred_records", "shred_files_local", "shred_column", "shred_to_dir"]
+__all__ = ["shred_records", "shred_text", "shred_files_local", "shred_column", "shred_to_dir"]
 
 
 def shred_records(doc, root: str = "root") -> Iterator[Tuple[str, str]]:
@@ -44,6 +44,14 @@ def shred_records(doc, root: str = "root") -> Iterator[Tuple[str, str]]:
                 stack.append((f"{name}.list", child))
         else:
             yield name, str(node)  # JsonNumber is a str with the lexical form
+
+
+def shred_text(text: str, root: str = "root") -> Iterator[Tuple[str, str]]:
+    """Yield (path, lexical value) for every leaf of every document in one
+    text (concatenated or NDJSON); raises ``ValueError`` at the first
+    undecodable document, after the rows of the documents before it."""
+    for doc in iter_json_documents(text):
+        yield from shred_records(doc, root)
 
 
 def shred_files_local(paths: Sequence[str] | str, out_dir: str = ".") -> int:
@@ -77,8 +85,6 @@ def shred_column(df, column: str, root: str = "root"):
     """
     import pandas as pd
 
-    from hive_json_spark.types import iter_json_documents as _docs
-
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             paths: List[str] = []
@@ -86,10 +92,9 @@ def shred_column(df, column: str, root: str = "root"):
             for text in pdf[column]:
                 if text is None:
                     continue
-                for doc in _docs(text):
-                    for leaf, value in shred_records(doc, root):
-                        paths.append(leaf)
-                        values.append(value)
+                for leaf, value in shred_text(text, root):
+                    paths.append(leaf)
+                    values.append(value)
             yield pd.DataFrame({"path": paths, "value": values})
 
     from hive_json_spark.operators.util import ensure_parallelism

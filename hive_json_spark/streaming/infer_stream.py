@@ -38,13 +38,14 @@ def infer_schema_streaming(
     """Streaming schema inference over a growing NDJSON directory.
 
     Each micro-batch runs the distributed partial+final fold; the driver
-    merges batch results into the accumulator. ``availableNow`` drains
+    merges the canonical batch results into the accumulator and
+    canonicalizes the merged type once at the end. ``availableNow`` drains
     what exists and stops — swap the trigger for continuous operation.
     """
     acc: dict = {"htype": None, "records": 0}
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        r = infer_schema_of_column(batch_df, "value", canonical=False)
+        r = infer_schema_of_column(batch_df, "value")
         acc["htype"] = merge_types(acc["htype"], r.htype)
         acc["records"] += r.records
 

@@ -521,15 +521,16 @@ def infer_type(value: JsonValue, detect_dates: bool = False) -> HType:
     raise TypeError(f"not a JSON value: {type(value)!r}")
 
 
-def merge_types(previous: Optional[HType], incoming: Optional[HType]) -> HType:
+def merge_types(previous: Optional[HType], incoming: Optional[HType]) -> Optional[HType]:
     """Least-upper-bound-ish join (mergeType parity, JsonSchemaFinder.java:136-151).
 
     Tries ``previous.subsumes(incoming)`` first — the asymmetry the
     reference's union-branch ordering depends on — then the reverse, else
-    wraps both in a union. Pure: returns a new tree.
+    wraps both in a union. ``None`` (no documents) is the identity, so
+    merging two empty folds stays ``None``. Pure: returns a new tree.
     """
     if previous is None:
-        return incoming if incoming is not None else NullT()
+        return incoming
     if incoming is None:
         return previous
     if previous == incoming:

@@ -3,6 +3,7 @@ packaging variants (FIXTURES.md A9), and the events.props column fold."""
 
 import gzip
 import json
+import sys
 
 import pytest
 
@@ -114,12 +115,42 @@ def test_whole_file_malformed_input_pinned(spark, tmp_path):
     with pytest.raises(failures):
         infer_schema(spark, str(mid), ndjson=False)
 
-    # an empty file folds to the lattice bottom with no records (the local
-    # path, infer_files_local, returns no type at all here)
+    # an empty file folds to no type and no records, as infer_files_local
     empty = tmp_path / "empty.json"
     empty.write_text("")
     r = infer_schema(spark, str(empty), ndjson=False)
-    assert (str(r.htype), r.records) == ("void", 0)
+    assert (r.htype, r.records) == (None, 0)
+    assert infer_files_local(str(empty)).htype is None
+
+    # 1000-deep nesting exceeds the default recursion limit (1000) on both
+    # paths; Spark's Python workers run at that default, and the local
+    # call pins it because a library used by other tests may leave the
+    # limit raised in this process
+    deep = tmp_path / "deep.json"
+    deep.write_text("[" * 1000 + "]" * 1000)
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        with pytest.raises(RecursionError):
+            infer_files_local(str(deep))
+    finally:
+        sys.setrecursionlimit(limit)
+    for on_error in ("raise", "skip"):
+        with pytest.raises(failures):
+            infer_schema(spark, str(deep), ndjson=False, on_error=on_error)
+
+    # numbers past 38 digits or the double range widen to double; a
+    # duplicate key keeps one field whose type joins both values
+    for name, text, want in (
+        ("huge.json", '{"n": %s, "f": 1.5e400}' % ("9" * 40), "struct<f:double,n:double>"),
+        ("dup.json", '{"a":1,"b":"x","a":"s"}', "struct<a:string,b:string>"),
+    ):
+        path = tmp_path / name
+        path.write_text(text)
+        r = infer_schema(spark, str(path), ndjson=False)
+        local = infer_files_local(str(path))
+        assert (str(r.htype), r.records) == (want, 1), name
+        assert (str(canonicalize(local.htype)), local.records) == (want, 1), name
 
     with pytest.raises(failures):
         infer_schema(spark, str(tmp_path / "missing.json"), ndjson=False)
@@ -153,7 +184,7 @@ def test_infer_column_events_props(spark, sf_dir):
     assert ddl.startswith("create table tbl (\n  k ")
 
 
-def test_cli_find_json_schema(corpus, capsys):
+def test_cli_find_json_schema(corpus, capsys, spark, tmp_path, monkeypatch):
     from hive_json_spark.cli import find_json_schema
 
     rc = find_json_schema(["-f", str(corpus / "a.json")])
@@ -166,6 +197,15 @@ def test_cli_find_json_schema(corpus, capsys):
     out = capsys.readouterr()
     assert rc == 0
     assert out.out.startswith("create table tbl (")
+
+    # an empty corpus has no schema to print: exit 1 on both paths
+    empty = tmp_path / "empty.json"
+    empty.write_text("")
+    monkeypatch.setattr("hive_json_spark.session.get_spark", lambda: spark)
+    for argv in ([str(empty)], ["--spark", str(empty)]):
+        assert find_json_schema(argv) == 1, argv
+        out = capsys.readouterr()
+        assert out.out == "" and "0 records read" in out.err
 
 
 def test_load_json_column_union_tagged(spark):
@@ -339,7 +379,7 @@ def test_infer_schema_by_group_tolerates_corrupt(spark):
     from hive_json_spark.infer import infer_schema_by_group
 
     df = spark.createDataFrame(
-        [("a", '{"x": 1}'), ("a", "{nope"), ("b", '{"x": "y"}')],
+        [("a", '{"x": 1}'), ("a", "{nope"), ("b", '{"x": "y"}'), ("c", "{nope")],
         "grp string, payload string",
     )
     rows = {
@@ -350,6 +390,11 @@ def test_infer_schema_by_group_tolerates_corrupt(spark):
     }
     assert rows["a"] == ("struct<x:tinyint>", 1, 1)
     assert rows["b"] == ("struct<x:string>", 1, 0)
+    # a group whose every document was skipped renders the void sentinel
+    for render, void in (("compact", "void"), ("ddl", "void\n"), ("flat", "void\n")):
+        out = infer_schema_by_group(df, "grp", "payload", on_error="skip", render=render)
+        got = {r.grp: (r.hive_type, r.records, r.corrupt) for r in out.collect()}
+        assert got["c"] == (void, 0, 1), render
 
 
 def test_infer_schema_by_group_flat_render(spark):
@@ -439,8 +484,8 @@ def test_column_fold_tree_merge_matches_flat(spark, sf_dir, monkeypatch):
     import hive_json_spark.infer as infer_mod
 
     df = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(16)
-    flat = infer_mod.infer_schema_of_column(df, "props", canonical=True)
+    flat = infer_mod.infer_schema_of_column(df, "props")
     monkeypatch.setattr(infer_mod, "_MERGE_FAN_IN", 2)  # force 3 tree rounds
-    tree = infer_mod.infer_schema_of_column(df, "props", canonical=True)
+    tree = infer_mod.infer_schema_of_column(df, "props")
     assert tree.htype == flat.htype
     assert (tree.records, tree.corrupt) == (flat.records, flat.corrupt)

@@ -583,6 +583,17 @@ def test_single_row_group_scan_is_repartitioned(spark, tmp_path):
         )
         scan2 = spark.read.parquet(path2)
         assert ensure_parallelism(scan2) is scan2
+        # rewritten in place as ONE row group, the same path is the trap
+        # again: the probe must read the footer as it is now
+        pq.write_table(
+            pa.Table.from_pandas(
+                pd.DataFrame({"id": range(n), "text": ["word " * 40] * n})
+            ),
+            path2,
+            row_group_size=n,
+        )
+        rewritten = ensure_parallelism(spark.read.parquet(path2))
+        assert "RoundRobinPartitioning" in rewritten._jdf.queryExecution().executedPlan().toString()
     finally:
         if saved is None:
             spark.conf.unset("spark.sql.files.maxPartitionBytes")

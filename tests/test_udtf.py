@@ -30,7 +30,13 @@ def test_shred_udtf_skips_null_and_invalid(spark):
 
     register_shred_udtf(spark)
     df = spark.createDataFrame(
-        [(1, '{"a": 1, "b": [true, null]}'), (2, None), (3, "not json")],
+        [
+            (1, '{"a": 1, "b": [true, null]}'),
+            (2, None),
+            (3, "not json"),
+            (4, '{"c": 1}{"c": 2}'),
+            (5, '{"d": 1}{bad'),
+        ],
         "id bigint, doc string",
     )
     df.createOrReplaceTempView("_shred_edge")
@@ -41,5 +47,12 @@ def test_shred_udtf_skips_null_and_invalid(spark):
         ).collect()
     }
     # null leaf inside the array is skipped (JsonShredder.java:68-69);
-    # null/invalid documents contribute no rows
-    assert rows == {("root.a", "1"), ("root.b.list", "true")}
+    # null/invalid documents contribute no rows; every document of a
+    # concatenated text is shredded, up to the first undecodable one
+    assert rows == {
+        ("root.a", "1"),
+        ("root.b.list", "true"),
+        ("root.c", "1"),
+        ("root.c", "2"),
+        ("root.d", "1"),
+    }
