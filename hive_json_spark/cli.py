@@ -49,15 +49,46 @@ def find_json_schema(argv: list[str]) -> int:
     return 0
 
 
-def shred_json(argv: list[str]) -> int:
-    out_dir = "."
-    files: list[str] = []
+def _options(argv: list[str], valued: dict) -> tuple[dict, list[str]] | None:
+    """Split ``argv`` into ``{flag: converted value}`` for the flags in
+    ``valued`` (flag -> converter) and the remaining arguments. None when a
+    flag is the last argument or its value does not convert."""
+    opts: dict = {}
+    rest: list[str] = []
     it = iter(argv)
     for arg in it:
-        if arg == "-o":
-            out_dir = next(it)
-        else:
-            files.append(arg)
+        if arg not in valued:
+            rest.append(arg)
+            continue
+        value = next(it, None)
+        if value is None:
+            return None
+        try:
+            opts[arg] = valued[arg](value)
+        except ValueError:
+            return None
+    return opts, rest
+
+
+def _usage(line: str) -> int:
+    print(f"usage: {line}", file=sys.stderr)
+    return 2
+
+
+def _print_csv(df, limit: int) -> None:
+    df = df.limit(limit)
+    rows = df.collect()
+    print(",".join(df.columns))
+    for r in rows:
+        print(",".join("" if v is None else str(v) for v in r))
+
+
+def shred_json(argv: list[str]) -> int:
+    parsed = _options(argv, {"-o": str})
+    if parsed is None:
+        return _usage("shred-json [-o DIR] FILE...")
+    opts, files = parsed
+    out_dir = opts.get("-o", ".")
     for f in files:
         print(f"Reading {f}")
     count = shred_files_local(files, out_dir)
@@ -74,21 +105,16 @@ def run_query(argv: list[str]) -> int:
     writing Python."""
     sf_dir = "/root/testdata/sf0.001"
     limit = 50
-    names: list[str] = []
-    list_only = False
-    it = iter(argv)
-    for arg in it:
-        if arg == "--sf-dir":
-            sf_dir = next(it)
-        elif arg == "--limit":
-            limit = int(next(it))
-        elif arg == "--list":
-            list_only = True
-        else:
-            names.append(arg)
+    parsed = _options(argv, {"--sf-dir": str, "--limit": int})
+    if parsed is None:
+        return _usage("run-query [--sf-dir DIR] [--limit N] [--list] NAME...")
+    opts, args = parsed
+    sf_dir = opts.get("--sf-dir", sf_dir)
+    limit = opts.get("--limit", limit)
+    names = [a for a in args if a != "--list"]
     from hive_json_spark.registry import QUERIES
 
-    if list_only:
+    if "--list" in args:
         for name in sorted(QUERIES):
             print(name)
         return 0
@@ -104,11 +130,7 @@ def run_query(argv: list[str]) -> int:
 
     spark = get_spark()
     for name in names:
-        df = QUERIES[name](spark, sf_dir).limit(limit)
-        rows = df.collect()
-        print(",".join(df.columns))
-        for r in rows:
-            print(",".join("" if v is None else str(v) for v in r))
+        _print_csv(QUERIES[name](spark, sf_dir), limit)
     return 0
 
 
@@ -120,18 +142,12 @@ def sql(argv: list[str]) -> int:
     statement — the raw-SQL face of the engine, CSV to stdout."""
     sf_dir = "/root/testdata/sf0.001"
     limit = 50
-    stmts: list[str] = []
-    it = iter(argv)
-    for arg in it:
-        if arg == "--sf-dir":
-            sf_dir = next(it)
-        elif arg == "--limit":
-            limit = int(next(it))
-        else:
-            stmts.append(arg)
-    if not stmts:
-        print("usage: sql [--sf-dir DIR] [--limit N] QUERY", file=sys.stderr)
-        return 2
+    parsed = _options(argv, {"--sf-dir": str, "--limit": int})
+    if parsed is None or not parsed[1]:
+        return _usage("sql [--sf-dir DIR] [--limit N] QUERY")
+    opts, stmts = parsed
+    sf_dir = opts.get("--sf-dir", sf_dir)
+    limit = opts.get("--limit", limit)
     from hive_json_spark.functions.udf import register_engine_udfs, register_shred_udtf
     from hive_json_spark.session import get_spark
     from hive_json_spark.sources import TABLES, load_table
@@ -142,21 +158,13 @@ def sql(argv: list[str]) -> int:
     register_engine_udfs(spark)
     register_shred_udtf(spark)
     for stmt in stmts:
-        df = spark.sql(stmt).limit(limit)
-        rows = df.collect()
-        print(",".join(df.columns))
-        for r in rows:
-            print(",".join("" if v is None else str(v) for v in r))
+        _print_csv(spark.sql(stmt), limit)
     return 0
 
 
 def main() -> int:
     if len(sys.argv) < 2:
-        print(
-            "usage: hive_json_spark.cli {find-json-schema|shred-json|run-query|sql} ...",
-            file=sys.stderr,
-        )
-        return 2
+        return _usage("hive_json_spark.cli {find-json-schema|shred-json|run-query|sql} ...")
     cmd, rest = sys.argv[1], sys.argv[2:]
     if cmd == "find-json-schema":
         return find_json_schema(rest)

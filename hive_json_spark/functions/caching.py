@@ -27,10 +27,10 @@ from pyspark.storagelevel import StorageLevel
 _SCOPED: list[DataFrame] = []
 
 
-def scoped_persist(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` (evictable, disk-spilling) and register it for
     release at the start of the next graded query."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _SCOPED.append(out)
     return out
 

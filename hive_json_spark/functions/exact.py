@@ -45,32 +45,21 @@ def int_units(col: Column | str, scale: int = 100) -> Column:
     return F.round(c * scale).cast("long")
 
 
-def sum_exact(col: Column | str, ndigits: int = 2, scale: int = 100) -> Column:
-    """Order-free replacement for ``ROUND(SUM(x), ndigits)`` on money-like
+def sum_exact(col: Column | str) -> Column:
+    """Order-free replacement for ``ROUND(SUM(x), 2)`` on money-like
     doubles. SQL twin:
-    ``ROUND(SUM(CAST(ROUND(x * <scale>) AS BIGINT)) / <scale>.0, <ndigits>)``."""
-    return F.round(F.sum(int_units(col, scale)) / float(scale), ndigits)
+    ``ROUND(SUM(CAST(ROUND(x * 100) AS BIGINT)) / 100.0, 2)``."""
+    return F.round(F.sum(int_units(col)) / 100.0, 2)
 
 
-def avg_exact(col: Column | str, ndigits: int = 6, scale: int = 100) -> Column:
+def avg_exact(col: Column | str, ndigits: int = 6) -> Column:
     """Order-free replacement for ``ROUND(AVG(x), ndigits)``. SQL twin:
-    ``ROUND(SUM(CAST(ROUND(x * <scale>) AS BIGINT)) / <scale>.0 / COUNT(x),
+    ``ROUND(SUM(CAST(ROUND(x * 100) AS BIGINT)) / 100.0 / COUNT(x),
     <ndigits>)``. COUNT of the same column so null handling matches AVG."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(int_units(c, scale)) / float(scale) / F.count(c), ndigits)
+    return F.round(F.sum(int_units(c)) / 100.0 / F.count(c), ndigits)
 
 
-def sql_sum_exact(expr: str, alias: str, ndigits: int = 2, scale: int = 100) -> str:
+def sql_sum_exact(expr: str, alias: str) -> str:
     """DuckDB oracle fragment matching :func:`sum_exact`."""
-    return (
-        f"ROUND(SUM(CAST(ROUND(({expr}) * {scale}) AS BIGINT)) / {scale}.0, "
-        f"{ndigits}) AS {alias}"
-    )
-
-
-def sql_avg_exact(expr: str, alias: str, ndigits: int = 6, scale: int = 100) -> str:
-    """DuckDB oracle fragment matching :func:`avg_exact`."""
-    return (
-        f"ROUND(SUM(CAST(ROUND(({expr}) * {scale}) AS BIGINT)) / {scale}.0 / "
-        f"COUNT({expr}), {ndigits}) AS {alias}"
-    )
+    return f"ROUND(SUM(CAST(ROUND(({expr}) * 100) AS BIGINT)) / 100.0, 2) AS {alias}"

@@ -54,10 +54,11 @@ def distinct_token_count(col: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(col))).cast("bigint")
 
 
-def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = ("the", "a", "of", "and")) -> Column:
-    """Fraction of tokens that are stopwords — a quality-scoring signal."""
+def stopword_ratio(col: Column | str) -> Column:
+    """Fraction of tokens that are stopwords ("the", "a", "of", "and") — a
+    quality-scoring signal."""
     toks = tokens(col)
-    stops = F.array(*[F.lit(s) for s in stopwords])
+    stops = F.array(*[F.lit(s) for s in ("the", "a", "of", "and")])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     return (n_stop / F.greatest(F.size(toks), F.lit(1))).cast("double")
 

@@ -286,7 +286,7 @@ def _contains_union(t: HType) -> bool:
     return False
 
 
-def load_json_column(df, column: str, htype: Optional[HType] = None, *, union_mode: str = "tagged"):
+def load_json_column(df, column: str, htype: Optional[HType] = None):
     """JSON-string column → typed ``parsed`` column under the inferred schema.
 
     Union-free schemas load with ``from_json`` — pure JVM, codegen, zero
@@ -294,9 +294,7 @@ def load_json_column(df, column: str, htype: Optional[HType] = None, *, union_mo
     are materialized by an Arrow kernel that routes each value to its union
     branch — the *first* branch that subsumes it, mirroring
     UnionType.java:89-100 — and emits the ORC-style tagged struct
-    ``struct<tag:tinyint, field0:..., field1:...>``. ``union_mode="string"``
-    instead decays union values to their JSON text (lossy, but keeps the
-    whole load JVM-side via from_json where the rest of the tree allows).
+    ``struct<tag:tinyint, field0:..., field1:...>``.
     """
     from pyspark.sql import functions as F, types as T
 
@@ -305,9 +303,9 @@ def load_json_column(df, column: str, htype: Optional[HType] = None, *, union_mo
 
     if htype is None:
         htype = infer_schema_of_column(df, column).htype
-    spark_schema = to_spark_type(htype, union_mode=union_mode)
+    spark_schema = to_spark_type(htype)
 
-    if union_mode == "string" or not _contains_union(htype):
+    if not _contains_union(htype):
         return df.withColumn("parsed", F.from_json(F.col(column), spark_schema))
 
     import datetime as _dt
@@ -386,7 +384,7 @@ def load_json_column(df, column: str, htype: Optional[HType] = None, *, union_mo
     return df.mapInPandas(kernel, out_schema)
 
 
-def infer_schema_native(spark, paths: Sequence[str] | str, *, prefer_decimal: bool = False):
+def infer_schema_native(spark, paths: Sequence[str] | str):
     """Spark's built-in JSON inference as the *fast path* (SURVEY §7.2).
 
     Runs ``spark.read.json`` schema inference — JVM-side, no Python in the
@@ -397,14 +395,13 @@ def infer_schema_native(spark, paths: Sequence[str] | str, *, prefer_decimal: bo
     - no BINARY hex-detection and no TIMESTAMP regex subtyping of plain
       strings (Spark types timestamps only via its own patterns);
     - heterogeneous fields decay to StringType — no union tracking;
-    - decimals only with ``prefer_decimal=True`` (else double).
+    - no decimals: every non-integral number becomes DoubleType.
 
     Use when downstream only needs a *loadable* schema, not reference-
     faithful typing: on a wide corpus this is several times faster than the
     Python fold because the whole pass stays in the JVM.
     """
-    reader = spark.read.option("prefersDecimal", str(prefer_decimal).lower())
-    return reader.json(list(_expand(paths))).schema
+    return spark.read.option("prefersDecimal", "false").json(list(_expand(paths))).schema
 
 
 def infer_schema_by_group(

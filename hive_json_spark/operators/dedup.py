@@ -3,10 +3,9 @@
 - **Exact**: content-hash groupBy keeping the min id. One shuffle on the
   hash (never on the text itself — at 100 TB the md5 is 16 bytes/row vs
   KBs of text), map-side partial min, AQE-coalesced.
-- **MinHash + LSH**: word-shingle → 64-perm MinHash signature computed
-  entirely JVM-side (xxhash-based universal hashing inside ``transform``/
-  ``array_min`` — no Python in the scan), banded into LSH buckets, bucket
-  join for candidates, exact-Jaccard verification on the candidates only.
+- **MinHash + LSH**: word-shingle → 64-perm MinHash signature → LSH band
+  hashes in one Arrow kernel (``banded_minhash``), bucket join for
+  candidates, exact-Jaccard verification on the candidates only.
   The full O(n²) never materializes; cost is #collisions, which the band
   count tunes.
 - **SimHash**: 64-bit sign-of-weighted-bit-sums over token hashes via an
@@ -26,7 +25,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from hive_json_spark.functions.text import py_tokens, tokens, word_shingles
 from hive_json_spark.operators.util import ensure_parallelism
@@ -123,44 +121,30 @@ def shingle_jaccard_truth_pairs(
     text_col: str,
     *,
     threshold: float = 0.5,
-    shingle_n: int = 3,
-    impl: str = "equijoin",
     shingles_col: str | None = None,
 ) -> DataFrame:
-    """EXACT shingle-set Jaccard ≥ threshold pairs — the all-pairs ground
-    truth approximate dedup methods are graded against (the truth arm of
-    q_dedup_method_eval, factored out).
+    """EXACT 3-word-shingle-set Jaccard ≥ threshold pairs — the all-pairs
+    ground truth approximate dedup methods are graded against (the truth
+    arm of q_dedup_method_eval, factored out).
 
-    ``impl="equijoin"`` (default): join on every shared shingle hash and
-    count intersections. Pair volume is Σ C(df_shingle, 2) — fine on the
-    BOUNDED inputs an eval harness feeds it (measured 201k intermediate
-    rows at 2000 docs), but corpus-QUADRATIC when common shingles exist
-    (measured 128.5M rows / 216 s at sf1, max shingle df 141) — an
-    acceptance harness's cost must not scale with the corpus, so callers
-    bound the input, not this function.
-
-    ``impl="prefix"``: the AllPairs/PPJoin prefix-filter core
-    (``_set_similarity_pairs``) over shingle sets. Asymptotically safer
-    on natural corpora (prefix = rarest shingles), but on this saturated
-    synthetic corpus at t=0.5 the positional filters keep 18.6M
-    candidates at sf1 and array verification costs more than the naive
-    join — measured, which is why it is not the default. Both impls are
-    lossless (identical output).
+    Joins on every shared shingle hash and counts intersections. Pair
+    volume is Σ C(df_shingle, 2) — fine on the BOUNDED inputs an eval
+    harness feeds it (measured 201k intermediate rows at 2000 docs), but
+    corpus-QUADRATIC when common shingles exist (measured 128.5M rows /
+    216 s at sf1, max shingle df 141) — an acceptance harness's cost must
+    not scale with the corpus, so callers bound the input, not this
+    function. The prefix-filter core (``_set_similarity_pairs``) is no
+    cheaper here: on this saturated synthetic corpus at t=0.5 its
+    positional filters keep 18.6M candidates at sf1 and array verification
+    costs more than this join (measured).
 
     Returns (id_a, id_b) with id_a < id_b.
     """
     sh_expr = (
         F.col(shingles_col)
         if shingles_col
-        else F.array_distinct(word_shingles(text_col, shingle_n))
+        else F.array_distinct(word_shingles(text_col, 3))
     )
-    if impl == "prefix":
-        base = ensure_parallelism(df).select(
-            F.col(id_col).alias("_id"), sh_expr.alias("_tok")
-        )
-        return _set_similarity_pairs(
-            base, threshold, salt_grid=1, impl="prefix", max_tokens=0
-        ).select("id_a", "id_b")
     sharr = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), sh_expr.alias("_ss")
     )
@@ -184,70 +168,6 @@ def shingle_jaccard_truth_pairs(
             >= threshold * (F.col("_sa") + F.col("_sb") - F.col("_i"))
         )
         .select("id_a", "id_b")
-    )
-
-
-def minhash_signature(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-    impl: str = "arrow",
-) -> DataFrame:
-    """MinHash signatures as ``(id, sig: array<bigint>)``.
-
-    impl="arrow" (default): one Arrow-batched numpy kernel per partition —
-    shingle + crc32 + vectorized (a·h+b) mod p mins. Measured ~3-4× faster
-    than the JVM expression form both cold and warm, because Spark's
-    higher-order array lambdas (the shingle build) evaluate interpreted
-    with per-element boxing, and the 64-min aggregate pays heavy codegen
-    compile per fresh JVM.
-
-    impl="jvm": explode the shingle-hash array + num_perm codegen'd ``min``
-    aggregates grouped by id; map-side partial agg means only
-    (id, num_perm longs) per doc crosses the shuffle. Kept for
-    Python-worker-free deployments.
-    """
-    df = ensure_parallelism(df)
-    rnd = random.Random(seed)
-    coeffs = [(rnd.randrange(1, 1 << 30), rnd.randrange(0, _MERSENNE_P)) for _ in range(num_perm)]
-
-    if impl == "arrow":
-        A = np.array([a for a, _ in coeffs], dtype=np.uint64)
-        B = np.array([b for _, b in coeffs], dtype=np.uint64)
-        n = shingle_n
-
-        def kernel(batches):
-            from zlib import crc32
-
-            for pdf in batches:
-                sigs = []
-                for text in pdf[text_col]:
-                    toks = py_tokens(text)
-                    count = max(len(toks) - n + 1, 1)
-                    sh = {" ".join(toks[i : i + n]) for i in range(count)}
-                    hs = np.fromiter((crc32(s.encode()) for s in sh), dtype=np.uint64, count=len(sh))
-                    sig = ((A[:, None] * hs[None, :] + B[:, None]) % _MERSENNE_P).min(axis=1)
-                    sigs.append(sig.astype(np.int64))
-                yield pd.DataFrame({id_col: pdf[id_col], "sig": sigs})
-
-        return df.select(id_col, text_col).mapInPandas(
-            kernel, f"{id_col} bigint, sig array<bigint>"
-        )
-
-    shingles = word_shingles(text_col, shingle_n)
-    base = F.transform(shingles, lambda s: F.abs(F.hash(s)).cast("bigint") % F.lit(1 << 32))
-    exploded = df.select(F.col(id_col), F.explode(base).alias("h"))
-    mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MERSENNE_P)).alias(f"m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return (
-        exploded.groupBy(id_col)
-        .agg(*mins)
-        .select(F.col(id_col), F.array(*[f"m{i}" for i in range(num_perm)]).alias("sig"))
     )
 
 
@@ -396,7 +316,6 @@ def lsh_candidate_pairs(
     num_perm: int = 64,
     bands: int = 8,
     shingle_n: int = 3,
-    seed: int = 42,
     shingles_col: str | None = None,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (id_a < id_b), deduplicated across bands.
@@ -406,7 +325,7 @@ def lsh_candidate_pairs(
     (band, band_hash, id) triples.
     """
     banded = banded_minhash(
-        df, id_col, text_col, num_perm=num_perm, bands=bands, shingle_n=shingle_n, seed=seed,
+        df, id_col, text_col, num_perm=num_perm, bands=bands, shingle_n=shingle_n,
         shingles_col=shingles_col,
     )
     left = banded.alias("a")
@@ -431,7 +350,6 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     num_perm: int = 64,
     bands: int = 8,
-    shingle_n: int = 3,
     shingles_col: str | None = None,
 ) -> DataFrame:
     """LSH candidates verified with exact shingle-set Jaccard ≥ threshold.
@@ -452,8 +370,7 @@ def minhash_dedup_pairs(
     # plan references them twice, and each recompute would redo the whole
     # signature + band join.
     cands = lsh_candidate_pairs(
-        df, id_col, text_col, num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col=shingles_col,
+        df, id_col, text_col, num_perm=num_perm, bands=bands, shingles_col=shingles_col
     ).persist()
     # Verification: join the texts of each side back onto the pairs (the
     # candidate side is small by construction, so AQE broadcasts it and the
@@ -470,7 +387,7 @@ def minhash_dedup_pairs(
             payload.withColumnRenamed(id_col, "id_b").withColumnRenamed(pc, "_tb"), "id_b"
         )
     )
-    n = shingle_n
+    n = 3
     pre_shingled = shingles_col is not None
 
     def verify(batches):
@@ -1010,8 +927,7 @@ def _set_similarity_pairs(
     base: DataFrame, threshold: float, salt_grid: int, impl: str, max_tokens: int
 ) -> DataFrame:
     """Collapse + candidate-gen + exact-verify + expansion over (_id, _tok)
-    set rows — the shared core of ``prefix_filter_jaccard_pairs`` (token
-    sets) and ``shingle_jaccard_truth_pairs`` (shingle sets)."""
+    token-set rows — the core of ``prefix_filter_jaccard_pairs``."""
     # Identical-set collapse: Jaccard only sees the distinct-token SET, so
     # documents with equal sets are interchangeable — group them by a
     # sorted-set fingerprint and run the quadratic machinery on one
@@ -1604,14 +1520,15 @@ def blocked_components(
     )
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair graph → (doc_id,
     cluster_id) with cluster_id = min doc id in the component.
 
     The engine's iterative-algorithm surface: min-label propagation — each
     round every node adopts the smallest label among itself and its
     neighbors; converged when a round changes nothing. Rounds needed =
-    graph diameter (near-dup components are shallow — usually 2-3).
+    graph diameter (near-dup components are shallow — usually 2-3), capped
+    at 20 rounds.
 
     Scale mechanics: every round ends in `localCheckpoint`, which both
     materializes the labels AND truncates the logical plan — with plain
@@ -1637,7 +1554,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    for _ in range(20):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")

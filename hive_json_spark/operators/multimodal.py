@@ -287,16 +287,15 @@ AUDIO_PITCH_SCHEMA = (
 )
 
 
-def audio_pitch_features(
-    media: DataFrame, lags: tuple[int, ...] = (64, 128, 192, 256, 320)
-) -> DataFrame:
+def audio_pitch_features(media: DataFrame) -> DataFrame:
     """Pitch/periodicity detection over WAV rows by autocorrelation on a
     candidate-lag grid, plus zero-crossing count — entirely in EXACT
     integer arithmetic (int64 dot products of int16 samples), so the
     result is a pure function of the bytes: no float accumulation, no
     FFT library variance, and a SQL oracle can recompute it term-for-term.
-    best_lag = argmax_lag sum(s[i]*s[i+lag]) (ties -> smallest lag);
-    non-WAV rows are skipped; lags >= n_samples are skipped per clip.
+    best_lag = argmax_lag sum(s[i]*s[i+lag]) over lags 64, 128, ..., 320
+    (ties -> smallest lag); non-WAV rows are skipped; lags >= n_samples
+    are skipped per clip.
 
     Arrow-batched mapInPandas; per-clip cost is |lags| numpy dots — the
     same columnar decode-once shape as decode_media_features.
@@ -315,7 +314,7 @@ def audio_pitch_features(
                 s = samples.astype(np.int64)
                 n = len(s)
                 best = None  # (r, lag); ascending lag scan keeps smallest on ties
-                for lag in lags:
+                for lag in (64, 128, 192, 256, 320):
                     if lag >= n:
                         continue
                     r = int(np.dot(s[:-lag], s[lag:]))
@@ -466,20 +465,20 @@ def phash64(gray: "np.ndarray") -> int:
     return int(v.astype(np.int64))
 
 
-def synthetic_image_phash(df: DataFrame, id_col: str = "doc_id", group_size: int = 20) -> DataFrame:
+def synthetic_image_phash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per id: synthesize a 64×64 grayscale test pattern (base pattern
-    keyed by ``id // group_size``, per-id high-frequency noise keyed by
-    ``id % group_size`` — ids sharing a base are planted near-duplicates),
+    keyed by ``id // 20``, per-id high-frequency noise keyed by
+    ``id % 20`` — ids sharing a base are planted near-duplicates),
     round-trip it through the REAL BMP codec, and emit the pHash of the
     decoded pixels. Arrow-batched; returns (media_id, phash).
 
     Group SIZE is constant (not group count): near-dup pair volume stays
-    linear in the corpus — at any scale each base contributes ≤
-    C(group_size, 2) pairs, so the downstream pair join cannot go
-    quadratic on the planted structure. Base patterns mix four
-    gid-keyed components (two frequencies, phase, amplitude, two
-    diagonal harmonics), measured ≥10 hamming bits apart between
-    different bases at 1000 ids (zero false positives at threshold 6)."""
+    linear in the corpus — at any scale each base contributes ≤ C(20, 2)
+    pairs, so the downstream pair join cannot go quadratic on the planted
+    structure. Base patterns mix four gid-keyed components (two
+    frequencies, phase, amplitude, two diagonal harmonics), measured ≥10
+    hamming bits apart between different bases at 1000 ids (zero false
+    positives at threshold 6)."""
     import pandas as pd
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -489,8 +488,7 @@ def synthetic_image_phash(df: DataFrame, id_col: str = "doc_id", group_size: int
             ids, hashes = [], []
             for mid in pdf[id_col]:
                 mid = int(mid)
-                gid = mid // group_size
-                k = mid % group_size
+                gid, k = divmod(mid, 20)
                 fx = gid * 3 % 5 + 1
                 fy = gid * 7 % 5 + 1
                 ph = (gid * 2654435761 % 360) * np.pi / 180
@@ -583,13 +581,11 @@ def phash_near_dup_pairs(
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
-def spectral_fingerprints(
-    df: DataFrame, id_col: str = "doc_id", group_size: int = 20
-) -> DataFrame:
+def spectral_fingerprints(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Shazam-style audio constellation fingerprints: synthesize a two-voice
-    8-segment melody keyed by ``id // group_size`` (constant group SIZE —
+    8-segment melody keyed by ``id // 20`` (constant group SIZE —
     ids sharing a melody are planted near-duplicates; per-id noise keyed
-    by ``id % group_size``), round-trip the REAL PCM-16 WAV codec, then
+    by ``id % 20``), round-trip the REAL PCM-16 WAV codec, then
     frame (256-sample window, 128 hop) → rFFT magnitude → per-band peak
     bins (4 log-ish bands) → joint constellation hash of the 8 peaks of
     frame pairs at dt ∈ {1,2,3}.
@@ -611,7 +607,7 @@ def spectral_fingerprints(
             ids, hashes = [], []
             for mid in pdf[id_col]:
                 mid = int(mid)
-                gid, k = mid // group_size, mid % group_size
+                gid, k = divmod(mid, 20)
                 out = np.zeros(n)
                 for s_ix in range(n // seg):
                     b1 = (gid * 7919 + s_ix * 104729) % 60 + 6
@@ -736,14 +732,6 @@ def resize_media_features(media: DataFrame, scale: int = 2) -> DataFrame:
 
 
 # --- PNG: a real compressed format, stdlib-only ------------------------------
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
 
 def encode_png(arr: "np.ndarray") -> bytes:
     """Encode an HxWx3 uint8 RGB array as a real PNG (8-bit truecolor,
@@ -931,19 +919,20 @@ def synthetic_png_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # compression family than PNG's DEFLATE. Spec: GIF89a (CompuServe, 1989).
 
 
-def _lzw_encode_gif(indices: bytes, min_code_size: int = 8) -> bytes:
-    """Variable-width LZW for GIF image data. The width switch fires one
-    code LATER than the encoder's own table state suggests: the decoder
-    defines entries one code behind the encoder, so the encoder widens
-    when ITS next_code == (1 << width) + 1 — exactly when the decoder's
-    next_code hits (1 << width). Getting this off by one desyncs every
-    code after the 254th entry."""
-    clear = 1 << min_code_size
+def _lzw_encode_gif(indices: bytes) -> bytes:
+    """Variable-width LZW for GIF image data at minimum code size 8 (the
+    full 256-entry palette). The width switch fires one code LATER than
+    the encoder's own table state suggests: the decoder defines entries
+    one code behind the encoder, so the encoder widens when ITS next_code
+    == (1 << width) + 1 — exactly when the decoder's next_code hits
+    (1 << width). Getting this off by one desyncs every code after the
+    254th entry."""
+    clear = 1 << 8
     eoi = clear + 1
     buf = 0
     nbits = 0
     res = bytearray()
-    width = min_code_size + 1
+    width = 9
 
     def emit(code: int) -> None:
         nonlocal buf, nbits
@@ -973,7 +962,7 @@ def _lzw_encode_gif(indices: bytes, min_code_size: int = 8) -> bytes:
             emit(clear)
             table = {bytes([i]): i for i in range(clear)}
             next_code = eoi + 1
-            width = min_code_size + 1
+            width = 9
         s = bytes([ch])
     if s:
         emit(table[s])

@@ -21,16 +21,14 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """Join a big fact table to a small dimension, broadcasting the dim.
+def broadcast_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Inner-join a big fact table to a small dimension, broadcasting the dim.
 
     At 100 TB the fact side must never shuffle for a dimension join;
     ``F.broadcast`` pins the strategy instead of trusting the size
     estimator (which sees only file sizes, not post-filter sizes).
     """
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on)
 
 
 def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
@@ -97,9 +95,8 @@ def salted_join(
     other: DataFrame,
     on: Sequence[str],
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-mitigating equi-join for the extreme hot-key case.
+    """Skew-mitigating inner equi-join for the extreme hot-key case.
 
     The skewed side gets a uniform random salt in [0, n_salts); the other
     side is replicated n_salts× (one row per salt value), and the join key
@@ -114,7 +111,7 @@ def salted_join(
     salted_left = skewed.withColumn("_salt", (F.rand(42) * n_salts).cast("int"))
     salts = F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     salted_right = other.withColumn("_salt", salts)
-    out = salted_left.join(salted_right, [*on, "_salt"], how)
+    out = salted_left.join(salted_right, [*on, "_salt"])
     return out.drop("_salt")
 
 
@@ -171,9 +168,8 @@ def range_join(
     lo_col: str,
     hi_col: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Interval join (point ∈ [lo, hi)) via bucket-explode.
+    """Inner interval join (point ∈ [lo, hi)) via bucket-explode.
 
     A raw ``p >= lo AND p < hi`` join has no equi-key, so Spark plans a
     broadcast-nested-loop/cartesian — O(|points|·|ranges|). Exploding each
@@ -193,7 +189,6 @@ def range_join(
         (pts["_bucket"] == exploded["_bucket"])
         & (F.col(point_col) >= F.col(lo_col))
         & (F.col(point_col) < F.col(hi_col)),
-        how,
     )
     return out.drop("_bucket")
 
@@ -204,7 +199,6 @@ def bloom_semi_join(
     left_key: str,
     right_key: str,
     num_bits: int = 1 << 20,
-    num_hashes: int = 3,
     exact: bool = True,
 ) -> DataFrame:
     """Bloom-filter-accelerated semi join (scale path for selective semi joins).
@@ -213,7 +207,7 @@ def bloom_semi_join(
     key even when only a sliver of it survives. This helper builds a Bloom
     filter over the right keys as a *tiny DataFrame of bitmap words*
     (``num_bits/64`` rows ≤ 16K for the default 1 Mi bits), broadcasts it,
-    and pre-filters the left side with ``num_hashes`` broadcast hash-join
+    and pre-filters the left side with 3 broadcast hash-join
     probes — all JVM-side expressions (xxhash64 / shiftleft / bitwise-AND),
     no Python, no driver collect, no shuffle of the left side. The exact
     semi join then runs over the pruned remainder (Bloom false positives
@@ -229,7 +223,7 @@ def bloom_semi_join(
     (superset with false positives) — useful when a downstream exact join
     re-checks the key anyway.
     """
-    probes = range(num_hashes)
+    probes = range(3)
     pos = lambda col, i: F.pmod(F.xxhash64(col, F.lit(i)), F.lit(num_bits))  # noqa: E731
     build = right.select(F.col(right_key).alias("_k")).distinct()
     # One pass over the build side: explode all k positions, then fold the
@@ -289,14 +283,12 @@ def merge_changelog(
     *,
     op_col: str = "op",
     seq_col: str | None = None,
-    upsert_ops: Sequence[str] = ("U", "I"),
-    delete_op: str = "D",
 ) -> DataFrame:
     """Fold a CDC changelog into a base snapshot (MERGE semantics) in one
-    full-outer join: matched upserts overwrite, matched deletes drop,
-    unmatched upserts insert, deletes of absent keys are no-ops. Payload
-    columns are taken positionally from the non-key/op/seq columns shared
-    by both frames.
+    full-outer join: matched upserts (ops ``U``/``I``) overwrite, matched
+    deletes (``D``) drop, unmatched upserts insert, deletes of absent keys
+    are no-ops. Payload columns are taken positionally from the
+    non-key/op/seq columns shared by both frames.
 
     If ``seq_col`` is given, the LAST change per key (highest seq) wins
     first — changelogs with multiple entries per key need the monotonic
@@ -322,7 +314,7 @@ def merge_changelog(
     # silently treated as deletes of the matched base row (data loss for a
     # typo'd op or an unexpected 'T' truncate marker). The guard is fused
     # into the _op projection, so it costs no extra scan at any scale.
-    known = [*upsert_ops, delete_op]
+    known = ["U", "I", "D"]
     op_checked = F.when(F.col(op_col).isin(*known), F.col(op_col)).otherwise(
         F.raise_error(
             F.concat_ws(
@@ -338,7 +330,7 @@ def merge_changelog(
         *[F.col(c).alias(f"_new_{c}") for c in payload],
     )
     joined = base.join(chg, base[key] == chg["_k"], "full_outer")
-    upsert = F.col("_op").isin(*upsert_ops)
+    upsert = F.col("_op").isin("U", "I")
     # keep untouched base rows and upserts (matched = overwrite, unmatched
     # = insert); any delete op — matched or not — is excluded here, which
     # drops matched rows and makes deletes of absent keys no-ops

@@ -8,9 +8,9 @@
   H-bit bucket per vector; queries only score their own bucket (plus
   multi-probe neighbors). Planes are seeded constants compiled into the
   plan — every executor derives identical buckets with no fit step.
-- **IVF (inverted file)**: k centroids from a deterministic sample,
+- **IVF (inverted file)**: 16 centroids from a deterministic sample,
   vectors assigned to nearest centroid (the inverted list), queries probe
-  the nprobe nearest lists. The centroid table is tiny → broadcast; the
+  the 4 nearest lists. The centroid table is tiny → broadcast; the
   corpus shuffles once at build, never at query time.
 """
 
@@ -191,22 +191,20 @@ def pq_index(
     vec_col: str = "embedding",
     n_subspaces: int = 8,
     n_codes: int = 16,
-    sample: int = 256,
-    iters: int = 5,
-    seed: int = 42,
 ):
     """Product quantization: split the (normalized) vector into
     ``n_subspaces`` contiguous sub-vectors and learn a ``n_codes``-entry
-    k-means codebook per subspace on a deterministic driver-side sample
-    (the IVF training pattern — train tiny, assign distributed). Each
-    vector compresses to ``n_subspaces`` uint8 codes: 64 float32 dims →
-    8 bytes, the 32× compression that makes billion-vector ANN memory
-    feasible (Jégou, Douze & Schmid, TPAMI 2011).
+    k-means codebook per subspace (5 Lloyd iterations, seed 42) on a
+    deterministic 256-row driver-side sample (the IVF training pattern —
+    train tiny, assign distributed). Each vector compresses to
+    ``n_subspaces`` uint8 codes: 64 float32 dims → 8 bytes, the 32×
+    compression that makes billion-vector ANN memory feasible (Jégou,
+    Douze & Schmid, TPAMI 2011).
 
     Returns (codes_df with an added ``pq_codes: array<int>`` column,
     codebooks ndarray [n_subspaces, n_codes, sub_dim]).
     """
-    sample_rows = corpus.select(vec_col).orderBy(id_col).limit(sample).collect()
+    sample_rows = corpus.select(vec_col).orderBy(id_col).limit(256).collect()
     if not sample_rows:
         empty = corpus.withColumn("pq_codes", F.array().cast("array<int>"))
         return empty, np.zeros((0, 0, 0), dtype=np.float64)
@@ -220,13 +218,13 @@ def pq_index(
             f"the ADC score — pick n_subspaces dividing the dimension"
         )
     sub = dim // n_subspaces
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     books = np.zeros((n_subspaces, n_codes, sub), dtype=np.float64)
     for s in range(n_subspaces):
         Xs = X[:, s * sub:(s + 1) * sub]
         k = min(n_codes, len(Xs))
         cents = Xs[rng.choice(len(Xs), size=k, replace=False)]
-        for _ in range(iters):
+        for _ in range(5):
             d2 = ((Xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for c in range(k):
@@ -273,7 +271,6 @@ def pq_topk(
     k: int = 5,
     n_subspaces: int = 8,
     n_codes: int = 16,
-    seed: int = 42,
     max_queries: int = 10_000,
 ) -> DataFrame:
     """PQ approximate top-k by asymmetric distance computation (ADC):
@@ -307,9 +304,7 @@ def pq_topk(
             f"broadcast ADC tables are per-query — batch the queries or "
             f"use the distributed probe-assignment pattern (ivf_topk)"
         )
-    coded, books = pq_index(
-        corpus, id_col, vec_col, n_subspaces, n_codes, seed=seed
-    )
+    coded, books = pq_index(corpus, id_col, vec_col, n_subspaces, n_codes)
     if books.size == 0:
         return corpus.sparkSession.createDataFrame(
             [], f"query_id bigint, {id_col} bigint, adc_score double, rank bigint"
@@ -399,17 +394,15 @@ def lsh_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
     multiprobe: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: score candidates in the query's bucket plus (with
-    ``multiprobe=1``) every bucket one sign-flip away — the standard
-    multi-probe trade: n_planes+1 probes per query buys back most of the
-    recall lost to boundary splits, while the bucket join still replaces
-    the full cross product.
+    """Approximate top-k over 64-dim vectors: score candidates in the
+    query's bucket plus (with ``multiprobe=1``) every bucket one sign-flip
+    away — the standard multi-probe trade: n_planes+1 probes per query
+    buys back most of the recall lost to boundary splits, while the bucket
+    join still replaces the full cross product.
     """
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(64, n_planes, 42)
     c = ensure_parallelism(corpus.select(id_col, vec_col)).withColumn(
         "bucket", lsh_bucket(F.col(vec_col), planes)
     )
@@ -444,27 +437,24 @@ def ivf_index(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample: int = 256,
-    iters: int = 5,
-    seed: int = 42,
 ):
-    """Build a tiny IVF: Lloyd's iterations on a deterministic driver-side
-    sample (the 100 TB pattern: train on a sample, assign distributed).
+    """Build a tiny 16-list IVF: 5 Lloyd's iterations on a deterministic
+    256-row driver-side sample (the 100 TB pattern: train on a sample,
+    assign distributed).
 
-    Returns (assigned_corpus_df, centroids ndarray [n_centroids, dim]).
+    Returns (assigned_corpus_df, centroids ndarray [16, dim]).
     """
     sample_rows = (
-        corpus.select(vec_col).orderBy(id_col).limit(sample).collect()
+        corpus.select(vec_col).orderBy(id_col).limit(256).collect()
     )
     if not sample_rows:  # empty corpus: no centroids to train, no rows to tag
         assigned = corpus.withColumn("centroid", F.lit(0).cast("int"))
         return assigned, np.zeros((0, 0), dtype=np.float64)
     X = np.array([r[0] for r in sample_rows], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
-    cents = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(iters):
+    rng = np.random.RandomState(42)
+    cents = X[rng.choice(len(X), size=min(16, len(X)), replace=False)]
+    for _ in range(5):
         assign = np.argmax(X @ cents.T, axis=1)
         for c in range(len(cents)):
             members = X[assign == c]
@@ -502,24 +492,21 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
-    """IVF-probed approximate top-k: each query scores only the nprobe
-    nearest inverted lists.
+    """IVF-probed approximate top-k over 16 lists: each query scores only
+    the 4 nearest inverted lists.
 
-    Probe assignment runs DISTRIBUTED: the centroid matrix (n_centroids ×
-    dim, driver-sized by construction) is broadcast and each query batch
-    computes its nprobe nearest lists as one GEMM + argsort inside an Arrow
+    Probe assignment runs DISTRIBUTED: the centroid matrix (16 × dim,
+    driver-sized by construction) is broadcast and each query batch
+    computes its 4 nearest lists as one GEMM + argsort inside an Arrow
     kernel — the query side is never materialized on the driver, so
     queries can be a full table, not just a handful of probes (round-2
     verdict fix).  The probe frame is then broadcast into the corpus join:
-    at nprobe rows per query that hint holds while the query side fits the
+    at 4 rows per query that hint holds while the query side fits the
     broadcast budget; a table-sized query side degrades to a shuffle join
     on `centroid` automatically if the hint is dropped by AQE.
     """
-    assigned, cents = ivf_index(corpus, id_col, vec_col, n_centroids, seed=seed)
+    assigned, cents = ivf_index(corpus, id_col, vec_col)
     spark = corpus.sparkSession
 
     if cents.size == 0:  # empty corpus: no inverted lists to probe
@@ -530,7 +517,7 @@ def ivf_topk(
     import pandas as pd
 
     cent_bcast = spark.sparkContext.broadcast(cents)
-    n_probe = min(nprobe, len(cents))
+    n_probe = min(4, len(cents))
 
     def probe_kernel(batches):
         C = cent_bcast.value
@@ -539,7 +526,7 @@ def ivf_topk(
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            # top-nprobe lists per query, one GEMM for the whole batch
+            # top-4 lists per query, one GEMM for the whole batch
             order = np.argsort(-(V @ C.T), axis=1)[:, :n_probe]
             n = len(pdf)
             yield pd.DataFrame(

@@ -34,7 +34,7 @@ def _scan_row_groups(df: DataFrame) -> int | None:
     return total
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition if the input cannot actually feed the cluster's cores.
 
     Two traps, both real (r6/r7 finds), both invisible to a plan audit:
@@ -78,8 +78,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
             return df
     except Exception:
         pass
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     floor = max(target // 2, 2)
     if df.rdd.getNumPartitions() < floor:
         return df.repartition(target)

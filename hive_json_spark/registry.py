@@ -10,6 +10,7 @@ from __future__ import annotations
 from hive_json_spark import (
     queries_analytics,
     queries_inference,
+    queries_pipeline,
     queries_quality,
     queries_relational,
     queries_scale,
@@ -25,14 +26,8 @@ _MODULES = [
     queries_quality,
     queries_scale,
     queries_streaming,
+    queries_pipeline,
 ]
-
-try:  # pipeline queries land in a later milestone; registry tolerates absence
-    from hive_json_spark import queries_pipeline
-
-    _MODULES.append(queries_pipeline)
-except ImportError:
-    pass
 
 _LAST_ENTRY: list[str] = []
 

@@ -230,14 +230,14 @@ def write_table(
     path: str,
     *,
     format: str = "parquet",
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
     bucket_by: tuple[int, list[str]] | None = None,
     sort_by: list[str] | None = None,
     table_name: str | None = None,
     compression: str | None = "zstd",
 ) -> None:
-    """Materialize a DataFrame as an analytics-ready table.
+    """Materialize a DataFrame as an analytics-ready table, overwriting
+    whatever is at ``path``.
 
     - ``partition_by``: hive-style directory partitioning — partition
       pruning makes per-key reads O(selected partitions), and writers
@@ -250,7 +250,7 @@ def write_table(
     - zstd compression default: ~parquet-snappy decode speed at a better
       ratio — 100 TB stored is real money.
     """
-    writer = df.write.format(format).mode(mode)
+    writer = df.write.format(format).mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
     if partition_by:
@@ -265,21 +265,3 @@ def write_table(
         writer.option("path", path).saveAsTable(table_name)
         return
     writer.save(path)
-
-
-def read_json_corpus(
-    spark: SparkSession,
-    paths: str | list[str],
-    *,
-    schema=None,
-    multiline: bool = False,
-) -> DataFrame:
-    """NDJSON / JSON corpus reader (.gz transparent, splittable when
-    uncompressed line-delimited). ``schema=None`` uses Spark's native
-    inference (documented parity gaps vs the lattice: integrals→long, no
-    byte/short/binary/union); pass ``to_spark_type(infer_schema(...))`` for
-    lattice-faithful loading."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.option("multiLine", multiline).json(paths)

@@ -149,10 +149,9 @@ def stream_stream_join(
     right_ts: str,
     watermark: str = "1 hour",
     within: str = "30 minutes",
-    how: str = "inner",
 ) -> DataFrame:
-    """Watermarked stream-stream join: right events within ``within`` AFTER
-    the left event, same key.
+    """Watermarked inner stream-stream join: right events within ``within``
+    AFTER the left event, same key.
 
     Both sides buffer in state; the watermark + time-range condition is
     what lets the engine EVICT state (without it a stream-stream join's
@@ -166,7 +165,7 @@ def stream_stream_join(
         & (r[right_ts] >= l[left_ts])
         & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {within}"))
     )
-    return l.join(r, cond, how).drop(r[key])
+    return l.join(r, cond).drop(r[key])
 
 
 def streaming_dedup(

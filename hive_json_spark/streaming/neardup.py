@@ -35,16 +35,15 @@ def streaming_near_dup_flags(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_perm: int = 64,
-    bands: int = 8,
     ts_col: str | None = None,
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Flag stream documents that are near-dups of the static corpus.
 
     Returns (stream_id, corpus_id, jaccard) — one row per flagged pair
-    with exact distinct-token Jaccard ≥ threshold. The same banding
-    parameters MUST be used on both sides (same seed → same hash family).
+    with exact distinct-token Jaccard ≥ threshold. Both sides band with
+    ``banded_minhash``'s defaults (64 perms, 8 bands, one seed → one hash
+    family), so their band hashes are comparable.
 
     State honesty: a pair colliding in several bands would otherwise
     emit once per band, so candidates are deduplicated on
@@ -57,9 +56,7 @@ def streaming_near_dup_flags(
     arrive in that document's own micro-batch (cross-batch repeats are
     re-deliveries, exactly what the watermark window is for).
     """
-    idx = banded_minhash(
-        corpus, id_col, text_col, num_perm=num_perm, bands=bands
-    ).select(
+    idx = banded_minhash(corpus, id_col, text_col).select(
         F.col(id_col).alias("corpus_id"), "band", "band_hash"
     )
     corpus_text = corpus.select(
@@ -69,7 +66,6 @@ def streaming_near_dup_flags(
     stream_cols = [id_col, text_col] + ([ts_col] if ts_col else [])
     sb = banded_minhash(
         doc_stream.select(*stream_cols), id_col, text_col,
-        num_perm=num_perm, bands=bands,
         keep_text=True, keep_cols=([ts_col] if ts_col else []),
     ).select(
         F.col(id_col).alias("stream_id"),

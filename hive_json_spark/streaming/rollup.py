@@ -39,10 +39,10 @@ def continuous_rollup(
     value_col: str,
     out_dir: str,
     checkpoint_dir: str,
-    window: str = "1 day",
     max_partitions_per_batch: int = 10_000,
 ):
-    """Start an availableNow stream maintaining the rollup at ``out_dir``.
+    """Start an availableNow stream maintaining the daily rollup at
+    ``out_dir``.
 
     Returns the StreamingQuery; callers ``awaitTermination()`` it. Swap the
     trigger for continuous operation.
@@ -62,7 +62,7 @@ def continuous_rollup(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         part = (
-            batch_df.groupBy(F.window(ts_col, window).alias("w"), *key_cols)
+            batch_df.groupBy(F.window(ts_col, "1 day").alias("w"), *key_cols)
             .agg(F.count("*").alias("n"), F.sum(value_col).alias("total"))
             .select(
                 F.col("w.start").cast("date").alias("day"),

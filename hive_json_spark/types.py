@@ -650,14 +650,14 @@ def to_flat(t: HType, prefix: str = "root") -> str:
 # --- Spark mapping (SURVEY §1.6) --------------------------------------------
 
 
-def to_spark_type(t: HType, *, union_mode: str = "tagged", strict_binary: bool = False):
+def to_spark_type(t: HType, *, union_mode: str = "tagged"):
     """Discovered type → ``pyspark.sql.types`` tree.
 
     union_mode:
       - ``"tagged"``: the ORC/Hive encoding — struct<tag:tinyint, field0:t0, ...>
       - ``"string"``: decay unions to StringType (lossy, flag-gated)
-    strict_binary: map BINARY→BinaryType (raw UTF-8 bytes under ``from_json``);
-      default keeps hex strings as StringType so loading round-trips.
+    BINARY maps to StringType: the hex text stays a string, so loading
+    round-trips (BinaryType would hold the raw UTF-8 bytes under ``from_json``).
     """
     from pyspark.sql import types as T
 
@@ -682,13 +682,11 @@ def to_spark_type(t: HType, *, union_mode: str = "tagged", strict_binary: bool =
             return T.FloatType()
         if k is Kind.DOUBLE:
             return T.DoubleType()
-        if k is Kind.BINARY:
-            return T.BinaryType() if strict_binary else T.StringType()
         if k is Kind.DATE:
             return T.DateType()
         if k is Kind.TIMESTAMP:
             return T.TimestampType()
-        if k is Kind.STRING:
+        if k in (Kind.BINARY, Kind.STRING):
             return T.StringType()
         if isinstance(t, StructT):
             return T.StructType(

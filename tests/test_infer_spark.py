@@ -88,9 +88,11 @@ def test_whole_file_hidden_names_raise(spark, tmp_path):
     assert infer_schema(spark, str(hidden_dir), ndjson=False).records == 1
 
 
-def test_whole_file_malformed_input_pinned(spark, tmp_path):
-    """Pinned behaviour of the whole-file (.gz / concatenated) discover
-    path on malformed input."""
+@pytest.mark.parametrize("ndjson", [False, True], ids=["whole_file", "ndjson"])
+def test_whole_file_malformed_input_pinned(spark, tmp_path, ndjson):
+    """Pinned behaviour of the discover path on malformed input, both for
+    whole-file rows (.gz / concatenated, ``ndjson=False``) and for one row
+    per line (``ndjson=True``)."""
     from pyspark.errors import PySparkException
     from py4j.protocol import Py4JJavaError
 
@@ -103,22 +105,23 @@ def test_whole_file_malformed_input_pinned(spark, tmp_path):
     for path in (truncated, bad_utf8):
         for on_error in ("raise", "skip"):
             with pytest.raises(failures):
-                infer_schema(spark, str(path), ndjson=False, on_error=on_error)
+                infer_schema(spark, str(path), ndjson=ndjson, on_error=on_error)
 
-    # a bad document mid-file: the documents before it count, the rest
-    # of the file is one corrupt text
+    # a bad document mid-text: the documents before it count, the rest of
+    # the text is one corrupt text; a whole-file row loses the rest of the
+    # file, a line row only the rest of its line
     mid = tmp_path / "mid.json"
-    mid.write_text('{"a":1}{"a":2}{"a":{"a":3}')
-    r = infer_schema(spark, str(mid), ndjson=False, on_error="skip")
-    assert (r.records, r.corrupt) == (2, 1)
+    mid.write_text('{"a":1}{"a":2}{"a":{"a":3}\n{"a":4}\n')
+    r = infer_schema(spark, str(mid), ndjson=ndjson, on_error="skip")
+    assert (r.records, r.corrupt) == ((3, 1) if ndjson else (2, 1))
     assert str(r.htype) == "struct<a:tinyint>"
     with pytest.raises(failures):
-        infer_schema(spark, str(mid), ndjson=False)
+        infer_schema(spark, str(mid), ndjson=ndjson)
 
     # an empty file folds to no type and no records, as infer_files_local
     empty = tmp_path / "empty.json"
     empty.write_text("")
-    r = infer_schema(spark, str(empty), ndjson=False)
+    r = infer_schema(spark, str(empty), ndjson=ndjson)
     assert (r.htype, r.records) == (None, 0)
     assert infer_files_local(str(empty)).htype is None
 
@@ -137,7 +140,7 @@ def test_whole_file_malformed_input_pinned(spark, tmp_path):
         sys.setrecursionlimit(limit)
     for on_error in ("raise", "skip"):
         with pytest.raises(failures):
-            infer_schema(spark, str(deep), ndjson=False, on_error=on_error)
+            infer_schema(spark, str(deep), ndjson=ndjson, on_error=on_error)
 
     # numbers past 38 digits or the double range widen to double; a
     # duplicate key keeps one field whose type joins both values
@@ -147,13 +150,27 @@ def test_whole_file_malformed_input_pinned(spark, tmp_path):
     ):
         path = tmp_path / name
         path.write_text(text)
-        r = infer_schema(spark, str(path), ndjson=False)
+        r = infer_schema(spark, str(path), ndjson=ndjson)
         local = infer_files_local(str(path))
         assert (str(r.htype), r.records) == (want, 1), name
         assert (str(canonicalize(local.htype)), local.records) == (want, 1), name
 
+    # a pretty-printed document spans lines: per-line rows differ from
+    # infer_files_local by design (each line is its own text, so "{" and
+    # "}" are corrupt and the line '"a": 1' yields one string document)
+    pretty = tmp_path / "pretty.json"
+    pretty.write_text('{\n  "a": 1\n}\n')
+    assert str(canonicalize(infer_files_local(str(pretty)).htype)) == "struct<a:tinyint>"
+    r = infer_schema(spark, str(pretty), ndjson=ndjson, on_error="skip")
+    if ndjson:
+        assert (str(r.htype), r.records, r.corrupt) == ("string", 1, 3)
+        with pytest.raises(failures):
+            infer_schema(spark, str(pretty), ndjson=ndjson)
+    else:
+        assert (str(r.htype), r.records, r.corrupt) == ("struct<a:tinyint>", 1, 0)
+
     with pytest.raises(failures):
-        infer_schema(spark, str(tmp_path / "missing.json"), ndjson=False)
+        infer_schema(spark, str(tmp_path / "missing.json"), ndjson=ndjson)
 
 
 def test_column_reinferred_after_rewrite_in_place(spark, tmp_path):

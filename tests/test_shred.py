@@ -70,6 +70,16 @@ def test_cli_run_query(capsys):
     assert out[0].split(",")[0] and len(out) == 4  # header + 3 rows
 
     assert cli.run_query(["definitely_not_a_query"]) == 2
+    assert "unknown query" in capsys.readouterr().err
+
+    # a flag given last, or a non-integer --limit, prints the usage line
+    for argv in (
+        ["q_topk_orders", "--sf-dir"],
+        ["q_topk_orders", "--limit"],
+        ["--limit", "x", "q_topk_orders"],
+    ):
+        assert cli.run_query(argv) == 2, argv
+        assert capsys.readouterr().err.startswith("usage: run-query"), argv
 
 
 def test_cli_sql(capsys):
@@ -93,3 +103,24 @@ def test_cli_sql(capsys):
     assert out[0] == "path,value" and out[1].startswith("root.")
 
     assert cli.sql([]) == 2
+    assert capsys.readouterr().err.startswith("usage: sql")
+    for argv in (
+        ["SELECT 1", "--sf-dir"],
+        ["SELECT 1", "--limit"],
+        ["--limit", "x", "SELECT 1"],
+    ):
+        assert cli.sql(argv) == 2, argv
+        assert capsys.readouterr().err.startswith("usage: sql"), argv
+
+
+def test_cli_shred_json(tmp_path, capsys):
+    from hive_json_spark import cli
+
+    src = tmp_path / "in.json"
+    src.write_text('{"a": 1}')
+    assert cli.shred_json(["-o", str(tmp_path / "out"), str(src)]) == 0
+    assert (tmp_path / "out" / "root.a.txt").read_text() == "1\n"
+    capsys.readouterr()
+
+    assert cli.shred_json([str(src), "-o"]) == 2
+    assert capsys.readouterr().err.startswith("usage: shred-json")
