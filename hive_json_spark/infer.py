@@ -6,6 +6,13 @@ Here the same lattice runs as a classic partial+final aggregation:
 
     scan → per-partition local fold (partial)  → tree-reduce of partials (final)
 
+The local fold fuses the two reference operators: ``types.merge_value``
+walks each parsed document against the accumulated type, equal to
+``merge_types(acc, infer_type(doc))`` but without building the document's
+own type tree, and leaves the accumulator untouched (the same object) when
+the document adds nothing. ``infer_files_local`` keeps the unfused loop as
+the oracle the fused fold is checked against.
+
 Scale design (100 TB):
 - **NDJSON / one-doc-per-line** (the common large-corpus layout): read with
   ``spark.read.text`` — splittable, so a 1 GB+ file parallelizes across
@@ -44,6 +51,7 @@ from hive_json_spark.types import (
     infer_type,
     iter_json_documents,
     merge_types,
+    merge_value,
     to_flat,
     to_hive_ddl,
 )
@@ -92,7 +100,12 @@ def _expand(paths: Sequence[str] | str) -> List[str]:
 
 def infer_files_local(paths: Sequence[str] | str) -> InferResult:
     """Sequential left-fold over files — exact reference semantics including
-    union branch order (single-threaded fold, JsonSchemaFinder.java:227-247)."""
+    union branch order (single-threaded fold, JsonSchemaFinder.java:227-247).
+
+    Deliberately the unfused spec loop, ``merge_types(result,
+    infer_type(doc))``, not ``merge_value``: it is the independent oracle
+    the distributed fold (and the benchmark's discover check) is compared
+    against, so it must not share the fused kernel it checks."""
     result: Optional[HType] = None
     count = 0
     for path in _expand(paths):
@@ -116,8 +129,11 @@ def _fold(
 ) -> Tuple[Optional[HType], int, int]:
     """Fold ``(text, freq)`` pairs into ``acc = (type, records, corrupt)``.
 
-    Each text holds any number of concatenated documents; its records and
-    corrupt count scale by ``freq``. ``on_error="skip"`` stops a text at
+    Each parsed document is merged straight into the accumulated type by
+    ``merge_value`` (induction and merge fused; nothing is rebuilt for a
+    document that adds nothing). Each text holds any number of
+    concatenated documents; its records and corrupt count scale by
+    ``freq``. ``on_error="skip"`` stops a text at
     its first undecodable document (the documents before it count) and
     counts the text corrupt instead of failing the task — at 100 TB a
     handful of truncated documents must not kill a 10-hour job; the
@@ -127,7 +143,7 @@ def _fold(
         docs = 0
         try:
             for doc in iter_json_documents(text):
-                t = merge_types(t, infer_type(doc))
+                t = merge_value(t, doc)
                 docs += 1
         except ValueError:
             if on_error != "skip":

@@ -12,6 +12,12 @@ engine's data model (hortonworks/hive-json):
   lattice (NumericType.java:74-88, StringType.java:47-57,
   StructType.java:73-95, ListType.java:58-75, UnionType.java:78-102,
   BooleanType.java:35-42, NullType.java:35-42).
+- fused fold step: ``merge_value(acc, doc)`` is exactly
+  ``merge_types(acc, infer_type(doc))`` (the reference loop's
+  ``mergeType(result, pickType(doc))``, JsonSchemaFinder.java:227-247),
+  computed by walking the parsed document against the accumulator; it
+  returns ``acc`` itself when the document adds nothing. The two unfused
+  functions stay the specification it is tested against.
 - rendering: ``str(t)`` matches the reference ``toString`` forms;
   ``to_hive_ddl`` matches ``printTopType``/``printType``
   (JsonSchemaFinder.java:153-221); ``to_flat`` matches ``printFlat``
@@ -51,6 +57,7 @@ __all__ = [
     "JsonNumber",
     "infer_type",
     "merge_types",
+    "merge_value",
     "canonicalize",
     "loads_first",
     "iter_json_documents",
@@ -536,14 +543,94 @@ def merge_types(previous: Optional[HType], incoming: Optional[HType]) -> Optiona
     if previous == incoming:
         # merge is idempotent for equal trees in every class (numeric ranks,
         # string kinds, struct/list recursion, union child-wise) — skipping
-        # the rebuild makes the hot fold path allocation-free once the
-        # accumulator stabilizes on a homogeneous corpus
+        # the rebuild keeps merging equal partials (and the unfused spec
+        # fold on a homogeneous corpus) allocation-free; the document fold
+        # itself goes through merge_value, which never builds ``incoming``
         return previous
     if previous.subsumes(incoming):
         return previous.merged_with(incoming)
     if incoming.subsumes(previous):
         return incoming.merged_with(previous)
     return UnionT((previous, incoming))
+
+
+_STRING = StringT(Kind.STRING)
+# one shallow type per parsed-value class: ``subsumes`` looks only at the
+# other side's kind or class, so a probe picks the same union branch as
+# ``UnionT.merged_with`` given the value's full type
+_PROBES = {
+    bool: BooleanT(),
+    JsonNumber: _num(Kind.INT, 0, 0),
+    str: _STRING,
+    list: ListT(),
+    dict: StructT(),
+}
+
+
+def merge_value(acc: Optional[HType], doc: JsonValue) -> Optional[HType]:
+    """``merge_types(acc, infer_type(doc))``, fused: the fold's per-document step.
+
+    Walks the parsed document against the accumulated type instead of
+    building the document's own type tree first, and returns ``acc``
+    itself (the same object) whenever the document adds nothing, so
+    parents rebuild only along a path that widened. Equal to the unfused
+    spec in value and in raw union branch order; whatever the walk does
+    not cover (map and null accumulators, plain ``int``/``float`` values,
+    a category mismatch, a list that widens its element) takes the spec.
+    One stack frame per nesting level.
+    """
+    if acc is None:
+        return infer_type(doc)
+    if doc is None:
+        return acc  # every accumulator absorbs null unchanged
+    cls = type(doc)
+    acc_cls = type(acc)
+    if cls is dict and acc_cls is StructT:
+        ours = dict(acc.fields)
+        widened = False
+        for name, value in doc.items():
+            old = ours.get(name)
+            new = infer_type(value) if old is None else merge_value(old, value)
+            if new is not old:
+                ours[name] = new
+                widened = True
+        return StructT.of(ours) if widened else acc
+    if cls is str and acc_cls is StringT:
+        k = acc.str_kind
+        if k is Kind.STRING:
+            return acc
+        if k is Kind.TIMESTAMP:
+            return acc if _TIMESTAMP_RE.match(doc) else _STRING
+        if k is Kind.BINARY:
+            return acc if _HEX_RE.match(doc) else _STRING
+    elif cls is JsonNumber and acc_cls is NumericT:
+        t = _pick_number(doc)
+        if (
+            t.num_kind.rank <= acc.num_kind.rank
+            and t.int_digits <= acc.int_digits
+            and t.scale <= acc.scale
+        ):
+            return acc
+        return acc.merged_with(t)
+    elif acc_cls is UnionT and cls in _PROBES:
+        probe = _PROBES[cls]
+        kids = acc.children
+        for i, child in enumerate(kids):
+            if child.subsumes(probe) or probe.subsumes(child):
+                new = merge_value(child, doc)
+                if new is child:
+                    return acc
+                return UnionT(kids[:i] + (new,) + kids[i + 1:])
+        return UnionT(kids + (infer_type(doc),))
+    elif cls is list and acc_cls is ListT:
+        element = acc.element
+        for child in doc:
+            if merge_value(element, child) is not element:
+                break
+        else:
+            return acc
+    merged = merge_types(acc, infer_type(doc))
+    return acc if merged == acc else merged
 
 
 _CANON_ORDER = {k: i for i, k in enumerate(Kind)}

@@ -142,6 +142,21 @@ def test_whole_file_malformed_input_pinned(spark, tmp_path, ndjson):
         with pytest.raises(failures):
             infer_schema(spark, str(deep), ndjson=ndjson, on_error=on_error)
 
+    # nesting that parses but cannot be typed or shipped: one text holding
+    # a 450-deep document, then a 700-deep one, still raises on both paths
+    # (the fold may type it, but its partial cannot be pickled)
+    nested = tmp_path / "nested.json"
+    nested.write_text("".join('{"a":' * n + "1" + "}" * n for n in (450, 700)))
+    sys.setrecursionlimit(1000)
+    try:
+        with pytest.raises(RecursionError):
+            infer_files_local(str(nested))
+    finally:
+        sys.setrecursionlimit(limit)
+    for on_error in ("raise", "skip"):
+        with pytest.raises(failures):
+            infer_schema(spark, str(nested), ndjson=ndjson, on_error=on_error)
+
     # numbers past 38 digits or the double range widen to double; a
     # duplicate key keeps one field whose type joins both values
     for name, text, want in (

@@ -5,12 +5,16 @@ import json
 from hypothesis import given, settings, strategies as st
 
 from hive_json_spark.types import (
+    JsonNumber,
+    MapT,
     NullT,
     canonicalize,
+    decay_wide_structs,
     infer_type,
     iter_json_documents,
     loads_first,
     merge_types,
+    merge_value,
     to_flat,
     to_hive_ddl,
     to_spark_type,
@@ -157,6 +161,95 @@ def test_merge_associative_up_to_canonical_order(a, b, c):
     left = merge_types(merge_types(ta, tb), tc)
     right = merge_types(ta, merge_types(tb, tc))
     assert canonicalize(left) == canonicalize(right)
+
+
+# --- fused fold step: merge_value(acc, d) == merge_types(acc, infer_type(d)) --
+
+# leaves that reach merge_value's fast paths: timestamp / hex / plain
+# strings (and near misses), integers in every size class, more than 38
+# digits, scientific notation (float, negative → double, underflow)
+fold_leaves = (
+    st.none()
+    | st.booleans()
+    | st.sampled_from(
+        [
+            "2016-01-02T03:04:05Z",
+            "2016/01/02 03:04:05",
+            "2016-01-02 03:04:05 +01:00",
+            "2016-01-02 at 03:04:05",
+            "0a1b",
+            "DEADbeef",
+            "0a1b2",
+            "abc",
+            "",
+        ]
+    )
+    | st.text(alphabet="0a:-T ", max_size=6)
+    | st.one_of(
+        st.integers(-128, 127),
+        st.integers(-32768, 32767),
+        st.integers(-(2**31), 2**31 - 1),
+        st.integers(-(2**63), 2**63 - 1),
+        st.integers(2**63, 2**66),
+        st.just(10**40),
+    ).map(lambda i: JsonNumber(str(i)))
+    | st.sampled_from(["1e5", "-1e5", "1E-400", "1.5", "-0.25", "123.4567"]).map(JsonNumber)
+    | st.floats(allow_nan=False, allow_infinity=False).map(lambda f: JsonNumber(repr(f)))
+)
+# a small key alphabet, so documents share fields and unions form
+fold_values = st.recursive(
+    fold_leaves,
+    lambda children: st.lists(children, max_size=3)
+    | st.dictionaries(st.sampled_from("abc"), children, max_size=3),
+    max_leaves=10,
+)
+
+
+def dump_lexical(v):
+    """JSON text with every ``JsonNumber`` written as its literal."""
+    if isinstance(v, JsonNumber):
+        return str(v)
+    if isinstance(v, list):
+        return "[" + ",".join(dump_lexical(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(json.dumps(k) + ":" + dump_lexical(x) for k, x in v.items()) + "}"
+    return json.dumps(v)
+
+
+def assert_fused_fold(acc, docs):
+    """Fold ``docs`` both ways from ``acc``; at every step the fused result
+    equals the spec's, in value and in raw union branch order, and is
+    ``acc`` itself whenever it equals ``acc``."""
+    spec = acc
+    for d in docs:
+        want = merge_types(spec, infer_type(d))
+        got = merge_value(acc, d)
+        assert got == want and str(got) == str(want), (acc, d)
+        if got == acc:
+            assert got is acc, (acc, d)
+        acc, spec = got, want
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(fold_values, min_size=1, max_size=8))
+def test_merge_value_is_fused_merge_types(vs):
+    assert_fused_fold(None, [loads_first(dump_lexical(v)) for v in vs])
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(fold_values, max_size=6))
+def test_merge_value_map_accumulator(vs):
+    # a decayed wide struct is a MapT accumulator: the fallback path
+    acc = decay_wide_structs(infer_type(loads_first('{"a":1,"b":"x","c":[2]}')), 2)
+    assert isinstance(acc, MapT)
+    assert_fused_fold(acc, [loads_first(dump_lexical(v)) for v in vs])
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(json_values, min_size=1, max_size=6))
+def test_merge_value_plain_python_numbers(vs):
+    # plain int/float values (not parsed lexically) take the fallback
+    assert_fused_fold(None, vs)
 
 
 def test_schema_diff_evolution():
