@@ -60,7 +60,6 @@ __all__ = [
     "InferResult",
     "infer_files_local",
     "infer_schema",
-    "infer_schema_native",
     "infer_schema_of_column",
     "load_json_column",
 ]
@@ -398,26 +397,6 @@ def load_json_column(df, column: str, htype: Optional[HType] = None):
             yield pdf.assign(parsed=parsed)
 
     return df.mapInPandas(kernel, out_schema)
-
-
-def infer_schema_native(spark, paths: Sequence[str] | str):
-    """Spark's built-in JSON inference as the *fast path* (SURVEY §7.2).
-
-    Runs ``spark.read.json`` schema inference — JVM-side, no Python in the
-    scan — and returns the ``pyspark.sql.types.StructType``. Documented
-    parity gaps vs the lattice (`infer_schema`):
-
-    - all integrals widen to LongType (no byte/short/int sizing);
-    - no BINARY hex-detection and no TIMESTAMP regex subtyping of plain
-      strings (Spark types timestamps only via its own patterns);
-    - heterogeneous fields decay to StringType — no union tracking;
-    - no decimals: every non-integral number becomes DoubleType.
-
-    Use when downstream only needs a *loadable* schema, not reference-
-    faithful typing: on a wide corpus this is several times faster than the
-    Python fold because the whole pass stays in the JVM.
-    """
-    return spark.read.option("prefersDecimal", "false").json(list(_expand(paths))).schema
 
 
 def infer_schema_by_group(

@@ -4,6 +4,13 @@ Local testing runs on ``local[N]``; the same config block is what we would
 ship to a 1000-executor cluster — AQE handles runtime re-planning (partition
 coalescing, skew joins), Arrow handles the Python boundary, and shuffle
 partition count is sized by the driver via ``SPARK_GRAFT_CPUS``.
+
+Python workers start from the engine's own daemon, ``hive_json_spark.worker``:
+PySpark's daemon and worker unchanged, except that each task's import-cache
+invalidation skips zip archives (``pyspark.zip``, the Spark jar), which it
+would otherwise re-read in full on every task. The checkout must therefore be
+importable on workers, from the cwd or ``PYTHONPATH``, as the kernels already
+need it to be.
 """
 
 from __future__ import annotations
@@ -29,6 +36,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # per-task import-cache invalidation skips immutable zip archives (~0.3 s a task)
+        .config("spark.python.daemon.module", "hive_json_spark.worker")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")

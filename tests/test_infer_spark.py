@@ -342,22 +342,6 @@ def test_infer_wide_struct_decays_to_map(spark):
     assert str(r2.htype).count("key_") == 600
 
 
-def test_native_fast_path_documented_gaps(spark, corpus):
-    """The JVM fast path loads the same corpus with its documented gaps:
-    integrals→long, unions→string decay, no timestamp regex subtyping."""
-    from pyspark.sql import types as T
-
-    from hive_json_spark.infer import infer_schema, infer_schema_native
-
-    native = infer_schema_native(spark, str(corpus / "a.json"))
-    by_name = {f.name: f.dataType for f in native.fields}
-    assert isinstance(by_name["actor"], T.StructType)
-    assert by_name["actor"]["uid"].dataType == T.LongType()   # gap: no int sizing
-    assert by_name["payload"] == T.StringType()               # gap: union decays
-    r = infer_schema(spark, str(corpus / "a.json"))
-    assert "uniontype<" in str(r.htype)                       # lattice keeps it
-
-
 def test_write_table_formats_round_trip(spark, tmp_path):
     """Sink/source coverage beyond parquet: orc (columnar alternative),
     csv and json (interchange) all round-trip through write_table with
