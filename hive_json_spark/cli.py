@@ -16,7 +16,7 @@ import sys
 
 from hive_json_spark.infer import infer_files_local, infer_schema
 from hive_json_spark.shred import shred_files_local
-from hive_json_spark.types import StructT, to_flat, to_hive_ddl
+from hive_json_spark.types import to_flat, to_hive_ddl
 
 
 def find_json_schema(argv: list[str]) -> int:

@@ -16,15 +16,13 @@
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 
 from hive_json_spark.operators.util import ensure_parallelism
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from hive_json_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
+from hive_json_spark.functions.vectors import cosine_similarity
 
 
 def brute_force_topk(

@@ -6,19 +6,24 @@ Reference semantics (JsonShredder.java:64-81):
 - array → every element funnels into ``<path>.list``
 - object → recurse as ``<path>.<field>``
 
-``shred_files_local`` reproduces the CLI tool byte-for-byte (one ``.txt``
-file per path in an output dir, values in encounter order —
+``shred_records`` is the one walk every surface runs (``shred_text``,
+``shred_files_local``, ``shred_column`` and the ``shred_json`` UDTF): an
+explicit stack, so the walk's depth is bounded by memory, not the recursion
+limit. ``shred_files_local`` reproduces the CLI tool byte-for-byte (one
+``.txt`` file per path in an output dir, values in encounter order —
 JsonShredder.java:52-62). The distributed path re-expresses shredding as a
-*generator flatMap* producing ``(path, value)`` rows — a UDTF-shaped op —
-and replaces the reference's lazy file-handle pool with
-``write.partitionBy("path")``: at 100 TB one output directory per leaf path,
-written in parallel, no driver-side handles.
+generator flatMap: ``shred_column`` is a ``mapInArrow`` kernel emitting
+``(path, value)`` Arrow batches, and ``shred_to_dir`` replaces the
+reference's lazy file-handle pool with an AQE rebalance by path followed by
+``write.partitionBy("path")``: one file per leaf path, as the reference
+writes, except that a leaf too large for one task is split across several
+at map-output boundaries, so at 100 TB a hot leaf is not one task.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import Iterator, List, Sequence, Tuple
 
 from hive_json_spark.infer import _expand, _open_text
 from hive_json_spark.types import iter_json_documents
@@ -27,23 +32,32 @@ __all__ = ["shred_records", "shred_text", "shred_files_local", "shred_column", "
 
 
 def shred_records(doc, root: str = "root") -> Iterator[Tuple[str, str]]:
-    """Yield (path, lexical value) for every primitive leaf of one document."""
+    """Yield (path, lexical value) for every primitive leaf of one parsed
+    document (``dict``/``list`` containers); every value is a plain ``str``."""
     stack = [(root, doc)]
+    pop, push = stack.pop, stack.append
     while stack:
-        name, node = stack.pop()
-        if node is None:
-            continue  # nulls skipped (JsonShredder.java:68-69)
-        if isinstance(node, bool):
-            yield name, "true" if node else "false"
-        elif isinstance(node, dict):
+        name, node = pop()
+        kind = type(node)
+        if kind is dict:
             # reverse keeps encounter order under the LIFO stack
-            for key in reversed(list(node)):
-                stack.append((f"{name}.{key}", node[key]))
-        elif isinstance(node, list):
+            prefix = name + "."
+            for key, child in reversed(node.items()):
+                push((prefix + key, child))
+        elif kind is list:
+            name += ".list"
             for child in reversed(node):
-                stack.append((f"{name}.list", child))
+                push((name, child))
+        elif kind is str:
+            yield name, node
+        elif node is None:
+            continue  # nulls skipped (JsonShredder.java:68-69)
+        elif kind is bool:
+            yield name, "true" if node else "false"
         else:
-            yield name, str(node)  # JsonNumber is a str with the lexical form
+            # a JsonNumber's lexical form as a plain str: pickled values (the
+            # UDTF's rows) must be builtin types for the JVM to unpickle them
+            yield name, str(node)
 
 
 def shred_text(text: str, root: str = "root") -> Iterator[Tuple[str, str]]:
@@ -79,27 +93,32 @@ def shred_files_local(paths: Sequence[str] | str, out_dir: str = ".") -> int:
 def shred_column(df, column: str, root: str = "root"):
     """JSON-string column → DataFrame[path string, value string].
 
-    Runs as an Arrow-batched generator over partitions; fully parallel, no
-    driver involvement. Feed the result to ``shred_to_dir`` or query it
-    directly (`groupBy("path").count()` etc.).
+    A ``mapInArrow`` kernel over partitions: each input batch becomes one
+    Arrow batch of ``(path, value)`` rows, built from two Python lists with
+    no pandas frame; fully parallel, no driver involvement. An undecodable
+    document fails its task. Feed the result to ``shred_to_dir`` or query
+    it directly (`groupBy("path").count()` etc.).
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
+    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
             paths: List[str] = []
             values: List[str] = []
-            for text in pdf[column]:
+            for text in batch.column(0).to_pylist():
                 if text is None:
                     continue
                 for leaf, value in shred_text(text, root):
                     paths.append(leaf)
                     values.append(value)
-            yield pd.DataFrame({"path": paths, "value": values})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(paths, pa.string()), pa.array(values, pa.string())],
+                names=["path", "value"],
+            )
 
     from hive_json_spark.operators.util import ensure_parallelism
 
-    return ensure_parallelism(df.select(column)).mapInPandas(
+    return ensure_parallelism(df.select(column)).mapInArrow(
         gen, schema="path string, value string"
     )
 
@@ -107,8 +126,14 @@ def shred_column(df, column: str, root: str = "root"):
 def shred_to_dir(shredded_df, out_dir: str) -> None:
     """Write (path, value) rows as one directory per leaf path.
 
-    ``partitionBy("path")`` is the distributed replacement for the
-    reference's per-path file-handle pool — each leaf path becomes
-    ``out_dir/path=<leaf>/part-*.txt`` written by all executors in parallel.
+    The distributed replacement for the reference's per-path file-handle
+    pool: an AQE rebalance by ``path`` (``RebalancePartitions``) gives each
+    leaf path one write task, so ``out_dir/path=<leaf>/`` holds one
+    ``part-*.txt`` file, as the reference writes one file per leaf, instead
+    of one per read task. A leaf larger than the advisory partition size is
+    split at map-output boundaries (``OptimizeSkewInRebalancePartitions``)
+    and gets one file per split, so a hot leaf read by several tasks is not
+    written by one. Leaf names are escaped as Hive partition values
+    (``%XX``).
     """
-    shredded_df.write.mode("overwrite").partitionBy("path").text(out_dir)
+    shredded_df.hint("rebalance", "path").write.mode("overwrite").partitionBy("path").text(out_dir)

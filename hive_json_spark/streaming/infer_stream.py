@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hive_json_spark.infer import InferResult, infer_schema_of_column
-from hive_json_spark.types import HType, canonicalize, merge_types
+from hive_json_spark.types import canonicalize, merge_types
 
 
 def infer_schema_streaming(

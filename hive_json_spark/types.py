@@ -42,7 +42,7 @@ import json
 import re
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Iterator, Mapping, Optional, Sequence, Tuple, Union as TUnion
+from typing import Iterator, Mapping, Optional, Tuple, Union as TUnion
 
 __all__ = [
     "Kind",

@@ -38,3 +38,39 @@ def test_every_module_level_definition_is_referenced():
             if words[node.name] - WORD.findall(own_line).count(node.name) == 0:
                 unreferenced.append(f"{path.relative_to(ROOT)}::{node.name}")
     assert not unreferenced, f"defined but never referenced: {unreferenced}"
+
+
+def _names_used(tree: ast.Module) -> set[str]:
+    """Names a module loads: bare names, plus the names inside string
+    constants that parse as expressions (quoted annotations, ``__all__``)."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            try:
+                expr = ast.parse(node.value, mode="eval")
+            except SyntaxError:
+                continue
+            used.update(n.id for n in ast.walk(expr) if isinstance(n, ast.Name))
+    return used
+
+
+def test_every_module_level_import_is_used():
+    # __init__.py imports are the package's re-exports
+    unused = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        used = _names_used(tree)
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in used:
+                    unused.append(f"{path.relative_to(ROOT)}::{name}")
+    assert not unused, f"imported but never used: {unused}"

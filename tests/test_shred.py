@@ -1,10 +1,20 @@
 """Shredder parity: the javadoc example (JsonShredder.java:40-48), null
-skipping, array funneling, and the distributed (path,value) generator."""
+skipping, array funneling, the distributed (path,value) generator and its
+one-directory-per-leaf write, and the pinned behaviour on malformed input."""
 
+import collections
+import gzip
 import json
+import os
+import sys
+from pathlib import Path
+from urllib.parse import unquote
 
-from hive_json_spark.shred import shred_column, shred_files_local, shred_records
-from hive_json_spark.types import loads_first
+import pytest
+from hypothesis import given, settings, strategies as st
+
+from hive_json_spark.shred import shred_column, shred_files_local, shred_records, shred_to_dir
+from hive_json_spark.types import JsonNumber, loads_first
 
 
 def test_shred_javadoc_example(tmp_path):
@@ -124,3 +134,224 @@ def test_cli_shred_json(tmp_path, capsys):
 
     assert cli.shred_json([str(src), "-o"]) == 2
     assert capsys.readouterr().err.startswith("usage: shred-json")
+
+
+
+# --- the walk: equal to the plain isinstance walk, and iterative -------------
+
+
+def _spec_shred_records(doc, root="root"):
+    """The isinstance-dispatch walk ``shred_records`` replaced, kept as its spec."""
+    stack = [(root, doc)]
+    while stack:
+        name, node = stack.pop()
+        if node is None:
+            continue
+        if isinstance(node, bool):
+            yield name, "true" if node else "false"
+        elif isinstance(node, dict):
+            for key in reversed(list(node)):
+                stack.append((f"{name}.{key}", node[key]))
+        elif isinstance(node, list):
+            for child in reversed(node):
+                stack.append((f"{name}.list", child))
+        else:
+            yield name, str(node)
+
+
+_numbers = st.one_of(
+    st.integers(-(2**70), 2**70).map(lambda n: JsonNumber(str(n))),
+    st.sampled_from(["1.50", "-0.0", "1e5", "2E-400", "0"]).map(JsonNumber),
+)
+_leaves = st.one_of(st.none(), st.booleans(), st.text(max_size=6), _numbers)
+_documents = st.recursive(
+    _leaves,
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=4),
+        st.dictionaries(st.text(max_size=4), inner, max_size=4),
+    ),
+    max_leaves=25,
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_documents)
+def test_shred_records_matches_spec_walk(doc):
+    got = list(shred_records(doc))
+    assert got == list(_spec_shred_records(doc))
+    # plain str values: the UDTF pickles its rows to the JVM, which cannot
+    # unpickle a JsonNumber
+    assert all(type(value) is str for _, value in got)
+    assert list(shred_records(doc, "r")) == list(_spec_shred_records(doc, "r"))
+
+
+def test_shred_records_is_iterative():
+    # built in Python, not parsed: 5000 levels is far past the recursion limit
+    doc = leaf = {}
+    for _ in range(4999):
+        leaf["k"] = {}
+        leaf = leaf["k"]
+    leaf["k"] = [JsonNumber("7")]
+    assert list(shred_records(doc)) == [("root" + ".k" * 5000 + ".list", "7")]
+
+
+# --- the distributed write: one directory per leaf, one file per leaf --------
+
+
+def _leaf_dirs(out_dir: Path) -> dict[str, list[Path]]:
+    """``path=<leaf>`` directory (un-escaped leaf) → its part files."""
+    return {
+        unquote(d.name[len("path="):]): sorted(d.glob("part-*"))
+        for d in out_dir.iterdir()
+        if d.name.startswith("path=")
+    }
+
+
+# keys that need escaping as Hive partition values, nulls, nested lists and
+# two concatenated documents on one line
+ESCAPE_DOCS = (
+    '{"a b": 1, "k=v": true, "p%q": null, "naïve": "été", "n": null}\n'
+    '{"m": [[1, 2], [3, null], []], "a b": 2.50}{"m": [[4]], "k=v": false}\n'
+    '{"deep": {"q?": {"r#": ["u", {"s:": false}]}}, "a b": null, "%2F": "pct"}\n'
+    "null\n"
+)
+# a "/" in a key is no file name for the local shredder, so these leaves are
+# checked against the walk itself
+SLASH_DOCS = '{"x/y": "s", "z": {"/": [1, "w"]}}\n{"x/y": "t"}\n'
+
+
+def test_shred_to_dir_matches_local_per_leaf(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "escape.json").write_text(ESCAPE_DOCS, encoding="utf-8")
+    (src / "slash.json").write_text(SLASH_DOCS, encoding="utf-8")
+    local = tmp_path / "local"
+    assert shred_files_local(str(src / "escape.json"), str(local)) == 5
+    expected = {
+        f.name[: -len(".txt")]: collections.Counter(f.read_text(encoding="utf-8").splitlines())
+        for f in local.iterdir()
+    }
+    assert "root.m.list.list" in expected and "root.p%q" not in expected
+    for doc in (loads_first(line) for line in SLASH_DOCS.splitlines()):
+        for leaf, value in shred_records(doc):
+            expected.setdefault(leaf, collections.Counter())[value] += 1
+    assert {"root.x/y", "root.z./.list"} <= set(expected)
+
+    out = tmp_path / "dist"
+    shred_to_dir(shred_column(spark.read.text(str(src)), "value"), str(out))
+    got = {
+        leaf: collections.Counter(
+            line for part in parts for line in part.read_text(encoding="utf-8").splitlines()
+        )
+        for leaf, parts in _leaf_dirs(out).items()
+    }
+    assert set(got) == set(expected)
+    for leaf in expected:
+        assert got[leaf] == expected[leaf], leaf
+
+
+def test_shred_to_dir_one_file_per_leaf(spark, tmp_path):
+    # several read tasks each hold every leaf; the write still gives one
+    # file per leaf path (it was one per read task and leaf)
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    for i in range(6):
+        docs = [{"a": i * 100 + j, "b": {"c": [j, "x"]}, "d": None} for j in range(50)]
+        (src_dir / f"part{i}.json").write_text("".join(json.dumps(d) + "\n" for d in docs))
+    df = spark.read.text(str(src_dir)).repartition(6)
+    out = tmp_path / "out"
+    shred_to_dir(shred_column(df, "value"), str(out))
+    dirs = _leaf_dirs(out)
+    assert {leaf: len(parts) for leaf, parts in dirs.items()} == {
+        "root.a": 1, "root.b.c.list": 1,
+    }
+    assert len((dirs["root.b.c.list"][0]).read_text().splitlines()) == 600
+
+
+def test_shred_to_dir_splits_a_hot_leaf(spark, tmp_path):
+    # one leaf holds most values and the input is read as several splits:
+    # the rebalance splits the hot leaf at map-output boundaries once it is
+    # larger than the advisory partition size
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    for i in range(4):
+        lines = [json.dumps({"hot": "v" * 40 + str(j)}) for j in range(2000)]
+        lines.append(json.dumps({"cold": i}))
+        (src_dir / f"part{i}.json").write_text("\n".join(lines) + "\n")
+    df = spark.read.text(str(src_dir))
+    assert df.rdd.getNumPartitions() >= 2
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        out = tmp_path / "out"
+        shred_to_dir(shred_column(df, "value"), str(out))
+    finally:
+        spark.conf.set(key, before)
+    dirs = _leaf_dirs(out)
+    assert set(dirs) == {"root.hot", "root.cold"}
+    assert len(dirs["root.hot"]) > 1
+    assert sum(len(p.read_text().splitlines()) for p in dirs["root.hot"]) == 8000
+    assert len(dirs["root.cold"]) == 1
+
+
+# --- malformed input on the shred surface ------------------------------------
+
+
+def test_shred_malformed_input_pinned(spark, tmp_path):
+    """Pinned behaviour of ``shred_files_local`` and of ``shred_column`` +
+    ``shred_to_dir`` (one row per line) on malformed input. A failed
+    distributed shred leaves no part file under its output dir; a failed
+    local shred leaves the files of the values before the failure."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    failures = (Py4JJavaError, PySparkException)
+    full = gzip.compress(b'{"a": 1}\n{"a": 2}\n' * 200)
+    inputs = {
+        "truncated.json.gz": full[: len(full) // 2],
+        "bad_utf8.json": b'{"a": "\xff\xfe"}\n',
+        "mid.json": b'{"a":1}{"a":2}{"a":{"a":3}\n{"a":4}\n',
+        "deep.json": b"[" * 1000 + b"]" * 1000 + b"\n",
+        "empty.json": b"",
+    }
+    for name, data in inputs.items():
+        (tmp_path / name).write_bytes(data)
+
+    def distributed(name):
+        out = tmp_path / ("dist_" + name)
+        shred_to_dir(shred_column(spark.read.text(str(tmp_path / name)), "value"), str(out))
+        return out
+
+    # every write task starts after the rebalance's map stage, so a failed
+    # read-side task leaves no committed part file behind
+    for name in ("truncated.json.gz", "bad_utf8.json", "mid.json", "deep.json"):
+        with pytest.raises(failures):
+            distributed(name)
+        assert not list((tmp_path / ("dist_" + name)).rglob("part-*")), name
+    out = distributed("empty.json")
+    assert _leaf_dirs(out) == {} and not list(out.rglob("part-*"))
+
+    # the local shredder: a truncated .gz or invalid UTF-8 raises before any
+    # value; a bad document raises after the values of the documents before
+    # it; 1000-deep nesting exceeds the default recursion limit (pinned, as
+    # a library used by other tests may leave the limit raised)
+    def local(name):
+        return shred_files_local(str(tmp_path / name), str(tmp_path / ("local_" + name)))
+
+    with pytest.raises(EOFError):
+        local("truncated.json.gz")
+    with pytest.raises(UnicodeDecodeError):
+        local("bad_utf8.json")
+    with pytest.raises(ValueError):
+        local("mid.json")
+    assert (tmp_path / "local_mid.json" / "root.a.txt").read_text() == "1\n2\n"
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        with pytest.raises(RecursionError):
+            local("deep.json")
+    finally:
+        sys.setrecursionlimit(limit)
+    assert local("empty.json") == 0
+    assert os.listdir(tmp_path / "local_empty.json") == []
