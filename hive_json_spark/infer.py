@@ -23,6 +23,19 @@ Scale design (100 TB):
   JsonSchemaFinder.java:234-236). Read with ``spark.read.text(...,
   wholetext=True)``: one row per *file*, decompressed by Hadoop's codec
   from the ``.gz`` suffix; throughput scales with file count.
+- **Who spreads the input.** ``infer_schema`` folds its file read as Spark
+  plans it, with no ``ensure_parallelism`` probe (~45 ms of driver work per
+  call). Spark packs files against ``totalBytes / cores`` with every file
+  costing at least ``openCostInBytes`` (4 MB), so small files land a few
+  per partition and the busiest task holds about ceil(files / cores) of
+  them, what any spread of unsplittable files leaves on the busiest core
+  (nine files on four cores: three, packed 3/3/3 or 2/2/2/2/1). A
+  one-file ``wholetext`` read is one row, which a round-robin could only
+  move whole, and an NDJSON read larger than 4 MB × cores is byte-split
+  across the cores already. ``infer_schema_of_column`` and
+  ``infer_schema_by_group`` take arbitrary frames, e.g. a single-row-group
+  parquet column that plans many splits but reads on one core, so they
+  call ``ensure_parallelism`` before the fold.
 - Every entry point, in-table JSON columns and per-group inference
   included, ends in the same ``mapInPandas`` fold over Arrow batches — one
   pickled partial per partition (per group and partition when grouped) —
@@ -176,10 +189,10 @@ def _partials(
 ):
     """One pickled partial per partition — per group seen in the partition
     when ``group_col`` is given. Each batch folds its *distinct* values
-    once, scaled by frequency (JSON columns are often low-cardinality)."""
+    once, scaled by frequency (JSON columns are often low-cardinality).
+    ``df`` is folded as it is partitioned: spreading it is the caller's
+    decision."""
     import pandas as pd
-
-    from hive_json_spark.operators.util import ensure_parallelism
 
     keys = [group_col] if group_col else []
     schema = "".join(f"{k} {dict(df.dtypes)[k]}, " for k in keys) + "partial binary"
@@ -199,7 +212,7 @@ def _partials(
         out["partial"] = [pickle.dumps(a) for a in accs.values()]
         yield pd.DataFrame(out)
 
-    return ensure_parallelism(df.select(*keys, column)).mapInPandas(fold_partition, schema)
+    return df.select(*keys, column).mapInPandas(fold_partition, schema)
 
 
 def infer_schema(
@@ -233,8 +246,9 @@ def infer_schema(
         # Spark's file index drops such files silently (a directory named so
         # is still listed); a named input must not vanish
         raise ValueError(f"Spark skips files named with a leading '_' or '.': {hidden}")
-    df = spark.read.text(paths, wholetext=not ndjson)
-    return infer_schema_of_column(df, "value", on_error=on_error)
+    # no ensure_parallelism: Spark's file packing already spreads this read
+    # (see the module docstring)
+    return _infer_column(spark.read.text(paths, wholetext=not ndjson), "value", on_error)
 
 
 # max partials merged in one place (one executor task or the driver); above
@@ -255,8 +269,22 @@ def infer_schema_of_column(
     pickled partial per partition; the driver merges #partitions partials.
     Each partition folds only its *distinct* values (scaled by frequency).
     Nothing is cached: every call folds the column as it is now. A column
-    with no documents infers no type (``htype=None``).
+    with no documents infers no type (``htype=None``). The column is spread
+    first (``ensure_parallelism``) when its frame cannot feed the cores,
+    e.g. a single-row-group parquet scan.
     """
+    from hive_json_spark.operators.util import ensure_parallelism
+
+    return _infer_column(
+        ensure_parallelism(df.select(column)), column, on_error, max_struct_fields
+    )
+
+
+def _infer_column(
+    df, column: str, on_error: str, max_struct_fields: Optional[int] = None
+) -> InferResult:
+    """The fold, the tree merge and the driver merge of ``df[column]``, over
+    the partitions ``df`` arrives with."""
     import pandas as pd
 
     def merge_round(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -459,9 +487,12 @@ def infer_schema_by_group(
             }
         )
 
+    from hive_json_spark.operators.util import ensure_parallelism
+
     gtype = dict(df.dtypes)[group_col]
+    spread = ensure_parallelism(df.select(group_col, column))
     return (
-        _partials(df, column, on_error, group_col=group_col)
+        _partials(spread, column, on_error, group_col=group_col)
         .groupBy(group_col)
         .applyInPandas(
             merge_group,

@@ -110,8 +110,10 @@ def q_from_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shred_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed shred (JsonShredder semantics) summarized per leaf path;
     min/max compare the *lexical* value strings, same as the shred files."""
+    from hive_json_spark.operators.util import ensure_parallelism
+
     events = load_table(spark, sf_dir, "events")
-    shredded = shred_column(events, "props")
+    shredded = shred_column(ensure_parallelism(events.select("props")), "props")
     return shredded.groupBy("path").agg(
         F.count("*").alias("n_values"),
         F.min("value").alias("min_value"),

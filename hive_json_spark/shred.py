@@ -69,7 +69,13 @@ def shred_text(text: str, root: str = "root") -> Iterator[Tuple[str, str]]:
 
 
 def shred_files_local(paths: Sequence[str] | str, out_dir: str = ".") -> int:
-    """CLI-parity shredder: one ``<path>.txt`` per leaf path under out_dir."""
+    """CLI-parity shredder: one ``<path>.txt`` per leaf path under out_dir.
+
+    A ``/`` in a leaf path (a JSON key holding one) is written as ``%2F`` in
+    the file name, the one byte a file name cannot hold; every other leaf
+    keeps the reference's file name byte for byte. A key holding a literal
+    ``%2F`` therefore shares its file with the same key spelled with
+    ``/``."""
     os.makedirs(out_dir, exist_ok=True)
     handles = {}
     count = 0
@@ -81,7 +87,8 @@ def shred_files_local(paths: Sequence[str] | str, out_dir: str = ".") -> int:
                     for leaf, value in shred_records(doc):
                         h = handles.get(leaf)
                         if h is None:
-                            h = open(os.path.join(out_dir, leaf + ".txt"), "a", encoding="utf-8")
+                            name = leaf.replace("/", "%2F") + ".txt"
+                            h = open(os.path.join(out_dir, name), "a", encoding="utf-8")
                             handles[leaf] = h
                         h.write(value + "\n")
     finally:
@@ -97,7 +104,11 @@ def shred_column(df, column: str, root: str = "root"):
     Arrow batch of ``(path, value)`` rows, built from two Python lists with
     no pandas frame; fully parallel, no driver involvement. An undecodable
     document fails its task. Feed the result to ``shred_to_dir`` or query
-    it directly (`groupBy("path").count()` etc.).
+    it directly (`groupBy("path").count()` etc.). The kernel runs over the
+    partitions ``df`` arrives with: a file read is already spread by
+    Spark's file packing, and a caller holding a frame that may not be
+    (a single-row-group parquet scan) passes it through
+    ``ensure_parallelism`` first.
     """
     import pyarrow as pa
 
@@ -116,11 +127,7 @@ def shred_column(df, column: str, root: str = "root"):
                 names=["path", "value"],
             )
 
-    from hive_json_spark.operators.util import ensure_parallelism
-
-    return ensure_parallelism(df.select(column)).mapInArrow(
-        gen, schema="path string, value string"
-    )
+    return df.select(column).mapInArrow(gen, schema="path string, value string")
 
 
 def shred_to_dir(shredded_df, out_dir: str) -> None:

@@ -261,8 +261,13 @@ class StringT(HType):
     def merged_with(self, other: HType) -> HType:
         # differing string kinds decay to plain string (StringType.java:52-57)
         if isinstance(other, StringT) and other.str_kind is not self.str_kind:
-            return StringT(Kind.STRING)
+            return _STRING
         return self
+
+
+# the one plain-string leaf: induction and decay both return it, so the fold
+# can recognise a string accumulator by identity
+_STRING = StringT(Kind.STRING)
 
 
 @dataclass(frozen=True)
@@ -475,6 +480,46 @@ def _pick_number(text: str) -> NumericT:
     return _num(Kind.DOUBLE, 0, 0)
 
 
+# the most digits (sign excluded) an integer literal can have and still be
+# certain to pick a kind no wider than this one: 99 is a byte, 9999 a short,
+# 999999999 an int, 18 nines a long; up to 38 digits pick at most DECIMAL,
+# beyond that FLOAT or DOUBLE by value, which only DOUBLE covers
+_CERTAIN_INT_DIGITS = {
+    Kind.BYTE: 2,
+    Kind.SHORT: 4,
+    Kind.INT: 9,
+    Kind.LONG: 18,
+    Kind.DECIMAL: MAX_DECIMAL_DIGITS,
+    Kind.FLOAT: MAX_DECIMAL_DIGITS,
+    Kind.DOUBLE: float("inf"),
+}
+
+
+def _covers(acc: NumericT, text: str) -> bool:
+    """True only if ``_pick_number(text)`` cannot widen ``acc``, judged from
+    the literal's shape without the regex or ``int()``; False means "not
+    known" and the caller runs the full pick. ``text`` is a JSON number
+    literal, as every ``JsonNumber`` the decoder makes is."""
+    kind = acc.num_kind
+    if "e" in text or "E" in text:
+        return kind is Kind.DOUBLE  # exponent: FLOAT or DOUBLE by value
+    sign = text.startswith("-")
+    dot = text.find(".")
+    if dot < 0:
+        digits = len(text) - sign
+        return digits <= acc.int_digits and digits <= _CERTAIN_INT_DIGITS[kind]
+    int_digits = dot - sign
+    scale = len(text) - dot - 1
+    # a literal of more than 38 digits picks FLOAT or DOUBLE, which a DECIMAL
+    # does not cover even when merges left it int_digits + scale > 38
+    return (
+        kind.rank >= Kind.DECIMAL.rank
+        and int_digits + scale <= MAX_DECIMAL_DIGITS
+        and int_digits <= acc.int_digits
+        and scale <= acc.scale
+    )
+
+
 def _pick_string(text: str, detect_dates: bool = False) -> StringT:
     if _TIMESTAMP_RE.match(text):
         return StringT(Kind.TIMESTAMP)
@@ -482,7 +527,7 @@ def _pick_string(text: str, detect_dates: bool = False) -> StringT:
         return StringT(Kind.DATE)
     if _HEX_RE.match(text):
         return StringT(Kind.BINARY)
-    return StringT(Kind.STRING)
+    return _STRING
 
 
 def infer_type(value: JsonValue, detect_dates: bool = False) -> HType:
@@ -554,7 +599,6 @@ def merge_types(previous: Optional[HType], incoming: Optional[HType]) -> Optiona
     return UnionT((previous, incoming))
 
 
-_STRING = StringT(Kind.STRING)
 # one shallow type per parsed-value class: ``subsumes`` looks only at the
 # other side's kind or class, so a probe picks the same union branch as
 # ``UnionT.merged_with`` given the value's full type
@@ -590,7 +634,12 @@ def merge_value(acc: Optional[HType], doc: JsonValue) -> Optional[HType]:
         widened = False
         for name, value in doc.items():
             old = ours.get(name)
-            new = infer_type(value) if old is None else merge_value(old, value)
+            if old is None:
+                new = infer_type(value)
+            elif value is None or (old is _STRING and type(value) is str):
+                continue  # absorbed unchanged
+            else:
+                new = merge_value(old, value)
             if new is not old:
                 ours[name] = new
                 widened = True
@@ -604,6 +653,8 @@ def merge_value(acc: Optional[HType], doc: JsonValue) -> Optional[HType]:
         if k is Kind.BINARY:
             return acc if _HEX_RE.match(doc) else _STRING
     elif cls is JsonNumber and acc_cls is NumericT:
+        if _covers(acc, doc):
+            return acc
         t = _pick_number(doc)
         if (
             t.num_kind.rank <= acc.num_kind.rank

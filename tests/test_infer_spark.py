@@ -66,6 +66,51 @@ def test_distributed_whole_file_mode_gz(spark, corpus):
     assert str(r.htype) == EXPECTED
 
 
+@pytest.mark.parametrize(
+    "files,ndjson", [(9, False), (1, False), (1, True)], ids=["9-gz", "1-gz", "1-ndjson"]
+)
+def test_file_discovery_is_one_job_with_no_exchange(spark, tmp_path, monkeypatch, files, ndjson):
+    # the file read is folded as Spark packs it: no ensure_parallelism
+    # round-robin in front of the fold, and no job but the fold's own
+    import uuid
+
+    import hive_json_spark.infer as infer_mod
+
+    sep = "\n" if ndjson else ""
+    text = sep.join(json.dumps(doc) for doc in CORPUS_DOCS) + "\n"
+    paths = []
+    for i in range(files):
+        if ndjson:
+            path = tmp_path / f"part{i}.json"
+            path.write_text(text)
+        else:
+            path = tmp_path / f"part{i}.json.gz"
+            with gzip.open(path, "wt") as f:
+                f.write(text)
+        paths.append(str(path))
+    folded = []
+    real_partials = infer_mod._partials
+
+    def spy(df, *args, **kwargs):
+        folded.append(real_partials(df, *args, **kwargs))
+        return folded[-1]
+
+    monkeypatch.setattr(infer_mod, "_partials", spy)
+    sc = spark.sparkContext
+    group = f"infer-files-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "file discovery job count")
+    try:
+        r = infer_schema(spark, paths, ndjson=ndjson)
+    finally:
+        sc.setJobGroup(None, None)
+    assert r.records == len(CORPUS_DOCS) * files
+    assert str(r.htype) == EXPECTED
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    (partials,) = folded
+    plan = partials._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
 def test_whole_file_hidden_names_raise(spark, tmp_path):
     """Spark's file index silently drops files whose name starts with '_'
     or '.'; a file the caller named, directly or through a glob, must

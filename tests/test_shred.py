@@ -215,8 +215,7 @@ ESCAPE_DOCS = (
     '{"deep": {"q?": {"r#": ["u", {"s:": false}]}}, "a b": null, "%2F": "pct"}\n'
     "null\n"
 )
-# a "/" in a key is no file name for the local shredder, so these leaves are
-# checked against the walk itself
+# a "/" in a key: the local shredder names its file with "%2F"
 SLASH_DOCS = '{"x/y": "s", "z": {"/": [1, "w"]}}\n{"x/y": "t"}\n'
 
 
@@ -225,16 +224,18 @@ def test_shred_to_dir_matches_local_per_leaf(spark, tmp_path):
     src.mkdir()
     (src / "escape.json").write_text(ESCAPE_DOCS, encoding="utf-8")
     (src / "slash.json").write_text(SLASH_DOCS, encoding="utf-8")
-    local = tmp_path / "local"
-    assert shred_files_local(str(src / "escape.json"), str(local)) == 5
-    expected = {
-        f.name[: -len(".txt")]: collections.Counter(f.read_text(encoding="utf-8").splitlines())
-        for f in local.iterdir()
-    }
+    expected = {}
+    for name, docs in (("escape", 5), ("slash", 2)):
+        local = tmp_path / f"local-{name}"
+        assert shred_files_local(str(src / f"{name}.json"), str(local)) == docs
+        for f in local.iterdir():
+            leaf = f.name[: -len(".txt")]
+            if name == "slash":
+                leaf = leaf.replace("%2F", "/")
+            expected[leaf] = collections.Counter(f.read_text(encoding="utf-8").splitlines())
     assert "root.m.list.list" in expected and "root.p%q" not in expected
-    for doc in (loads_first(line) for line in SLASH_DOCS.splitlines()):
-        for leaf, value in shred_records(doc):
-            expected.setdefault(leaf, collections.Counter())[value] += 1
+    assert "root.%2F" in expected
+    assert (tmp_path / "local-slash" / "root.x%2Fy.txt").read_text() == "s\nt\n"
     assert {"root.x/y", "root.z./.list"} <= set(expected)
 
     out = tmp_path / "dist"

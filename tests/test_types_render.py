@@ -2,12 +2,16 @@
 
 import json
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from hive_json_spark.types import (
     JsonNumber,
+    Kind,
     MapT,
     NullT,
+    NumericT,
+    _covers,
+    _pick_number,
     canonicalize,
     decay_wide_structs,
     infer_type,
@@ -167,7 +171,8 @@ def test_merge_associative_up_to_canonical_order(a, b, c):
 
 # leaves that reach merge_value's fast paths: timestamp / hex / plain
 # strings (and near misses), integers in every size class, more than 38
-# digits, scientific notation (float, negative → double, underflow)
+# digits, scientific notation (float, negative → double, underflow, E),
+# -0, and decimals whose int + fraction digits sit at or across 38
 fold_leaves = (
     st.none()
     | st.booleans()
@@ -194,6 +199,19 @@ fold_leaves = (
         st.just(10**40),
     ).map(lambda i: JsonNumber(str(i)))
     | st.sampled_from(["1e5", "-1e5", "1E-400", "1.5", "-0.25", "123.4567"]).map(JsonNumber)
+    | st.sampled_from(
+        [
+            "-0",
+            "2E3",
+            "-2.5E-3",
+            "1E400",
+            "12345678901234567890",
+            "0." + "1" * 30,
+            "1" * 20 + "." + "1" * 18,
+            "1" * 20 + "." + "1" * 30,
+            "-" + "9" * 20 + "." + "9" * 30,
+        ]
+    ).map(JsonNumber)
     | st.floats(allow_nan=False, allow_infinity=False).map(lambda f: JsonNumber(repr(f)))
 )
 # a small key alphabet, so documents share fields and unions form
@@ -250,6 +268,47 @@ def test_merge_value_map_accumulator(vs):
 def test_merge_value_plain_python_numbers(vs):
     # plain int/float values (not parsed lexically) take the fallback
     assert_fused_fold(None, vs)
+
+
+# JSON number literals: every size class, signs, fractions and exponents
+number_literals = st.from_regex(
+    r"-?(0|[1-9][0-9]{0,49})(\.[0-9]{1,40})?([eE][-+]?[0-9]{1,3})?", fullmatch=True
+) | st.sampled_from(
+    [
+        "-0", "99", "-99", "127", "-128", "128", "9999", "32767", "-32768",
+        "999999999", "2147483647", "2147483648", "9" * 18, "9223372036854775807",
+        "9223372036854775808", "12345678901234567890", "0." + "1" * 30,
+        "1" * 20 + "." + "1" * 30, "1" * 38, "1" * 39, "1E5", "-1e5",
+    ]
+)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(st.lists(number_literals, min_size=1, max_size=6), number_literals)
+@example(["12345678901234567890", "0." + "1" * 30], "1" * 20 + "." + "1" * 30)
+def test_covers_only_what_the_pick_cannot_widen(built, t):
+    # _covers lets merge_value skip the pick: sound only if the pick could
+    # not have widened the accumulator. decimal(50,30) above holds more
+    # than 38 digits, while a 50-digit literal picks float.
+    acc = None
+    for lit in built:
+        acc = merge_types(acc, _pick_number(lit))
+    if _covers(acc, t):
+        assert merge_types(acc, _pick_number(t)) == acc, (acc, t)
+
+
+def test_covers_the_common_literals():
+    assert _covers(NumericT(Kind.BYTE, 2, 0), "-99")
+    assert _covers(NumericT(Kind.INT, 5, 0), "70000")
+    assert _covers(NumericT(Kind.DECIMAL, 4, 2), "12.5")
+    assert _covers(NumericT(Kind.DOUBLE, 0, 0), "1e5")
+    # not covered: the pick widens, or only the full pick can tell
+    assert not _covers(NumericT(Kind.BYTE, 3, 0), "128")
+    assert not _covers(NumericT(Kind.LONG, 19, 0), "9223372036854775807")
+    assert not _covers(NumericT(Kind.FLOAT, 0, 0), "1e5")
+    assert not _covers(NumericT(Kind.LONG, 4, 0), "1.5")
+    assert not _covers(NumericT(Kind.DECIMAL, 20, 30), "1" * 20 + "." + "1" * 30)
+    assert not _covers(NumericT(Kind.DECIMAL, 50, 0), "1" * 50)
 
 
 def test_schema_diff_evolution():
