@@ -10,7 +10,8 @@ Layers
 - ``functions``   column-function pack (classifiers, text, vectors)
 - ``operators``   relational + dedup + similarity + text-analysis operators
 - ``streaming``   Structured Streaming schema-inference fold
-- ``sources``     readers (json/ndjson/gz corpora, from_json column loading)
+- ``sources``     parquet table catalog and footer reader (schema, rows, row
+                  groups); JSON corpora are read in ``infer`` and ``shred``
 """
 
 from hive_json_spark.types import (  # noqa: F401

@@ -24,18 +24,20 @@ Scale design (100 TB):
   wholetext=True)``: one row per *file*, decompressed by Hadoop's codec
   from the ``.gz`` suffix; throughput scales with file count.
 - **Who spreads the input.** ``infer_schema`` folds its file read as Spark
-  plans it, with no ``ensure_parallelism`` probe (~45 ms of driver work per
-  call). Spark packs files against ``totalBytes / cores`` with every file
-  costing at least ``openCostInBytes`` (4 MB), so small files land a few
-  per partition and the busiest task holds about ceil(files / cores) of
-  them, what any spread of unsplittable files leaves on the busiest core
-  (nine files on four cores: three, packed 3/3/3 or 2/2/2/2/1). A
-  one-file ``wholetext`` read is one row, which a round-robin could only
-  move whole, and an NDJSON read larger than 4 MB × cores is byte-split
-  across the cores already. ``infer_schema_of_column`` and
-  ``infer_schema_by_group`` take arbitrary frames, e.g. a single-row-group
-  parquet column that plans many splits but reads on one core, so they
-  call ``ensure_parallelism`` before the fold.
+  plans it, with no ``ensure_parallelism`` call, which would plan the read
+  and build its RDD only to count partitions (35-42 ms median driver time
+  on a nine-``.gz`` read, 4 cores). Spark packs files against
+  ``totalBytes / cores`` with every file costing at least
+  ``openCostInBytes`` (4 MB), so small files land a few per partition and
+  the busiest task holds about ceil(files / cores) of them, what any
+  spread of unsplittable files leaves on the busiest core (nine files on
+  four cores: three, packed 3/3/3 or 2/2/2/2/1). A one-file ``wholetext``
+  read is one row, which a round-robin could only move whole, and an
+  NDJSON read larger than 4 MB × cores is byte-split across the cores
+  already. ``infer_schema_of_column`` and ``infer_schema_by_group`` take
+  arbitrary frames, e.g. a single-row-group parquet column that plans
+  many splits but reads on one core, so they call ``ensure_parallelism``
+  before the fold.
 - Every entry point, in-table JSON columns and per-group inference
   included, ends in the same ``mapInPandas`` fold over Arrow batches — one
   pickled partial per partition (per group and partition when grouped) —

@@ -105,10 +105,10 @@ def shred_column(df, column: str, root: str = "root"):
     no pandas frame; fully parallel, no driver involvement. An undecodable
     document fails its task. Feed the result to ``shred_to_dir`` or query
     it directly (`groupBy("path").count()` etc.). The kernel runs over the
-    partitions ``df`` arrives with: a file read is already spread by
-    Spark's file packing, and a caller holding a frame that may not be
-    (a single-row-group parquet scan) passes it through
-    ``ensure_parallelism`` first.
+    partitions ``df`` arrives with. A caller whose frame may be narrower
+    than half the cores, in planned partitions (a small file or a single
+    ``.gz``) or in parquet row groups (a single-row-group file behind many
+    planned splits), passes it through ``ensure_parallelism`` first.
     """
     import pyarrow as pa
 

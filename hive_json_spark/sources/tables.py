@@ -11,6 +11,8 @@ and values match DuckDB's naive-TIMESTAMP view of the same file.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TABLES = (
@@ -87,37 +89,64 @@ def _force_nullable(dt):
     return dt
 
 
+def _flat_parquet_files(path: str) -> list[str] | None:
+    """The files of a flat local parquet layout: ``path`` itself, or the
+    ``*.parquet`` parts of a directory, sorted, with ``_``/``.`` sidecars
+    (``_SUCCESS``, ``.crc``) skipped as readers skip them. None for a
+    partitioned, mixed or empty directory: its footers cannot describe it
+    (a partition column lives in the directory names, not the files)."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for f in sorted(os.listdir(path)):
+        if f.startswith(("_", ".")):
+            continue
+        full = os.path.join(path, f)
+        if os.path.isdir(full) or not f.endswith(".parquet"):
+            return None
+        files.append(full)
+    return files or None
+
+
+def footer_counts(files: list[str]) -> tuple[int, int] | None:
+    """(rows, row groups) summed over the parquet footers of ``files``,
+    read on the driver with no Spark job. Read on every call, nothing
+    memoized: a file rewritten in place must not keep its old counts.
+    None when a footer cannot be read: ImportError (no pyarrow), OSError
+    (a missing file, a non-local filesystem), ValueError (pyarrow's
+    ArrowInvalid on non-parquet bytes). Anything else is a bug and
+    propagates."""
+    try:
+        import pyarrow.parquet as pq
+
+        rows = groups = 0
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            rows += md.num_rows
+            groups += md.num_row_groups
+        return rows, groups
+    except (ImportError, OSError, ValueError):
+        return None
+
+
 def parquet_schema(path: str):
     """Spark schema of a flat local parquet file/directory, read from ONE
     footer on the driver — no Spark job (each ``spark.read.parquet`` call
     otherwise launches a 1-task schema-inference job, ~25-50 ms plus a
-    driver round trip, per table per query execution). Same contract as
-    ``table_row_count``: recomputed from the files on every call, nothing
-    memoized; returns None (caller uses Spark inference) for nested/mixed
-    layouts, non-local filesystems, or any type outside the verified
-    whitelist. Equality with Spark's own inference — field names, types
-    AND nullability — is pinned per table per SF by tests/
+    driver round trip, per table per query execution). Recomputed from
+    the files on every call, nothing memoized; returns None (caller uses
+    Spark inference) for layouts ``_flat_parquet_files`` rejects,
+    unreadable footers, or any type outside the verified whitelist.
+    Equality with Spark's own inference — field names, types AND
+    nullability — is pinned per table per SF by tests/
     test_sources_roundtrip.py::test_parquet_footer_schema_matches_inference."""
-    import os
-
+    files = _flat_parquet_files(path)
+    if files is None:
+        return None
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            first = None
-            for f in sorted(os.listdir(path)):
-                if f.startswith(("_", ".")):
-                    continue  # _SUCCESS / .crc sidecars, ignored by readers
-                full = os.path.join(path, f)
-                if os.path.isdir(full) or not f.endswith(".parquet"):
-                    return None  # partitioned/mixed layout: infer instead
-                if first is None:
-                    first = full
-            if first is None:
-                return None
-        else:
-            first = path
-        pf = pq.ParquetFile(first)
+        pf = pq.ParquetFile(files[0])
         sch = pf.schema_arrow
         from pyspark.sql import types as T
 
@@ -179,40 +208,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Exact row count of a base table for dispatch probes.
 
-    Reads the parquet footer metadata on the driver (no Spark job) — the
-    same number ``df.count()`` returns via aggregate pushdown, minus the
+    Sums the parquet footers on the driver (no Spark job) — the same
+    number ``df.count()`` returns via aggregate pushdown, minus the
     ~0.25 s fixed job cost, which is pure overhead for limit-probe
-    dispatches that only compare the count to a threshold. Recomputed
-    from the input files on every call (nothing is memoized). Falls back
-    to a real count for layouts the footer walk cannot see (non-local
-    filesystems, non-parquet sources)."""
-    import os
-
+    dispatches that only compare the count to a threshold. Takes the
+    exact ``count()`` where the footers cannot answer: a partitioned,
+    mixed or empty layout (a flat walk would silently undercount) or an
+    unreadable footer (non-local filesystems, non-parquet sources)."""
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            parts = []
-            for f in os.listdir(path):
-                if f.startswith(("_", ".")):
-                    continue  # _SUCCESS / .crc sidecars, ignored by readers
-                full = os.path.join(path, f)
-                if os.path.isdir(full) or not f.endswith(".parquet"):
-                    # nested (partitioned) or mixed layout: the flat walk
-                    # would silently undercount — take the exact count()
-                    return load_table(spark, sf_dir, name).count()
-                parts.append(full)
-            if not parts:
-                raise FileNotFoundError(path)
-            return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        return pq.ParquetFile(path).metadata.num_rows
-    except (ImportError, OSError, ValueError):
-        # ImportError: no pyarrow; OSError: remote/odd filesystems;
-        # ValueError covers pyarrow's ArrowInvalid on non-parquet bytes.
-        # Anything else (a real bug) propagates instead of hiding behind
-        # the slow count() fallback.
+    files = _flat_parquet_files(path)
+    counts = footer_counts(files) if files is not None else None
+    if counts is None:
         return load_table(spark, sf_dir, name).count()
+    return counts[0]
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

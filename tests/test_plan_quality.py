@@ -537,68 +537,107 @@ def test_single_row_group_scan_is_repartitioned(spark, tmp_path):
     core (zipf-sf10 minhash signatures: 39 s single-core behind 24
     planned splits, 6 s after the fix). ensure_parallelism must see
     through the planned-split count via the parquet footer and
-    repartition anyway."""
+    repartition anyway — also under a directory whose name the file URI
+    escapes (``uri%20with%20space``), which the footer open must
+    unescape."""
+    import os
+
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from hive_json_spark.operators.util import ensure_parallelism
 
-    path = str(tmp_path / "one_rg.parquet")
     n = 50_000
-    pq.write_table(
-        pa.Table.from_pandas(
-            pd.DataFrame({"id": range(n), "text": ["word " * 40] * n})
-        ),
-        path,
-        row_group_size=n,  # ONE row group on purpose
+    data = pa.Table.from_pandas(
+        pd.DataFrame({"id": range(n), "text": ["word " * 40] * n})
     )
+    target = spark.sparkContext.defaultParallelism
+    floor = max(target // 2, 2)
     saved = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     try:
-        # derive the split size from the WRITTEN file size so the planned
-        # split count clears the trap-scenario floor on any core count —
-        # a fixed 64 KB split under-splits the few-hundred-KB compressed
-        # file on high-core machines (r7 ADVICE: environment-dependent
-        # precondition flake, not a product bug)
-        import os
-
-        target = spark.sparkContext.defaultParallelism
-        floor = max(target // 2, 2)
-        split = max(os.path.getsize(path) // (floor * 2), 1024)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        scan = spark.read.parquet(path)
-        planned = scan.rdd.getNumPartitions()
-        assert planned >= floor, (planned, floor, split)  # the trap scenario
-        fixed = ensure_parallelism(scan)
-        assert "RoundRobinPartitioning" in fixed._jdf.queryExecution().executedPlan().toString()
-        # the probe is footer-driven: the same data written with MANY row
-        # groups planned the same way is left alone (no spurious shuffle)
-        path2 = str(tmp_path / "many_rg.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame({"id": range(n), "text": ["word " * 40] * n})
-            ),
-            path2,
-            row_group_size=n // 64,
-        )
-        scan2 = spark.read.parquet(path2)
-        assert ensure_parallelism(scan2) is scan2
-        # rewritten in place as ONE row group, the same path is the trap
-        # again: the probe must read the footer as it is now
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame({"id": range(n), "text": ["word " * 40] * n})
-            ),
-            path2,
-            row_group_size=n,
-        )
-        rewritten = ensure_parallelism(spark.read.parquet(path2))
-        assert "RoundRobinPartitioning" in rewritten._jdf.queryExecution().executedPlan().toString()
+        for sub in ("uri_plain", "uri with space"):
+            base = tmp_path / sub
+            base.mkdir()
+            path = str(base / "one_rg.parquet")
+            pq.write_table(data, path, row_group_size=n)  # ONE row group on purpose
+            # derive the split size from the WRITTEN file size so the
+            # planned split count clears the trap-scenario floor on any
+            # core count — a fixed 64 KB split under-splits the
+            # few-hundred-KB compressed file on high-core machines (r7
+            # ADVICE: environment-dependent precondition flake, not a
+            # product bug)
+            split = max(os.path.getsize(path) // (floor * 2), 1024)
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+            scan = spark.read.parquet(path)
+            planned = scan.rdd.getNumPartitions()
+            assert planned >= floor, (sub, planned, floor, split)  # the trap scenario
+            fixed = ensure_parallelism(scan)
+            assert "RoundRobinPartitioning" in fixed._jdf.queryExecution().executedPlan().toString(), sub
+            # the probe is footer-driven: the same data written with MANY
+            # row groups planned the same way is left alone (no spurious
+            # shuffle)
+            path2 = str(base / "many_rg.parquet")
+            pq.write_table(data, path2, row_group_size=n // 64)
+            scan2 = spark.read.parquet(path2)
+            assert ensure_parallelism(scan2) is scan2, sub
+            # rewritten in place as ONE row group, the same path is the
+            # trap again: the probe must read the footer as it is now
+            pq.write_table(data, path2, row_group_size=n)
+            rewritten = ensure_parallelism(spark.read.parquet(path2))
+            assert "RoundRobinPartitioning" in rewritten._jdf.queryExecution().executedPlan().toString(), sub
     finally:
         if saved is None:
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
         else:
             spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
+
+
+def _keyed(spark):
+    from pyspark.sql import functions as F
+
+    return spark.range(0, 1000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
+
+
+def _text_scan(spark, tmp_path):
+    (tmp_path / "t.txt").write_text("a\nb\n")
+    return spark.read.text(str(tmp_path / "t.txt"))
+
+
+@pytest.mark.parametrize(
+    "kind, build",
+    [
+        ("kept", lambda spark, tmp_path: _keyed(spark)),
+        ("kept", lambda spark, tmp_path: spark.range(0, 1000, 1, 1).repartition(3)),
+        ("kept", lambda spark, tmp_path: _keyed(spark).persist()),
+        ("spread", _text_scan),
+    ],
+    ids=["hash_exchange", "round_robin_exchange", "persisted", "one_partition_text"],
+)
+def test_ensure_parallelism_decides_without_jobs(spark, tmp_path, kind, build):
+    """ensure_parallelism decides from the planned plan and the file
+    layout and runs nothing: building ``.rdd`` on a shuffled frame
+    finalizes its AQE plan, which would run the frame's exchanges as jobs
+    inside the helper. A frame that already holds a shuffle exchange (the
+    shuffle sets its partitioning) and a persisted frame come back as the
+    same object; a one-partition text scan, which no parquet footer
+    describes, is spread. Zero jobs either way."""
+    from hive_json_spark.operators.util import ensure_parallelism
+
+    df = build(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"ensure-parallelism-{kind}-{id(df)}"
+    sc.setJobGroup(group, kind)
+    try:
+        out = ensure_parallelism(df)
+    finally:
+        sc.setJobGroup(None, None)
+        df.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    if kind == "kept":
+        assert out is df
+    else:
+        assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()
 
 
 # --- scan-count budgets (the r8 sweep's regression pin) -----------------------
