@@ -93,6 +93,48 @@ def test_stateful_user_totals(spark, sf_dir, tmp_path):
     assert got == expected and len(got) > 0
 
 
+def test_stateful_stream_resumes_from_its_checkpoint(spark, tmp_path):
+    """Stop a checkpointed stateful stream after batch k, add files, restart
+    it from the checkpoint: it resumes at batch k with the state it left,
+    and the totals it ends with are the batch fold of every file."""
+    from hive_json_spark.streaming import stateful_user_totals
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    schema = "user_id bigint, value double"
+    rows = [(i % 7, i * 0.5) for i in range(120)]  # every user in every file
+    files, k = 4, 2
+    latest, batches = {}, []
+
+    def sink(df, batch_id):
+        batches.append(batch_id)
+        latest.update({r.user_id: (r.n_events, r.total_value) for r in df.collect()})
+
+    def run(first, last):
+        for i in range(first, last):
+            part = spark.createDataFrame(rows[i::files], schema)
+            part.coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        q = (
+            stateful_user_totals(stream).writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+
+    run(0, k)
+    assert batches == list(range(k))
+    run(k, files)
+    assert batches == list(range(files))
+    expected = {}
+    for user, value in rows:
+        n, total = expected.get(user, (0, 0.0))
+        expected[user] = (n + 1, total + value)
+    assert latest == expected
+
+
 def test_continuous_rollup_incremental_matches_batch(spark, sf_dir, tmp_path):
     from hive_json_spark.sources import load_table
     from hive_json_spark.streaming import continuous_rollup

@@ -92,6 +92,43 @@ def test_iter_json_documents_scalars_and_empty():
     assert len(vals) == 3
 
 
+def _tagged(v):
+    """A parsed value with every scalar's type spelled out (a JsonNumber
+    compares equal to the str of its literal)."""
+    if isinstance(v, dict):
+        return ("dict", [(k, _tagged(x)) for k, x in v.items()])
+    if isinstance(v, list):
+        return ("list", [_tagged(x) for x in v])
+    return (type(v).__name__, v)
+
+
+def test_parsing_from_threads_matches_serial():
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    texts = [
+        "".join(
+            json.dumps({"id": i, "k": {"a": [j, f"s{j}", None, True], "b": 1.5e3 * j}}) + "\n"
+            for j in range(i % 5 + 1)
+        )
+        for i in range(400)
+    ]
+
+    def parse(text):
+        return (_tagged(loads_first(text)), [_tagged(d) for d in iter_json_documents(text)])
+
+    serial = [parse(t) for t in texts]
+    assert serial[7][0][1][0] == ("id", ("JsonNumber", "7"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as the interpreter can
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            runs = [pool.submit(lambda: [parse(t) for t in texts]) for _ in range(8)]
+            assert all(r.result() == serial for r in runs)
+    finally:
+        sys.setswitchinterval(interval)
+
+
 # --- Spark type mapping ------------------------------------------------------
 
 def test_to_spark_type_shapes():
