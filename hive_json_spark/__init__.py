@@ -6,7 +6,7 @@ Layers
 ------
 - ``types``       pure-Python Hive type lattice (inference + merge + render)
 - ``infer``       distributed schema inference (one Arrow mapInPandas lattice fold)
-- ``shred``       distributed JSON shredding (explode to (path, value) rows)
+- ``shred``       distributed JSON shredding (per-leaf (path, values) column chunks)
 - ``functions``   column-function pack (classifiers, text, vectors)
 - ``operators``   relational + dedup + similarity + text-analysis operators
 - ``streaming``   Structured Streaming schema-inference fold

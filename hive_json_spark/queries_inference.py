@@ -108,16 +108,17 @@ def q_from_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_shred_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed shred (JsonShredder semantics) summarized per leaf path;
-    min/max compare the *lexical* value strings, same as the shred files."""
+    """Distributed shred (JsonShredder semantics) summarized per leaf path,
+    aggregated over the column chunks without exploding them; min/max
+    compare the *lexical* value strings, same as the shred files."""
     from hive_json_spark.operators.util import ensure_parallelism
 
     events = load_table(spark, sf_dir, "events")
     shredded = shred_column(ensure_parallelism(events.select("props")), "props")
     return shredded.groupBy("path").agg(
-        F.count("*").alias("n_values"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
+        F.sum(F.size("values")).cast("bigint").alias("n_values"),
+        F.min(F.array_min("values")).alias("min_value"),
+        F.max(F.array_max("values")).alias("max_value"),
     )
 
 

@@ -133,11 +133,6 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # v2 commits task output by direct rename into the destination dir
-        # (v1 does a second job-level rename pass) — halves the fixed cost
-        # of the many small state/sink writes; task-commit atomicity is
-        # unchanged, which is the property the streaming sinks rely on
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off by default (test/CI noise); bench.py turns it on to read

@@ -12,18 +12,21 @@ explicit stack, so the walk's depth is bounded by memory, not the recursion
 limit. ``shred_files_local`` reproduces the CLI tool byte-for-byte (one
 ``.txt`` file per path in an output dir, values in encounter order —
 JsonShredder.java:52-62). The distributed path re-expresses shredding as a
-generator flatMap: ``shred_column`` is a ``mapInArrow`` kernel emitting
-``(path, value)`` Arrow batches, and ``shred_to_dir`` replaces the
+columnar shred: ``shred_column`` is a ``mapInArrow`` kernel that groups
+each input batch's values by leaf path and emits one ``(path, values)`` row
+per leaf and batch, a column chunk in Dremel's sense, so Spark moves one row
+per chunk instead of one per value. ``shred_to_dir`` replaces the
 reference's lazy file-handle pool with an AQE rebalance by path followed by
-``write.partitionBy("path")``: one file per leaf path, as the reference
-writes, except that a leaf too large for one task is split across several
-at map-output boundaries, so at 100 TB a hot leaf is not one task.
+``write.partitionBy("path")`` of each chunk's values joined by ``\\n``: one
+file per leaf path, as the reference writes, except that a leaf too large
+for one task is split across several at map-output boundaries, so at 100 TB
+a hot leaf is not one task.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator, List, Sequence, Tuple
+from typing import Iterator, Sequence, Tuple
 
 from hive_json_spark.infer import _expand, _open_text
 from hive_json_spark.types import iter_json_documents
@@ -98,40 +101,50 @@ def shred_files_local(paths: Sequence[str] | str, out_dir: str = ".") -> int:
 
 
 def shred_column(df, column: str, root: str = "root"):
-    """JSON-string column → DataFrame[path string, value string].
+    """JSON-string column → DataFrame[path string, values array<string>].
 
-    A ``mapInArrow`` kernel over partitions: each input batch becomes one
-    Arrow batch of ``(path, value)`` rows, built from two Python lists with
-    no pandas frame; fully parallel, no driver involvement. An undecodable
-    document fails its task. Feed the result to ``shred_to_dir`` or query
-    it directly (`groupBy("path").count()` etc.). The kernel runs over the
-    partitions ``df`` arrives with. A caller whose frame may be narrower
-    than half the cores, in planned partitions (a small file or a single
-    ``.gz``) or in parquet row groups (a single-row-group file behind many
-    planned splits), passes it through ``ensure_parallelism`` first.
+    A columnar shred: a ``mapInArrow`` kernel runs the one walk over each
+    input batch's documents and groups the leaf values by path, so every
+    batch yields one row per leaf it holds, that leaf's values in encounter
+    order (a column chunk). A row is therefore bounded by one Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` documents), and a
+    leaf appears in several rows when several batches hold it. Per-value
+    consumers explode the chunks:
+    ``shred_column(df, c).select("path", F.explode("values").alias("value"))``.
+    Fully parallel, no driver involvement; an undecodable document fails
+    its task. The kernel runs over the partitions ``df`` arrives with. A
+    caller whose frame may be narrower than half the cores, in planned
+    partitions (a small file or a single ``.gz``) or in parquet row groups
+    (a single-row-group file behind many planned splits), passes it
+    through ``ensure_parallelism`` first.
     """
     import pyarrow as pa
 
     def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            paths: List[str] = []
-            values: List[str] = []
+            chunks: dict[str, list[str]] = {}
             for text in batch.column(0).to_pylist():
                 if text is None:
                     continue
                 for leaf, value in shred_text(text, root):
-                    paths.append(leaf)
-                    values.append(value)
+                    chunk = chunks.get(leaf)
+                    if chunk is None:
+                        chunk = chunks[leaf] = []
+                    chunk.append(value)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(paths, pa.string()), pa.array(values, pa.string())],
-                names=["path", "value"],
+                [
+                    pa.array(list(chunks), pa.string()),
+                    pa.array(list(chunks.values()), pa.list_(pa.string())),
+                ],
+                names=["path", "values"],
             )
 
-    return df.select(column).mapInArrow(gen, schema="path string, value string")
+    return df.select(column).mapInArrow(gen, schema="path string, values array<string>")
 
 
 def shred_to_dir(shredded_df, out_dir: str) -> None:
-    """Write (path, value) rows as one directory per leaf path.
+    """Write ``shred_column``'s (path, values) chunks as one directory per
+    leaf path.
 
     The distributed replacement for the reference's per-path file-handle
     pool: an AQE rebalance by ``path`` (``RebalancePartitions``) gives each
@@ -140,7 +153,17 @@ def shred_to_dir(shredded_df, out_dir: str) -> None:
     of one per read task. A leaf larger than the advisory partition size is
     split at map-output boundaries (``OptimizeSkewInRebalancePartitions``)
     and gets one file per split, so a hot leaf read by several tasks is not
-    written by one. Leaf names are escaped as Hive partition values
-    (``%XX``).
+    written by one. A chunk is written as its values joined by ``\\n``;
+    the text writer ends each row with ``\\n``, so the file holds every
+    value followed by ``\\n``, byte for byte what one row per value would
+    write. Leaf names are escaped as Hive partition values (``%XX``).
     """
-    shredded_df.hint("rebalance", "path").write.mode("overwrite").partitionBy("path").text(out_dir)
+    from pyspark.sql import functions as F
+
+    (
+        shredded_df.select("path", F.array_join("values", "\n").alias("value"))
+        .hint("rebalance", "path")
+        .write.mode("overwrite")
+        .partitionBy("path")
+        .text(out_dir)
+    )

@@ -2,13 +2,15 @@
 
 It must be in place wherever it can be built, and it must leave the disk as
 Hadoop's own ``LocalFileSystem`` does: the same modes, the same ``.crc``
-sidecars, and checksums that are still verified on read.
+sidecars, and checksums that are still verified on read. A write that fails
+leaves no part file in its destination.
 """
 
 import os
 import re
 import shutil
 import subprocess
+import time
 import zipfile
 
 import pytest
@@ -163,3 +165,22 @@ def test_flipped_byte_fails_the_checksum(spark, tmp_path):
     part.write_bytes(bytes(data))
     with pytest.raises(Exception, match="Checksum error"):
         spark.read.text(str(out)).collect()
+
+
+def test_failed_write_leaves_no_part_file(spark, tmp_path):
+    # eight write tasks with no exchange in front; the last one fails after
+    # the others have committed. Task output reaches the destination only
+    # when the job commits, so the failed job leaves no part file behind.
+    from pyspark import TaskContext
+
+    def fail_last(frames):
+        for pdf in frames:
+            if TaskContext.get().partitionId() == 7:
+                time.sleep(1.0)
+                raise RuntimeError("the last task fails")
+            yield pdf
+
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="the last task fails"):
+        spark.range(0, 800, 1, 8).mapInPandas(fail_last, "id long").write.parquet(str(out))
+    assert not list(out.rglob("part-*"))

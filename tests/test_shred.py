@@ -1,17 +1,20 @@
 """Shredder parity: the javadoc example (JsonShredder.java:40-48), null
-skipping, array funneling, the distributed (path,value) generator and its
-one-directory-per-leaf write, and the pinned behaviour on malformed input."""
+skipping, array funneling, the distributed (path, values) column-chunk
+kernel and its one-directory-per-leaf write, and the pinned behaviour on
+malformed input."""
 
 import collections
 import gzip
 import json
 import os
+import random
 import sys
 from pathlib import Path
 from urllib.parse import unquote
 
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from hive_json_spark.shred import shred_column, shred_files_local, shred_records, shred_to_dir
 from hive_json_spark.types import JsonNumber, loads_first
@@ -57,7 +60,7 @@ def test_shred_records_generator():
 def test_shred_column_distributed(spark, sf_dir):
     from hive_json_spark.sources import load_table
     events = load_table(spark, sf_dir, "events")
-    shredded = shred_column(events, "props")
+    shredded = shred_column(events, "props").select("path", F.explode("values").alias("value"))
     rows = shredded.groupBy("path").count().collect()
     by_path = {r["path"]: r["count"] for r in rows}
     n = events.filter("props is not null").count()
@@ -65,6 +68,53 @@ def test_shred_column_distributed(spark, sf_dir):
     # values are the lexical ints
     sample = shredded.limit(5).collect()
     assert all(r["value"].lstrip("-").isdigit() for r in sample)
+
+
+def test_shred_column_is_one_row_per_batch_and_leaf(spark, tmp_path):
+    # one partition of 20 lines read in batches of 6: each batch yields one
+    # row per leaf it holds, the leaf's values in encounter order
+    lines = [
+        json.dumps({"a": j, "b": [j, {"c": "x" * (j % 3)}], **({"d": True} if j % 7 == 0 else {})})
+        for j in range(20)
+    ]
+    src = tmp_path / "in.json"
+    src.write_text("\n".join(lines) + "\n")
+    df = spark.read.text(str(src))
+    assert df.rdd.getNumPartitions() == 1
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    try:
+        shredded = shred_column(df, "value")
+        rows = [(r["path"], r["values"]) for r in shredded.collect()]
+        exploded = shredded.select("path", F.explode("values").alias("value")).collect()
+    finally:
+        spark.conf.set(key, before)
+    expected = []
+    for i in range(0, len(lines), 6):
+        chunks = {}
+        for line in lines[i : i + 6]:
+            for leaf, value in shred_records(loads_first(line)):
+                chunks.setdefault(leaf, []).append(value)
+        expected.extend(chunks.items())
+    assert rows == expected
+    walk = [pair for line in lines for pair in shred_records(loads_first(line))]
+    assert {leaf for leaf, _ in walk} == {"root.a", "root.b.list", "root.b.list.c", "root.d"}
+    for leaf in {leaf for leaf, _ in walk}:
+        assert [r["value"] for r in exploded if r["path"] == leaf] == [v for p, v in walk if p == leaf]
+
+    # a few thousand generated documents at the default batch size: far
+    # fewer rows than values
+    rng = random.Random(7)
+    docs = [
+        json.dumps({f"k{rng.randrange(8)}": rng.randrange(100), "t": {"u": [j, "v" * rng.randrange(4)]}})
+        for j in range(3000)
+    ]
+    (tmp_path / "many.json").write_text("\n".join(docs) + "\n")
+    shredded = shred_column(spark.read.text(str(tmp_path / "many.json")), "value")
+    n_values = shredded.select(F.sum(F.size("values"))).first()[0]
+    assert n_values == 9000
+    assert shredded.count() * 100 <= n_values
 
 
 def test_cli_run_query(capsys):
@@ -249,6 +299,32 @@ def test_shred_to_dir_matches_local_per_leaf(spark, tmp_path):
     assert set(got) == set(expected)
     for leaf in expected:
         assert got[leaf] == expected[leaf], leaf
+
+
+def test_shred_to_dir_bytes_match_local(spark, tmp_path):
+    # one file read by one task: each leaf's part file is the local
+    # shredder's file byte for byte, also for values holding a line break,
+    # a CRLF, nothing at all, or non-ASCII text (splitting lines hides these)
+    src = tmp_path / "in.json"
+    src.write_text(
+        '{"s": "two\\nlines", "n": 1, "e": ""}\n'
+        '{"s": "crlf\\r\\nend", "u": "naïve ☃ \\ud834\\udd1e", "e": ""}\n'
+        '{"s": "", "n": 2.50, "l": ["\\n", "", "x\\ry", "été"]}{"s": "tail\\n"}\n',
+        encoding="utf-8",
+    )
+    local = tmp_path / "local"
+    assert shred_files_local(str(src), str(local)) == 4
+    df = spark.read.text(str(src))
+    assert df.rdd.getNumPartitions() == 1
+    out = tmp_path / "dist"
+    shred_to_dir(shred_column(df, "value"), str(out))
+    dirs = _leaf_dirs(out)
+    expected = {f.name[: -len(".txt")]: f.read_bytes() for f in local.iterdir()}
+    assert set(dirs) == set(expected) == {"root.s", "root.n", "root.e", "root.u", "root.l.list"}
+    assert expected["root.s"] == b"two\nlines\ncrlf\r\nend\n\ntail\n\n"
+    for leaf, parts in dirs.items():
+        assert len(parts) == 1, leaf
+        assert parts[0].read_bytes() == expected[leaf], leaf
 
 
 def test_shred_to_dir_one_file_per_leaf(spark, tmp_path):
