@@ -9,7 +9,10 @@ Layers
 - ``shred``       distributed JSON shredding (per-leaf (path, values) column chunks)
 - ``functions``   column-function pack (classifiers, text, vectors)
 - ``operators``   relational + dedup + similarity + text-analysis operators
-- ``streaming``   Structured Streaming schema-inference fold
+- ``streaming``   Structured Streaming: the schema-inference fold and the
+                  top-k/psi/cms counts folds over versioned state
+                  (``streaming/state.py``), partition-overwrite rollup and
+                  CDC merge sinks, windows, joins, dedup, custom state
 - ``sources``     parquet table catalog and footer reader (schema, rows, row
                   groups); JSON corpora are read in ``infer`` and ``shred``
 """

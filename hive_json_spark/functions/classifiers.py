@@ -3,23 +3,15 @@
 The reference applies these regexes per value on the driver
 (JsonSchemaFinder.java:41-49); here they run JVM-side inside whole-stage
 codegen via ``regexp_like`` — no Python in the hot path. Spark's regexp
-dialect is Java's, i.e. *identical* to the reference's ``Pattern`` usage.
+dialect is Java's, i.e. *identical* to the reference's ``Pattern`` usage;
+the pattern strings are the ones ``types.py`` compiles for the local fold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-# HEX_PATTERN (JsonSchemaFinder.java:42-43)
-HEX_REGEX = "^([0-9a-fA-F][0-9a-fA-F])+$"
-# TIMESTAMP_PATTERN (JsonSchemaFinder.java:44-47)
-TIMESTAMP_REGEX = (
-    '^["]?([0-9]{4}[-/][0-9]{2}[-/][0-9]{2})[T ]'
-    "([0-9]{2}:[0-9]{2}:[0-9]{2})"
-    '(([ ][-+]?[0-9]{2}([:][0-9]{2})?)|Z)?["]?$'
-)
-# DECIMAL_PATTERN (JsonSchemaFinder.java:48-49)
-DECIMAL_REGEX = "^-?([0-9]+)([.]([0-9]+))?$"
+from hive_json_spark.types import DECIMAL_REGEX, HEX_REGEX, TIMESTAMP_REGEX
 
 
 def is_hex_binary(col: Column | str) -> Column:

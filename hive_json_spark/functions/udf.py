@@ -15,7 +15,7 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
-from hive_json_spark.functions.classifiers import HEX_REGEX, TIMESTAMP_REGEX
+from hive_json_spark.types import HEX_REGEX, TIMESTAMP_REGEX
 
 _SQL_FUNCTIONS = {
     "is_hex_binary": (

@@ -181,16 +181,25 @@ def _stream_over(spark: SparkSession, src: str) -> DataFrame:
     )
 
 
-def _read_state_or_empty(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
-    """Read a sink's state table; an absent path means the drained stream
-    had zero rows (the sinks skip the first write on an empty batch), which
-    folds to an empty state table — not an error."""
+def _read_table_or_empty(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
+    """Read a partitioned sink table (rollup, merge); an absent path means
+    the drained stream had zero rows (the sinks skip the first write on an
+    empty batch), which folds to an empty state table — not an error."""
     from pyspark.sql.utils import AnalysisException
 
     try:
         return spark.read.parquet(path)
     except AnalysisException:
         return spark.createDataFrame([], schema_ddl)
+
+
+def _read_state_or_empty(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
+    """The committed version of a versioned sink state (streaming/state.py);
+    none committed means the drained stream had no batch, an empty table."""
+    from hive_json_spark.streaming.state import read_state
+
+    state = read_state(spark, path)
+    return state if state is not None else spark.createDataFrame([], schema_ddl)
 
 
 def _finalize(result: DataFrame, tmp: str) -> DataFrame:
@@ -257,11 +266,7 @@ def q_stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="q_stream_cms_")
     q = streaming_cms(_stream_over(spark, src), "user_id", f"{tmp}/state", f"{tmp}/ckpt", depth=4, width=512)
     q.awaitTermination()
-    from hive_json_spark.streaming.state import read_state
-
-    cells = read_state(spark, f"{tmp}/state")
-    if cells is None:
-        cells = spark.createDataFrame([], "j int, bucket bigint, n bigint")
+    cells = _read_state_or_empty(spark, f"{tmp}/state", "j int, bucket bigint, n bigint")
     final = cells.select(
         F.col("j").cast("int").alias("j"),
         F.col("bucket").cast("bigint").alias("bucket"),
@@ -307,7 +312,7 @@ def q_stream_rollup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream_over(spark, src), "ts", ["event_type"], "cents", f"{tmp}/state", f"{tmp}/ckpt"
     )
     q.awaitTermination()
-    state = _read_state_or_empty(
+    state = _read_table_or_empty(
         spark, f"{tmp}/state",
         "day date, event_type string, n bigint, total bigint, _batch_id bigint",
     )
@@ -372,7 +377,7 @@ def q_stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=8,
     )
     q.awaitTermination()
-    final = _read_state_or_empty(
+    final = _read_table_or_empty(
         spark, f"{tmp}/state",
         "o_custkey bigint, o_totalprice double, o_orderdate timestamp, bucket int",
     ).select("o_custkey", "o_totalprice", "o_orderdate")

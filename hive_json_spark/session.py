@@ -114,7 +114,6 @@ def _local_disk_conf() -> dict[str, str]:
 def get_spark(
     app_name: str = "hive-json-spark",
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -140,10 +139,5 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
     for k, v in _local_disk_conf().items():
-        builder = builder.config(k, v)
-    # experiment hook (tools/config_ab.py): candidate settings are A/B'd
-    # through here so the tool and the engine share ONE config block;
-    # production code never passes extra_conf
-    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -11,21 +11,16 @@ in with one cell-wise sum: the associativity that makes the batch
 operator shuffle-light is exactly what makes the streaming fold correct
 under any batch slicing.
 
-Replay safety: each applied batch commits the merged cells as
-``v=<batch_id>``; a re-delivered batch whose id is <= the committed
-version is a no-op. Write-new-then-prune keeps a committed copy on disk
-at every instant and lets the merge plan read the previous version's
-files directly — the r6 collect-then-rewrite (needed to dodge the
-in-place overwrite race) is gone, along with its slow driver-built
-LocalTableScan write.
+The fold is ``streaming/state.py:fold_counts`` over the (j, bucket)
+cells, which also skips re-delivered batches.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from hive_json_spark.operators.sketch import count_min_sketch
-from hive_json_spark.streaming.state import commit_version, latest_version, read_state
+from hive_json_spark.streaming.state import fold_counts
 
 
 def streaming_cms(
@@ -43,22 +38,8 @@ def streaming_cms(
     family."""
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = latest_version(spark, out_dir)
-        if last is not None and batch_id <= last:
-            return  # re-delivered batch: cells already include it
         part = count_min_sketch(batch_df, key_col, depth=depth, width=width)
-        existing = read_state(spark, out_dir)
-        merged = (
-            existing.select("j", "bucket", "n")
-            .unionByName(part)
-            .groupBy("j", "bucket")
-            .agg(F.sum("n").alias("n"))
-            if existing is not None
-            else part
-        )
-        # <= depth*width rows by construction — one file is the right shape
-        commit_version(merged.coalesce(1), out_dir, batch_id)
+        fold_counts(part, out_dir, batch_id)
 
     return (
         stream.writeStream.foreachBatch(update)

@@ -4,33 +4,19 @@ distribution, updated every micro-batch — the continuous version of
 `q_distribution_drift` (queries_quality.py).
 
 State is the cumulative per-category count table (|categories| rows —
-KB-sized no matter how large the stream), kept as VERSIONED parquet
-(`streaming/state.py`). Each batch commits the |categories|-row counts as
-a new version and rewrites the derived psi table — O(k) IO per batch
-regardless of stream volume.
-
-Replay safety: foreachBatch is at-least-once — after a crash between the
-counts commit and the offset commit, the engine re-delivers the same
-batch. The version directory name carries the applied batch id, so a
-re-delivered batch whose id is already committed skips the add and only
-recomputes the derived psi table. Write-new-then-prune keeps a committed
-counts copy on stable storage at every instant (the old in-place
-overwrite had a delete-then-write crash window), and the merge reads the
-previous version's live files — no driver collect, any category type.
-
-Identity caveat: batch ids restart at 0 per checkpoint lineage, so an
-``out_dir`` is bound to ONE logical stream — restarting the same stream
-with a lost/fresh checkpoint is handled (the early batches are replays of
-applied data), but pointing a genuinely NEW stream at an existing
-``out_dir`` would misread its first batches as replays. New logical
-streams get new out_dirs.
+KB-sized no matter how large the stream), folded by
+``streaming/state.py:fold_counts``, and the psi table derived from it is
+committed as a version of its own: O(k) IO per batch regardless of stream
+volume. A re-delivered batch skips the counts and commits the psi table
+only if the failed run left it uncommitted (see ``state.py``, which also
+binds a state directory to one logical stream).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from hive_json_spark.streaming.state import commit_version, latest_version, read_state
+from hive_json_spark.streaming.state import commit_view, fold_counts, read_version
 
 
 def streaming_psi(
@@ -51,14 +37,18 @@ def streaming_psi(
     alert on nulls separately, the usual practice).
     """
     counts_dir = f"{out_dir}/counts"
-    psi_dir = f"{out_dir}/psi"
     ref_counts = (
         ref.groupBy(F.col(category_col).alias("category"))
         .agg(F.count("*").alias("n_ref"))
     )
 
-    def _write_psi(spark) -> None:
-        cur = read_state(spark, counts_dir).select("category", "n")
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        part = (
+            batch_df.groupBy(F.col(category_col).alias("category"))
+            .agg(F.count("*").alias("n"))
+        )
+        v = fold_counts(part, counts_dir, batch_id)
+        cur = read_version(batch_df.sparkSession, counts_dir, v)
         joined = ref_counts.join(cur, "category", "full_outer")
         p_ref = F.col("n_ref") / F.sum("n_ref").over(Window.partitionBy())
         p_cur = F.col("n") / F.sum("n").over(Window.partitionBy())
@@ -68,32 +58,7 @@ def streaming_psi(
             F.round(p_cur, 6).alias("p_cur"),
             F.round((p_cur - p_ref) * F.log(p_cur / p_ref), 6).alias("psi_term"),
         )
-        psi.coalesce(1).write.mode("overwrite").parquet(psi_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = latest_version(spark, counts_dir)
-        if last is not None and batch_id <= last:
-            # re-delivered batch: counts already include it — re-derive the
-            # psi view only
-            _write_psi(spark)
-            return
-        part = (
-            batch_df.groupBy(F.col(category_col).alias("category"))
-            .agg(F.count("*").alias("n"))
-        )
-        existing = read_state(spark, counts_dir)  # None, version, or flat
-        merged = (
-            existing.select("category", "n")
-            .unionByName(part)
-            .groupBy("category")
-            .agg(F.sum("n").alias("n"))
-            if existing is not None
-            else part
-        )
-        # |categories| rows — one file is the right shape
-        commit_version(merged.coalesce(1), counts_dir, batch_id)
-        _write_psi(spark)
+        commit_view(psi, f"{out_dir}/psi", v)
 
     return (
         stream.writeStream.foreachBatch(update)

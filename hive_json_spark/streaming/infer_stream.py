@@ -6,11 +6,10 @@ streaming state — a monoid folded over an unbounded document stream. Here
 that becomes real Structured Streaming:
 
 - ``infer_schema_streaming``: ``readStream.text`` → ``foreachBatch`` that
-  folds each micro-batch with the distributed lattice and merges into the
-  driver-held accumulator. Restart-safe in the same way checkpointed
-  ``foreachBatch`` sinks are (the merge is idempotent for replayed docs
-  only up to union-branch dedup, so exactly-once sinks should persist the
-  accumulator per epoch — documented limitation).
+  folds each micro-batch with the distributed lattice and merges it into
+  the accumulator, kept as versioned state (``streaming/state.py``) under
+  the checkpoint: a restart resumes from the batches already folded, and
+  a re-delivered batch is skipped rather than counted twice.
 - ``windowed_event_counts``: event-time tumbling windows + watermark —
   late data beyond the watermark is dropped, state is bounded.
 - ``stateful_user_totals``: custom per-key state via
@@ -20,12 +19,16 @@ that becomes real Structured Streaming:
 
 from __future__ import annotations
 
+import pickle
+import shutil
+import tempfile
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hive_json_spark.infer import InferResult, infer_schema_of_column
+from hive_json_spark.streaming.state import commit_version, latest_version, read_state
 from hive_json_spark.types import canonicalize, merge_types
 
 
@@ -37,25 +40,44 @@ def infer_schema_streaming(
 ) -> InferResult:
     """Streaming schema inference over a growing NDJSON directory.
 
-    Each micro-batch runs the distributed partial+final fold; the driver
-    merges the canonical batch results into the accumulator and
-    canonicalizes the merged type once at the end. ``availableNow`` drains
+    Each micro-batch runs the distributed partial+final fold and merges the
+    result into the accumulator: one pickled ``(htype, records)`` row,
+    committed as a version of ``<checkpoint_dir>/schema`` per batch. A
+    rerun on the same checkpoint folds only the new files into it; without
+    ``checkpoint_dir`` a temporary one is used and removed on return. The
+    merged type is canonicalized once at the end. ``availableNow`` drains
     what exists and stops — swap the trigger for continuous operation.
     """
-    acc: dict = {"htype": None, "records": 0}
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="infer_stream_")
+    acc_dir = f"{ckpt}/schema"
 
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
+    def accumulator() -> tuple:
+        state = read_state(spark, acc_dir)
+        return (None, 0) if state is None else pickle.loads(state.first()["acc"])
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        last = latest_version(spark, acc_dir)
+        if last is not None and batch_id <= last:
+            return  # re-delivered batch: the accumulator already holds it
+        htype, records = accumulator()
         r = infer_schema_of_column(batch_df, "value")
-        acc["htype"] = merge_types(acc["htype"], r.htype)
-        acc["records"] += r.records
+        acc = pickle.dumps((merge_types(htype, r.htype), records + r.records))
+        commit_version(spark.createDataFrame([(acc,)], "acc binary"), acc_dir, batch_id)
 
-    stream = spark.readStream.text(path_glob)
-    writer = stream.writeStream.foreachBatch(merge_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
-    htype = canonicalize(acc["htype"]) if acc["htype"] is not None else None
-    return InferResult(htype, acc["records"])
+    try:
+        (
+            spark.readStream.text(path_glob)
+            .writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        htype, records = accumulator()
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return InferResult(canonicalize(htype) if htype is not None else None, records)
 
 
 def windowed_event_counts(

@@ -7,7 +7,9 @@ Scale design (mirrors continuous_rollup's partition-pruned merge):
 
 - The snapshot is hash-bucketed on the key into ``n_buckets`` hive
   partitions (``bucket = pmod(hash(key), n)``). A micro-batch only reads
-  and rewrites the buckets its keys touch (dynamic partition overwrite);
+  and rewrites the buckets its keys touch (dynamic partition overwrite,
+  an option of that one write; streaming/state.py says why the table is
+  not versioned);
   a 100 TB snapshot with a 1 GB batch rewrites ~batch-sized data, not
   the table. Bucket count is chosen per deployment: buckets ~ snapshot
   bytes / healthy-file-size.
@@ -131,42 +133,41 @@ def streaming_merge_upsert(
 
         obs = Observation()
         observed = merged.observe(obs, F.collect_set("bucket").alias("present"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        # co-locate each bucket before the partitioned write (same
+        # healthy-layout rule as rollup.py): otherwise every join task
+        # holding rows for a bucket emits its own file into that bucket's
+        # partition — tasks x buckets small files that the next batch's
+        # read-back and the final snapshot read pay for
+        (
+            observed.repartition(F.col("bucket"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(out_dir)
+        )
         try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            # co-locate each bucket before the partitioned write (same
-            # healthy-layout rule as rollup.py): otherwise every join task
-            # holding rows for a bucket emits its own file into that
-            # bucket's partition — tasks x buckets small files that the
-            # next batch's read-back and the final snapshot read pay for
-            observed.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(out_dir)
-            try:
-                present = set(obs.get["present"] or [])
-            except Py4JJavaError:
-                # A plan that writes ZERO rows (statically empty, or pruned
-                # by empty-relation propagation) never evaluates its
-                # CollectMetrics node, so no metrics row exists and the
-                # scala Observation.getRow asserts. Zero rows written means
-                # exactly that no bucket has a surviving row this batch —
-                # the empty set IS the observed value. Any batch that wrote
-                # rows ran tasks through the observe node and lands in the
-                # try arm.
-                present = set()
-            # Dynamic overwrite only rewrites partitions PRESENT in `merged`.
-            # A bucket whose every remaining row was deleted this batch has
-            # no rows in `merged`, so its stale files would survive and the
-            # deleted rows would resurrect — truncate those buckets
-            # explicitly with an empty overwrite of the partition directory.
-            # (Replay-safe: rerunning the batch recomputes the same empty
-            # set and truncates again.)
-            empty = spark.createDataFrame([], merged.drop("bucket").schema)
-            for b in buckets:
-                if b not in present:
-                    empty.write.mode("overwrite").parquet(f"{out_dir}/bucket={b}")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            present = set(obs.get["present"] or [])
+        except Py4JJavaError:
+            # A plan that writes ZERO rows (statically empty, or pruned
+            # by empty-relation propagation) never evaluates its
+            # CollectMetrics node, so no metrics row exists and the
+            # scala Observation.getRow asserts. Zero rows written means
+            # exactly that no bucket has a surviving row this batch —
+            # the empty set IS the observed value. Any batch that wrote
+            # rows ran tasks through the observe node and lands in the
+            # try arm.
+            present = set()
+        # Dynamic overwrite only rewrites partitions PRESENT in `merged`.
+        # A bucket whose every remaining row was deleted this batch has
+        # no rows in `merged`, so its stale files would survive and the
+        # deleted rows would resurrect — truncate those buckets
+        # explicitly with an empty overwrite of the partition directory.
+        # (Replay-safe: rerunning the batch recomputes the same empty
+        # set and truncates again.)
+        empty = spark.createDataFrame([], merged.drop("bucket").schema)
+        for b in buckets:
+            if b not in present:
+                empty.write.mode("overwrite").parquet(f"{out_dir}/bucket={b}")
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

@@ -7,7 +7,7 @@ Each micro-batch:
 2. reads back only the day partitions it touches (partition pruning —
    the rollup table may hold years, the batch touches a day or two);
 3. re-aggregates existing + partial and overwrites just those partitions
-   (``partitionOverwriteMode=dynamic``).
+   (``partitionOverwriteMode=dynamic``, an option of that one write).
 
 State never lives in the streaming engine — the rollup table IS the
 state.
@@ -21,7 +21,9 @@ some of the batch's partitions and not others replays exactly the
 missing ones (the ids are atomic with each partition's data — same
 files). Only the touched partitions are consulted — no full-table scan.
 Batch ids restart per checkpoint lineage, so an out_dir is bound to one
-logical stream (same caveat as streaming/drift.py).
+logical stream (same caveat as streaming/state.py). The table is not
+versioned like state.py's folds: a version holds the whole state, and a
+batch touches a day or two.
 """
 
 from __future__ import annotations
@@ -108,11 +110,9 @@ def continuous_rollup(
             # decide replay PER DAY PARTITION, not per batch: a crash mid
             # dynamic-overwrite can commit some of the batch's partitions
             # and not others, so "max id anywhere >= N" must not skip the
-            # partitions that never got N. Pre-protocol state (no
-            # _batch_id column) counts as never-applied. The decision is
-            # made IN-PLAN (r9, was a per-batch driver collect): a window
-            # over the pruned existing read tags each day with its stamp;
-            # unapplied days re-aggregate existing + this batch's partials
+            # partitions that never got N. The decision is made IN-PLAN:
+            # a window over the pruned existing read tags each day with its
+            # stamp; unapplied days re-aggregate existing + this batch's partials
             # and take the new stamp. Already-applied days are NOT written
             # at all: dynamic partition overwrite only rewrites partitions
             # present in the output frame, so leaving them out keeps them
@@ -122,10 +122,6 @@ def continuous_rollup(
             # A day partition is written atomically with one stamp, so the
             # per-day max IS the day's stamp. Everything stays bounded by
             # the ≤ cap pruned days.
-            if "_batch_id" not in existing.columns:
-                existing = existing.withColumn(
-                    "_batch_id", F.lit(-1).cast("bigint")
-                )
             day_w = Window.partitionBy("day")
             exw = existing.withColumn("_last", F.max("_batch_id").over(day_w))
             stamps = exw.groupBy("day").agg(F.max("_batch_id").alias("_last"))
@@ -142,22 +138,18 @@ def continuous_rollup(
                 .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
                 .withColumn("_batch_id", F.lit(batch_id).cast("bigint"))
             )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            (
-                # co-locate each day before the partitioned write: without
-                # this, every task holding rows for a day emits its own file
-                # into that day's partition (tasks x days small files); with
-                # it, each day writes exactly one file — the healthy layout
-                # for a rollup table read back with partition pruning.
-                merged.repartition(F.col("day"))
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(out_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            # co-locate each day before the partitioned write: without
+            # this, every task holding rows for a day emits its own file
+            # into that day's partition (tasks x days small files); with
+            # it, each day writes exactly one file — the healthy layout
+            # for a rollup table read back with partition pruning.
+            merged.repartition(F.col("day"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("day")
+            .parquet(out_dir)
+        )
 
     return (
         stream.writeStream.foreachBatch(upsert)

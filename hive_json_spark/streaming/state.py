@@ -1,36 +1,42 @@
 """Versioned parquet state for foreachBatch sinks.
 
-The r5/r6 generation of these sinks kept ONE live state directory and
-overwrote it in place each batch, which forced an awkward choice between
-two evils: route the merged state through the driver (``collect`` —
-unbounded for high-cardinality keys) or truncate lineage executor-side
-(``localCheckpoint`` — non-replicated blocks, so an executor loss after the
-overwrite starts deleting the old files destroys the only state copy). It
-was also slow: a driver-built LocalTableScan written with ``coalesce(1)``
-takes seconds per batch on the local scheduler.
+**Versions.** A state table at ``<base>`` is a set of version directories
+``<base>/v=<batch_id>``, each holding the whole state after that batch. A
+version is committed once its ``_SUCCESS`` marker exists; readers take
+the highest committed one (``read_state``) and ignore an uncommitted
+directory, which the retry's ``mode("overwrite")`` replaces.
+``commit_version`` deletes the other versions only after the new one is
+committed, so a crash at any point leaves at least one committed version
+on disk, and the write may read the previous version's files while it
+runs: no collect, no checkpoint, no read-then-overwrite race. Between a
+commit and its prune two versions exist, so read through ``read_state``,
+not the root.
 
-This module replaces in-place overwrite with WRITE-NEW-THEN-PRUNE:
+**The fold.** ``fold_counts`` folds one batch's per-key counts into the
+committed counts. The version number is the batch id, so it is also the
+replay guard: foreachBatch is at-least-once, and a re-delivered batch
+whose id is at most the committed version is already in the state.
+``streaming_topk``, ``streaming_psi`` and ``streaming_cms`` are this fold
+over different keys. Batch ids restart at 0 per checkpoint, so a state
+directory belongs to ONE logical stream: a new stream needs a new one.
 
-- each applied batch writes the full merged state to ``<base>/v=<batch_id>``;
-- the old version dirs are deleted only AFTER the new version's ``_SUCCESS``
-  marker exists, so a crash at any point leaves at least one committed
-  version on stable storage (the reader picks the highest committed one);
-- the merge plan reads the previous version's files, which still exist
-  while the new version is being written — no read-then-overwrite race, so
-  no collect and no checkpoint of any kind is needed;
-- the batch id is carried by the DIRECTORY NAME, which doubles as the
-  replay guard (a re-delivered batch's id <= the committed version id).
+**The views.** A view derived from the counts (the top-k list, the psi
+table) is committed as a version of its own directory with the number of
+the counts version it was derived from, and skipped when that number is
+already committed. A failed view write therefore leaves the previous view
+readable, and the rerun of the failed batch, which skips the counts
+because they are committed, derives the missing view.
 
-The layout is hive-partition-shaped (``v=N``), so a plain
-``spark.read.parquet(base)`` of the root also works once exactly one
-version exists — partition discovery surfaces the version as a ``v``
-column.
+**Rollup and merge** (``rollup.py``, ``merge.py``) do not use versions: a
+version holds the whole state, so a version per batch would rewrite the
+whole table, where their batches touch a few day or bucket partitions.
+They keep Hive-partitioned tables and replace only the touched partitions
+with dynamic partition overwrite, set on the write itself.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def _fs(spark: SparkSession, base: str):
@@ -41,9 +47,8 @@ def _fs(spark: SparkSession, base: str):
 
 
 def latest_version(spark: SparkSession, base: str) -> int | None:
-    """Highest COMMITTED (``_SUCCESS``-marked) version under ``base``, or
-    None. An uncommitted ``v=K`` dir (crash mid-write) is ignored — the
-    retry's mode("overwrite") replaces it."""
+    """Highest committed (``_SUCCESS``-marked) version under ``base``, or
+    None."""
     jvm, fs, path = _fs(spark, base)
     if not fs.exists(path):
         return None
@@ -66,32 +71,47 @@ def read_version(spark: SparkSession, base: str, version: int) -> DataFrame:
 
 
 def read_state(spark: SparkSession, base: str) -> DataFrame | None:
-    """Current committed state, or the pre-protocol flat layout (loose
-    ``part-*`` files written by the r5/r6 in-place sinks) as a migration
-    path, or None if no state exists. A lingering ``_batch_id`` column
-    from the old protocol is dropped — the version dir carries the id
-    now."""
+    """The latest committed version, or None if none is committed."""
     last = latest_version(spark, base)
-    if last is not None:
-        return read_version(spark, base, last)
-    try:
-        df = spark.read.parquet(f"{base}/part-*")
-    except AnalysisException:
-        return None
-    return df.drop("_batch_id") if "_batch_id" in df.columns else df
+    return None if last is None else read_version(spark, base, last)
 
 
-def commit_version(df: DataFrame, base: str, batch_id: int) -> None:
-    """Write ``df`` as version ``batch_id`` and prune every other version
-    (and any pre-protocol loose file). ``df``'s lineage may freely read
-    the previous version — those files outlive the write. Pruning runs
-    only after the new version is fully committed, so the worst crash
-    leaves an extra stale version, never zero."""
-    df.write.mode("overwrite").parquet(f"{base}/v={batch_id}")
-    jvm, fs, path = _fs(df.sparkSession, base)
+def commit_version(df: DataFrame, base: str, version: int) -> None:
+    """Write ``df`` as ``<base>/v=<version>``, then delete every other
+    version."""
+    df.write.mode("overwrite").parquet(f"{base}/v={version}")
+    _, fs, path = _fs(df.sparkSession, base)
     for st in fs.listStatus(path):
         name = st.getPath().getName()
-        if name == f"v={batch_id}":
-            continue
-        if name.startswith("v=") or name.startswith("part-") or name == "_SUCCESS":
+        if name.startswith("v=") and name != f"v={version}":
             fs.delete(st.getPath(), True)
+
+
+def fold_counts(part: DataFrame, base: str, batch_id: int) -> int:
+    """Fold batch ``batch_id``'s counts ``part`` (key columns and a count
+    ``n``) into the counts at ``base``: sum ``n`` per key over the union
+    with the committed version and commit the sum as version ``batch_id``.
+    A replayed batch (``batch_id`` at most the committed version) commits
+    nothing. Returns the latest committed version."""
+    spark = part.sparkSession
+    last = latest_version(spark, base)
+    if last is not None and batch_id <= last:
+        return last
+    if last is not None:
+        keys = [c for c in part.columns if c != "n"]
+        part = (
+            read_version(spark, base, last)
+            .select(*part.columns)
+            .unionByName(part)
+            .groupBy(*keys)
+            .agg(F.sum("n").alias("n"))
+        )
+    commit_version(part, base, batch_id)
+    return batch_id
+
+
+def commit_view(view: DataFrame, base: str, version: int) -> None:
+    """Commit ``view``, derived from counts version ``version``, as
+    ``<base>/v=<version>``, unless that version is already committed."""
+    if latest_version(view.sparkSession, base) != version:
+        commit_version(view, base, version)

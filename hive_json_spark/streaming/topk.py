@@ -7,13 +7,11 @@ State is the cumulative per-key count table kept as VERSIONED parquet
 stream volume; the top-k view is re-derived from it each batch (a k-row
 TakeOrderedAndProject over the counts table, never over the stream).
 
-Replay safety: foreachBatch is at-least-once, so each applied batch
-commits the merged counts as `counts/v=<batch_id>`; a re-delivered batch
-whose id is <= the committed version only re-derives the view. The
-write-new-then-prune protocol keeps a committed copy on stable storage at
-every instant (the r6 localCheckpoint variant could lose the only state
-copy if an executor died while the in-place overwrite was deleting the
-old files), and the merge plan reads the previous version's live files —
+Replay safety and the view: ``streaming/state.py:fold_counts`` commits
+the merged counts as ``counts/v=<batch_id>`` and skips a re-delivered
+batch; the top-k list is committed as ``topk/v=<counts version>``, so a
+failed view write leaves the previous list and the batch's rerun derives
+the missing one. The merge reads the previous version's live files, so
 no driver collect at any cardinality.
 
 100 TB note: for vocabularies too large to keep exact (per-shingle
@@ -28,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hive_json_spark.streaming.state import commit_version, latest_version, read_state
+from hive_json_spark.streaming.state import commit_view, fold_counts, read_version
 
 
 def streaming_topk(
@@ -39,42 +37,21 @@ def streaming_topk(
     k: int = 10,
 ):
     """Start an availableNow stream maintaining ``<out_dir>/counts`` (full
-    per-key counts, versioned, replay-idempotent) and ``<out_dir>/topk``
-    (the k most frequent keys, count-desc then key-asc for a total
-    deterministic order). Returns the StreamingQuery."""
+    per-key counts) and ``<out_dir>/topk`` (the k most frequent keys,
+    count-desc then key-asc for a total deterministic order), both
+    versioned state read through ``read_state``. Returns the
+    StreamingQuery."""
     counts_dir = f"{out_dir}/counts"
-    topk_dir = f"{out_dir}/topk"
 
-    def _write_view(spark) -> None:
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        part = batch_df.groupBy(F.col(key_col).alias("key")).agg(F.count("*").alias("n"))
+        v = fold_counts(part, counts_dir, batch_id)
         top = (
-            read_state(spark, counts_dir)
-            .select("key", "n")
+            read_version(batch_df.sparkSession, counts_dir, v)
             .orderBy(F.col("n").desc(), F.col("key").asc())
             .limit(k)
         )
-        top.coalesce(1).write.mode("overwrite").parquet(topk_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = latest_version(spark, counts_dir)
-        if last is not None and batch_id <= last:
-            # replayed batch: state already includes it — refresh the view
-            _write_view(spark)
-            return
-        part = batch_df.groupBy(F.col(key_col).alias("key")).agg(
-            F.count("*").alias("n")
-        )
-        existing = read_state(spark, counts_dir)  # None, version, or flat
-        merged = (
-            existing.select("key", "n")
-            .unionByName(part)
-            .groupBy("key")
-            .agg(F.sum("n").alias("n"))
-            if existing is not None
-            else part
-        )
-        commit_version(merged, counts_dir, batch_id)
-        _write_view(spark)
+        commit_view(top, f"{out_dir}/topk", v)
 
     return (
         stream.writeStream.foreachBatch(update)

@@ -94,14 +94,25 @@ class Kind(Enum):
 
 
 # --- regexes (JsonSchemaFinder.java:41-49), verbatim semantics ---------------
+# Written once, in syntax both Python ``re`` and Java regex accept (no named
+# groups, no escapes): ``functions/classifiers.py`` and the SQL functions in
+# ``functions/udf.py`` run these same strings JVM-side.
 
-_HEX_RE = re.compile(r"^([0-9a-fA-F][0-9a-fA-F])+$")
-_TIMESTAMP_RE = re.compile(
-    r"^[\"]?([0-9]{4}[-/][0-9]{2}[-/][0-9]{2})[T ]"
-    r"([0-9]{2}:[0-9]{2}:[0-9]{2})"
-    r"(([ ][-+]?[0-9]{2}([:][0-9]{2})?)|Z)?[\"]?$"
+# HEX_PATTERN (JsonSchemaFinder.java:42-43)
+HEX_REGEX = "^([0-9a-fA-F][0-9a-fA-F])+$"
+# TIMESTAMP_PATTERN (JsonSchemaFinder.java:44-47)
+TIMESTAMP_REGEX = (
+    '^["]?([0-9]{4}[-/][0-9]{2}[-/][0-9]{2})[T ]'
+    "([0-9]{2}:[0-9]{2}:[0-9]{2})"
+    '(([ ][-+]?[0-9]{2}([:][0-9]{2})?)|Z)?["]?$'
 )
-_DECIMAL_RE = re.compile(r"^-?(?P<int>[0-9]+)([.](?P<fraction>[0-9]+))?$")
+# DECIMAL_PATTERN (JsonSchemaFinder.java:48-49): group 1 is the integer
+# digits, group 3 the fraction digits
+DECIMAL_REGEX = "^-?([0-9]+)([.]([0-9]+))?$"
+
+_HEX_RE = re.compile(HEX_REGEX)
+_TIMESTAMP_RE = re.compile(TIMESTAMP_REGEX)
+_DECIMAL_RE = re.compile(DECIMAL_REGEX)
 
 # EXTENSION regex (no reference counterpart): the reference declares
 # Kind.DATE but never produces it — its pickString has no date branch
@@ -452,8 +463,8 @@ def _pick_number(text: str) -> NumericT:
     """Numeric sizing off the lexical form (JsonSchemaFinder.java:61-96)."""
     m = _DECIMAL_RE.match(text)
     if m:
-        int_digits = len(m.group("int"))
-        fraction = m.group("fraction")
+        int_digits = len(m.group(1))
+        fraction = m.group(3)
         scale = 0 if fraction is None else len(fraction)
         if scale == 0:
             if int_digits < 19:

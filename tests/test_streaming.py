@@ -26,6 +26,34 @@ def test_streaming_inference_matches_batch(spark, tmp_path):
     assert str(r.htype) == str(canonicalize(batch.htype))
 
 
+def test_streaming_inference_resumes_after_restart(spark, tmp_path, monkeypatch):
+    """A rerun on the same checkpoint folds the new file into the batches
+    already folded: the result equals a fresh run over both files. With no
+    checkpoint the temporary one is removed on return."""
+    import os
+    import tempfile
+
+    from hive_json_spark.streaming import infer_schema_streaming
+
+    d = tmp_path / "stream_in"
+    d.mkdir()
+    (d / "a.json").write_text('{"a":1}\n{"a":2}\n')
+    ckpt = str(tmp_path / "ckpt")
+    r = infer_schema_streaming(spark, str(d), checkpoint_dir=ckpt)
+    assert (str(r.htype), r.records) == ("struct<a:tinyint>", 2)
+
+    (d / "b.json").write_text('{"b":"x"}\n')
+    r = infer_schema_streaming(spark, str(d), checkpoint_dir=ckpt)
+    assert (str(r.htype), r.records) == ("struct<a:tinyint,b:string>", 3)
+
+    tmp_root = tmp_path / "tmp_root"
+    tmp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
+    fresh = infer_schema_streaming(spark, str(d))
+    assert (str(fresh.htype), fresh.records) == (str(r.htype), r.records)
+    assert os.listdir(tmp_root) == []
+
+
 def test_windowed_event_counts(spark, sf_dir, tmp_path):
     from hive_json_spark.sources import load_table
     from hive_json_spark.streaming import windowed_event_counts
@@ -703,29 +731,65 @@ def test_streaming_topk_high_cardinality_key(spark, tmp_path):
     assert [n for _, n in top[1:]] == [1, 1]
 
 
-def test_streaming_psi_migrates_pre_protocol_state(spark, sf_dir, tmp_path):
-    """A counts table written before the batch-id protocol (no _batch_id
-    column) must be treated as valid accumulated state, not reset."""
-    from hive_json_spark.sources import load_table
+def test_streaming_psi_failed_view_keeps_last_view(spark, tmp_path):
+    """A batch whose psi view write fails leaves the previous view
+    committed; the rerun replays the batch, skips its committed counts and
+    commits the missing view, equal to a clean two-batch run."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
     from hive_json_spark.streaming import streaming_psi
+    from hive_json_spark.streaming.state import read_state
 
-    ev = load_table(spark, sf_dir, "events")
-    ref = ev.filter(F.dayofmonth("ts") <= 15).select("event_type")
-    cur = ev.filter(F.dayofmonth("ts") > 15).select("event_type").limit(300)
+    marker = str(tmp_path / "fail_view")
 
-    out = str(tmp_path / "drift")
-    legacy = spark.createDataFrame([("click", 1000)], "category string, n bigint")
-    legacy.coalesce(1).write.parquet(f"{out}/counts")
+    def fail_while_marked(batches):
+        for pdf in batches:
+            if os.path.exists(marker):
+                raise RuntimeError("view write fails")
+            yield pdf
 
-    src = str(tmp_path / "cur")
-    cur.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(cur.schema).parquet(src)
-    q = streaming_psi(stream, "event_type", ref, out, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    plain_ref = spark.createDataFrame([(c,) for c in "aaabbc"], "c string")
+    ref = plain_ref.mapInPandas(fail_while_marked, plain_ref.schema)
+    src = str(tmp_path / "src")
 
-    got = {r["category"]: r["n"] for r in spark.read.parquet(f"{out}/counts").collect()}
-    batch_clicks = cur.filter(F.col("event_type") == "click").count()
-    assert got["click"] == 1000 + batch_clicks  # accumulated, not reset
+    def run(name):
+        stream = spark.readStream.schema("c string").option(
+            "maxFilesPerTrigger", "1"
+        ).parquet(src)
+        out = str(tmp_path / name)
+        streaming_psi(stream, "c", ref, out, f"{out}_ckpt").awaitTermination(120)
+        return out
+
+    def rows(base):
+        return sorted(map(tuple, read_state(spark, base).collect()), key=str)
+
+    spark.createDataFrame([("a",), ("b",)], "c string").coalesce(1).write.parquet(src)
+    out = run("drift")
+    first_view = rows(f"{out}/psi")
+
+    spark.createDataFrame([("a",), ("d",)], "c string").coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    open(marker, "w").close()
+    # Adaptive execution runs the ref shuffle before the write job starts,
+    # so the failure would precede any overwrite; without it the failure
+    # lands inside the write job, as a failing write task's does.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with pytest.raises(StreamingQueryException):
+            run("drift")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert rows(f"{out}/psi") == first_view
+
+    os.remove(marker)
+    run("drift")
+    clean = run("clean")
+    assert rows(f"{out}/counts") == rows(f"{clean}/counts")
+    assert rows(f"{out}/psi") == rows(f"{clean}/psi") != first_view
 
 
 def test_streaming_cms_matches_batch_sketch_and_replay(spark, sf_dir, tmp_path):
