@@ -62,7 +62,6 @@ from typing import Iterable, Iterator, List, Optional, Sequence, Tuple
 from hive_json_spark.types import (
     HType,
     canonicalize,
-    decay_wide_structs,
     infer_type,
     iter_json_documents,
     merge_types,
@@ -138,7 +137,6 @@ _EMPTY: Tuple[Optional[HType], int, int] = (None, 0, 0)
 def _fold(
     pairs: Iterable[Tuple[str, int]],
     on_error: str,
-    max_struct_fields: Optional[int] = None,
     acc: Tuple[Optional[HType], int, int] = _EMPTY,
 ) -> Tuple[Optional[HType], int, int]:
     """Fold ``(text, freq)`` pairs into ``acc = (type, records, corrupt)``.
@@ -164,8 +162,6 @@ def _fold(
                 raise
             bad += int(freq)
         n += docs * int(freq)
-        if max_struct_fields is not None and t is not None:
-            t = decay_wide_structs(t, max_struct_fields)
     return t, n, bad
 
 
@@ -187,7 +183,6 @@ def _partials(
     on_error: str,
     *,
     group_col: Optional[str] = None,
-    max_struct_fields: Optional[int] = None,
 ):
     """One pickled partial per partition — per group seen in the partition
     when ``group_col`` is given. Each batch folds its *distinct* values
@@ -195,9 +190,10 @@ def _partials(
     ``df`` is folded as it is partitioned: spreading it is the caller's
     decision."""
     import pandas as pd
+    from pyspark.sql import types as T
 
     keys = [group_col] if group_col else []
-    schema = "".join(f"{k} {dict(df.dtypes)[k]}, " for k in keys) + "partial binary"
+    schema = T.StructType([df.schema[k] for k in keys]).add("partial", "binary")
 
     def fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         accs: dict = {}
@@ -205,10 +201,7 @@ def _partials(
             groups = pdf.groupby(group_col, dropna=False) if group_col else [(None, pdf)]
             for g, sub in groups:
                 accs[g] = _fold(
-                    sub[column].value_counts().items(),
-                    on_error,
-                    max_struct_fields,
-                    accs.get(g, _EMPTY),
+                    sub[column].value_counts().items(), on_error, accs.get(g, _EMPTY)
                 )
         out = {k: list(accs) for k in keys}
         out["partial"] = [pickle.dumps(a) for a in accs.values()]
@@ -263,7 +256,6 @@ def infer_schema_of_column(
     column: str,
     *,
     on_error: str = "raise",
-    max_struct_fields: Optional[int] = None,
 ) -> InferResult:
     """Infer the schema of a JSON-string column (e.g. ``events.props``).
 
@@ -277,14 +269,10 @@ def infer_schema_of_column(
     """
     from hive_json_spark.operators.util import ensure_parallelism
 
-    return _infer_column(
-        ensure_parallelism(df.select(column)), column, on_error, max_struct_fields
-    )
+    return _infer_column(ensure_parallelism(df.select(column)), column, on_error)
 
 
-def _infer_column(
-    df, column: str, on_error: str, max_struct_fields: Optional[int] = None
-) -> InferResult:
+def _infer_column(df, column: str, on_error: str) -> InferResult:
     """The fold, the tree merge and the driver merge of ``df[column]``, over
     the partitions ``df`` arrives with."""
     import pandas as pd
@@ -293,7 +281,7 @@ def _infer_column(
         merged = _merge(blob for pdf in batches for blob in pdf["partial"])
         yield pd.DataFrame({"partial": [pickle.dumps(merged)]})
 
-    partials_df = _partials(df, column, on_error, max_struct_fields=max_struct_fields)
+    partials_df = _partials(df, column, on_error)
     # Tree final-merge: the driver merge below is fine for the usual few
     # hundred partials (KB each), but at 10⁴-10⁵ input partitions (100 TB)
     # a flat driver merge is a long single-threaded tail and a large
@@ -309,11 +297,7 @@ def _infer_column(
             merge_round, schema="partial binary"
         )
     htype, records, corrupt = _merge(row["partial"] for row in partials_df.collect())
-    if htype is not None:
-        if max_struct_fields is not None:
-            htype = decay_wide_structs(htype, max_struct_fields)
-        htype = canonicalize(htype)
-    return InferResult(htype, records, corrupt)
+    return InferResult(None if htype is None else canonicalize(htype), records, corrupt)
 
 
 # --- loading under the inferred schema (incl. union data) --------------------
@@ -339,7 +323,9 @@ def load_json_column(df, column: str, htype: Optional[HType] = None):
     are materialized by an Arrow kernel that routes each value to its union
     branch — the *first* branch that subsumes it, mirroring
     UnionType.java:89-100 — and emits the ORC-style tagged struct
-    ``struct<tag:tinyint, field0:..., field1:...>``.
+    ``struct<tag:tinyint, field0:..., field1:...>``. A column with no
+    documents, or only JSON nulls, has a void schema and loads as a null
+    ``parsed`` (``from_json`` rejects a VOID schema).
     """
     from pyspark.sql import functions as F, types as T
 
@@ -348,6 +334,8 @@ def load_json_column(df, column: str, htype: Optional[HType] = None):
 
     if htype is None:
         htype = infer_schema_of_column(df, column).htype
+    if htype is None or isinstance(htype, _t.NullT):
+        return df.withColumn("parsed", F.lit(None))
     spark_schema = to_spark_type(htype)
 
     if not _contains_union(htype):
@@ -469,6 +457,7 @@ def infer_schema_by_group(
     and the ``"void\\n"`` sentinel in the other two.
     """
     import pandas as pd
+    from pyspark.sql import types as T
 
     renderers = {"compact": str, "ddl": to_hive_ddl, "flat": to_flat}
     if render not in renderers:
@@ -491,13 +480,15 @@ def infer_schema_by_group(
 
     from hive_json_spark.operators.util import ensure_parallelism
 
-    gtype = dict(df.dtypes)[group_col]
+    schema = (
+        T.StructType([T.StructField(group_col, df.schema[group_col].dataType)])
+        .add("hive_type", "string")
+        .add("records", "long")
+        .add("corrupt", "long")
+    )
     spread = ensure_parallelism(df.select(group_col, column))
     return (
         _partials(spread, column, on_error, group_col=group_col)
         .groupBy(group_col)
-        .applyInPandas(
-            merge_group,
-            schema=f"{group_col} {gtype}, hive_type string, records bigint, corrupt bigint",
-        )
+        .applyInPandas(merge_group, schema=schema)
     )

@@ -29,6 +29,8 @@ retries and speculative execution demand a pure merge operator. The merge
 is associative-enough and commutative up to union branch order; the
 reference's fold-order sensitivity (UnionType.java:89-100) is preserved,
 with an optional ``canonicalize`` pass for distributed determinism.
+Like the reference's, the lattice takes no options: an object is always a
+struct, induction never produces ``Kind.DATE``, and every union is kept.
 
 NOTE (reference bug, not reproduced): ``NumericType.equals`` in the
 reference uses ``||`` where ``&&`` is meant (NumericType.java:41). Nothing
@@ -86,7 +88,6 @@ class Kind(Enum):
     STRUCT = ("struct", 1)
     LIST = ("list", 1)
     UNION = ("union", 8)
-    MAP = ("map", 1)  # extension: wide-struct decay target (not in reference)
 
     def __init__(self, label: str, rank: int) -> None:
         self.label = label
@@ -113,15 +114,6 @@ DECIMAL_REGEX = "^-?([0-9]+)([.]([0-9]+))?$"
 _HEX_RE = re.compile(HEX_REGEX)
 _TIMESTAMP_RE = re.compile(TIMESTAMP_REGEX)
 _DECIMAL_RE = re.compile(DECIMAL_REGEX)
-
-# EXTENSION regex (no reference counterpart): the reference declares
-# Kind.DATE but never produces it — its pickString has no date branch
-# (HiveType.java:32 dead enum member; TestJsonSchemaFinder.java:52-53 pins
-# timestamps-only). ``infer_type(detect_dates=True)`` opts into producing
-# it for bare ISO dates; the default path never consults this regex, so
-# reference parity is untouched (same opt-in-deviation pattern as
-# ``canonicalize``). Same separator family as the timestamp regex.
-_DATE_RE = re.compile(r"^[\"]?[0-9]{4}[-/][0-9]{2}[-/][0-9]{2}[\"]?$")
 
 MAX_DECIMAL_DIGITS = 38  # JsonSchemaFinder.java:51
 _MIN_LONG = -(2**63)
@@ -382,65 +374,6 @@ class UnionT(HType):
             yield from child.flat_items(f"{prefix}.{i}")
 
 
-@dataclass(frozen=True)
-class MapT(HType):
-    """``map<string, value>`` — an EXTENSION, never produced by induction
-    (the reference always models JSON objects as structs,
-    JsonSchemaFinder.java:124-133). Created only by ``decay_wide_structs``:
-    the schema-explosion guard for objects used as key-value stores
-    (uuid-keyed props and the like), whose struct form would grow without
-    bound at corpus scale."""
-
-    value: HType = field(default_factory=NullT)
-    kind: Kind = field(init=False, default=Kind.MAP)
-
-    def __str__(self) -> str:
-        return f"map<string,{self.value}>"
-
-    def subsumes(self, other: HType) -> bool:
-        # absorbs structs so a decayed partition merges with an undecayed one
-        return other.kind in (Kind.MAP, Kind.STRUCT, Kind.NULL)
-
-    def merged_with(self, other: HType) -> HType:
-        if isinstance(other, MapT):
-            return MapT(merge_types(self.value, other.value))
-        if isinstance(other, StructT):
-            v = self.value
-            for _, ft in other.fields:
-                v = merge_types(v, ft)
-            return MapT(v)
-        return self
-
-    def flat_items(self, prefix: str) -> Iterator[Tuple[str, HType]]:
-        yield from self.value.flat_items(f"{prefix}._map")
-
-
-def decay_wide_structs(t: HType, max_fields: int = 256) -> HType:
-    """Recursively decay any struct wider than ``max_fields`` into
-    ``map<string, lub(field types)>``.
-
-    The bound caps accumulator memory AND downstream plan width: a
-    million-key struct is unusable as a Spark schema (Catalyst plans are
-    per-column), while the map form stays O(1). Applied per-partition
-    inside the distributed folds when requested, so the guard holds during
-    aggregation, not just at the end."""
-    if isinstance(t, StructT):
-        fields = tuple((n, decay_wide_structs(ft, max_fields)) for n, ft in t.fields)
-        if len(fields) > max_fields:
-            v: HType = NullT()
-            for _, ft in fields:
-                v = merge_types(v, ft)
-            return MapT(v)
-        return StructT(fields)
-    if isinstance(t, ListT):
-        return ListT(decay_wide_structs(t.element, max_fields))
-    if isinstance(t, UnionT):
-        return UnionT(tuple(decay_wide_structs(c, max_fields) for c in t.children))
-    if isinstance(t, MapT):
-        return MapT(decay_wide_structs(t.value, max_fields))
-    return t
-
-
 # --- induction ---------------------------------------------------------------
 
 JsonValue = TUnion[None, bool, int, float, str, list, dict, JsonNumber]
@@ -531,17 +464,15 @@ def _covers(acc: NumericT, text: str) -> bool:
     )
 
 
-def _pick_string(text: str, detect_dates: bool = False) -> StringT:
+def _pick_string(text: str) -> StringT:
     if _TIMESTAMP_RE.match(text):
         return StringT(Kind.TIMESTAMP)
-    if detect_dates and _DATE_RE.match(text):
-        return StringT(Kind.DATE)
     if _HEX_RE.match(text):
         return StringT(Kind.BINARY)
     return _STRING
 
 
-def infer_type(value: JsonValue, detect_dates: bool = False) -> HType:
+def infer_type(value: JsonValue) -> HType:
     """JSON value → discovered type (pickType parity, JsonSchemaFinder.java:56-134).
 
     For bug-for-bug numeric parity, parse corpora with
@@ -549,16 +480,9 @@ def infer_type(value: JsonValue, detect_dates: bool = False) -> HType:
     :class:`JsonNumber` lexical forms. Plain ``int``/``float`` are accepted
     and typed off their canonical Python rendering.
 
-    ``detect_dates`` (default False) is a documented EXTENSION, not parity:
-    the reference's ``Kind.DATE`` is a dead enum member its induction never
-    produces (HiveType.java:32; pickString has timestamp/binary/string
-    branches only, JsonSchemaFinder.java:98-106), and the default here
-    matches that exactly. Opting in types bare ISO dates (``2024-01-31``,
-    the separator family the timestamp regex accepts) as ``date`` leaves —
-    the one user-visible gap a real JSON corpus hits daily. Mixed
-    date/non-date strings still decay to plain ``string`` through the
-    ordinary lattice rule (StringType.java:52-57), and goldens pin the
-    default path byte-identical with the flag absent.
+    Strings pick timestamp, binary or string only: like the reference's
+    pickString (JsonSchemaFinder.java:98-106), a bare date stays a string,
+    and ``Kind.DATE`` is never produced (HiveType.java:32).
     """
     if value is None:
         return NullT()
@@ -571,16 +495,14 @@ def infer_type(value: JsonValue, detect_dates: bool = False) -> HType:
     if isinstance(value, float):
         return _pick_number(repr(value))
     if isinstance(value, str):
-        return _pick_string(value, detect_dates)
+        return _pick_string(value)
     if isinstance(value, list):
         element: HType = NullT()
         for child in value:
-            element = merge_types(element, infer_type(child, detect_dates))
+            element = merge_types(element, infer_type(child))
         return ListT(element)
     if isinstance(value, dict):
-        return StructT(
-            tuple((name, infer_type(v, detect_dates)) for name, v in value.items())
-        )
+        return StructT(tuple((name, infer_type(v)) for name, v in value.items()))
     raise TypeError(f"not a JSON value: {type(value)!r}")
 
 
@@ -630,7 +552,7 @@ def merge_value(acc: Optional[HType], doc: JsonValue) -> Optional[HType]:
     itself (the same object) whenever the document adds nothing, so
     parents rebuild only along a path that widened. Equal to the unfused
     spec in value and in raw union branch order; whatever the walk does
-    not cover (map and null accumulators, plain ``int``/``float`` values,
+    not cover (a null accumulator, plain ``int``/``float`` values,
     a category mismatch, a list that widens its element) takes the spec.
     One stack frame per nesting level.
     """
@@ -713,8 +635,6 @@ def canonicalize(t: HType) -> HType:
         kids = tuple(sorted((canonicalize(c) for c in t.children),
                             key=lambda c: (_CANON_ORDER[c.kind], str(c))))
         return UnionT(kids)
-    if isinstance(t, MapT):
-        return MapT(canonicalize(t.value))
     return t
 
 
@@ -760,7 +680,7 @@ def _render_type(t: Optional[HType], margin: int) -> str:
     """printType parity (JsonSchemaFinder.java:153-201)."""
     if t is None:
         return "void"
-    if t.kind not in (Kind.STRUCT, Kind.LIST, Kind.UNION, Kind.MAP):
+    if t.kind not in (Kind.STRUCT, Kind.LIST, Kind.UNION):
         return str(t)
     if isinstance(t, StructT):
         parts = []
@@ -772,8 +692,6 @@ def _render_type(t: Optional[HType], margin: int) -> str:
     if isinstance(t, UnionT):
         inner = ",".join(_render_type(c, margin + _INDENT) for c in t.children)
         return f"uniontype <{inner}>"
-    if isinstance(t, MapT):
-        return f"map <string,{_render_type(t.value, margin + _INDENT)}>"
     raise ValueError(f"unknown kind {t.kind}")
 
 
@@ -801,12 +719,10 @@ def to_flat(t: HType, prefix: str = "root") -> str:
 # --- Spark mapping (SURVEY §1.6) --------------------------------------------
 
 
-def to_spark_type(t: HType, *, union_mode: str = "tagged"):
+def to_spark_type(t: HType):
     """Discovered type → ``pyspark.sql.types`` tree.
 
-    union_mode:
-      - ``"tagged"``: the ORC/Hive encoding — struct<tag:tinyint, field0:t0, ...>
-      - ``"string"``: decay unions to StringType (lossy, flag-gated)
+    A union gets the ORC/Hive encoding, struct<tag:tinyint, field0:t0, ...>.
     BINARY maps to StringType: the hex text stays a string, so loading
     round-trips (BinaryType would hold the raw UTF-8 bytes under ``from_json``).
     """
@@ -845,11 +761,7 @@ def to_spark_type(t: HType, *, union_mode: str = "tagged"):
             )
         if isinstance(t, ListT):
             return T.ArrayType(conv(t.element), containsNull=True)
-        if isinstance(t, MapT):
-            return T.MapType(T.StringType(), conv(t.value), valueContainsNull=True)
         if isinstance(t, UnionT):
-            if union_mode == "string":
-                return T.StringType()
             fields = [T.StructField("tag", T.ByteType(), nullable=True)]
             fields += [
                 T.StructField(f"field{i}", conv(c), nullable=True)

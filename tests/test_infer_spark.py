@@ -329,6 +329,31 @@ def test_load_json_column_no_union_uses_from_json(spark):
     assert [r["parsed"]["k"] for r in loaded.orderBy("js").collect()] == [1, 200]
 
 
+def test_load_json_column_no_documents(spark):
+    """A column of SQL nulls infers no type and loads as a null ``parsed``."""
+    from hive_json_spark.infer import load_json_column
+
+    df = spark.createDataFrame([(1, None), (2, None)], "id bigint, js string")
+    loaded = load_json_column(df, "js")
+    assert [(r["id"], r["parsed"]) for r in loaded.orderBy("id").collect()] == [
+        (1, None),
+        (2, None),
+    ]
+
+
+def test_load_json_column_only_json_nulls(spark):
+    """A column of ``null`` documents infers ``void``, which ``from_json``
+    rejects as a schema; it loads as a null ``parsed``."""
+    from hive_json_spark.infer import load_json_column
+
+    df = spark.createDataFrame([(1, "null"), (2, " null ")], "id bigint, js string")
+    loaded = load_json_column(df, "js")
+    assert [(r["id"], r["parsed"]) for r in loaded.orderBy("id").collect()] == [
+        (1, None),
+        (2, None),
+    ]
+
+
 def test_write_table_partitioned_and_bucketed(spark, tmp_path):
     from hive_json_spark.sources.tables import write_table
 
@@ -371,20 +396,18 @@ def test_infer_on_error_skip_counts_corrupt(spark):
         infer_schema_of_column(df, "js")
 
 
-def test_infer_wide_struct_decays_to_map(spark):
-    """Schema-explosion guard: uuid-keyed objects decay to map<string,T>
-    instead of growing one struct field per distinct key."""
+def test_infer_wide_struct_stays_struct(spark):
+    """An object is always a struct (JsonSchemaFinder.java:124-133): 100
+    documents with 6 distinct keys each infer one 600-field struct."""
     import json as _json
 
     from hive_json_spark.infer import infer_schema_of_column
 
     rows = [(_json.dumps({f"key_{i}_{j}": j for j in range(6)}),) for i in range(100)]
     df = spark.createDataFrame(rows, "js string")
-    r = infer_schema_of_column(df, "js", max_struct_fields=64)
-    assert str(r.htype) == "map<string,tinyint>"
-    # without the guard: 600-field struct
-    r2 = infer_schema_of_column(df, "js")
-    assert str(r2.htype).count("key_") == 600
+    r = infer_schema_of_column(df, "js")
+    assert str(r.htype).startswith("struct<")
+    assert str(r.htype).count("key_") == 600
 
 
 def test_write_table_formats_round_trip(spark, tmp_path):
@@ -456,6 +479,25 @@ def test_infer_schema_by_group_tolerates_corrupt(spark):
         out = infer_schema_by_group(df, "grp", "payload", on_error="skip", render=render)
         got = {r.grp: (r.hive_type, r.records, r.corrupt) for r in out.collect()}
         assert got["c"] == (void, 0, 1), render
+
+
+def test_infer_schema_by_group_column_name_with_space(spark):
+    """A group column whose name a DDL string cannot hold keeps its name
+    and type; its null group is a group of its own."""
+    from hive_json_spark.infer import infer_schema_by_group
+
+    df = spark.createDataFrame(
+        [("a", '{"x": 1}'), ("b", '{"x": "y"}'), (None, '{"y": true}')],
+        "`event type` string, payload string",
+    )
+    out = infer_schema_by_group(df, "event type", "payload")
+    assert out.columns == ["event type", "hive_type", "records", "corrupt"]
+    rows = sorted((tuple(r) for r in out.collect()), key=lambda r: r[0] or "")
+    assert rows == [
+        (None, "struct<y:boolean>", 1, 0),
+        ("a", "struct<x:tinyint>", 1, 0),
+        ("b", "struct<x:string>", 1, 0),
+    ]
 
 
 def test_infer_schema_by_group_flat_render(spark):

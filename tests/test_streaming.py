@@ -28,22 +28,32 @@ def test_streaming_inference_matches_batch(spark, tmp_path):
 
 def test_streaming_inference_resumes_after_restart(spark, tmp_path, monkeypatch):
     """A rerun on the same checkpoint folds the new file into the batches
-    already folded: the result equals a fresh run over both files. With no
-    checkpoint the temporary one is removed on return."""
+    already folded: the result equals a fresh run over both files. The
+    accumulator does not grow: after each run it is one committed one-row
+    version. With no checkpoint the temporary one is removed on return."""
     import os
     import tempfile
 
     from hive_json_spark.streaming import infer_schema_streaming
+    from hive_json_spark.streaming.state import read_state
 
     d = tmp_path / "stream_in"
     d.mkdir()
-    (d / "a.json").write_text('{"a":1}\n{"a":2}\n')
     ckpt = str(tmp_path / "ckpt")
-    r = infer_schema_streaming(spark, str(d), checkpoint_dir=ckpt)
+
+    def run_and_check_state():
+        r = infer_schema_streaming(spark, str(d), checkpoint_dir=ckpt)
+        acc_dir = f"{ckpt}/schema"
+        assert len([n for n in os.listdir(acc_dir) if n.startswith("v=")]) == 1
+        assert read_state(spark, acc_dir).count() == 1
+        return r
+
+    (d / "a.json").write_text('{"a":1}\n{"a":2}\n')
+    r = run_and_check_state()
     assert (str(r.htype), r.records) == ("struct<a:tinyint>", 2)
 
     (d / "b.json").write_text('{"b":"x"}\n')
-    r = infer_schema_streaming(spark, str(d), checkpoint_dir=ckpt)
+    r = run_and_check_state()
     assert (str(r.htype), r.records) == ("struct<a:tinyint,b:string>", 3)
 
     tmp_root = tmp_path / "tmp_root"

@@ -302,36 +302,25 @@ def test_union_merges():
     )
 
 
-# --- detect_dates extension (r9; NO reference counterpart) -------------------
+# --- dates stay strings ------------------------------------------------------
 # The reference's Kind.DATE is a dead enum member (HiveType.java:32) its
-# pickString never produces (JsonSchemaFinder.java:98-106); the default path
-# here pins that. detect_dates=True is the documented opt-in deviation.
+# pickString never produces (JsonSchemaFinder.java:98-106).
 
 @pytest.mark.parametrize(
-    "text,default_kind,optin_kind",
+    "text,kind",
     [
-        ('"2024-01-31"', "string", "date"),       # bare ISO date
-        ('"2024/01/31"', "string", "date"),       # slash family (regex parity)
-        ('"2024-1-31"', "string", "string"),      # non-padded: not a date
-        ('"20240131"', "binary", "binary"),       # hex-shaped stays binary
-        ('"2024-01-31T00:00:00"', "timestamp", "timestamp"),  # ts wins first
-        ('"not a date"', "string", "string"),
+        ('"2024-01-31"', "string"),       # bare ISO date
+        ('"2024/01/31"', "string"),       # slash family of the timestamp regex
+        ('"2024-1-31"', "string"),
+        ('"20240131"', "binary"),         # hex-shaped
+        ('"2024-01-31T00:00:00"', "timestamp"),
+        ('"not a date"', "string"),
     ],
 )
-def test_detect_dates_leaf(text, default_kind, optin_kind):
-    assert str(infer_type(loads_first(text))) == default_kind
-    assert str(infer_type(loads_first(text), detect_dates=True)) == optin_kind
+def test_dates_stay_strings(text, kind):
+    assert str(infer_type(loads_first(text))) == kind
 
 
-def test_detect_dates_recurses_and_merges():
+def test_dates_stay_strings_at_depth():
     doc = loads_first('{"d": "2024-01-31", "xs": ["2024-01-31", "2024-02-01"]}')
-    # default: byte-identical to reference behavior — no date anywhere
     assert str(infer_type(doc)) == "struct<d:string,xs:list<string>>"
-    # opt-in: dates at depth; equal-kind merge keeps date
-    assert str(infer_type(doc, detect_dates=True)) == "struct<d:date,xs:list<date>>"
-    # mixed date/non-date decays to plain string via the ordinary lattice
-    mixed = loads_first('["2024-01-31", "plainly text"]')
-    assert str(infer_type(mixed, detect_dates=True)) == "list<string>"
-    # date vs timestamp also decays (differing string kinds rule)
-    dt = loads_first('["2024-01-31", "2024-01-31T00:00:00"]')
-    assert str(infer_type(dt, detect_dates=True)) == "list<string>"

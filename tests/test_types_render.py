@@ -7,13 +7,11 @@ from hypothesis import example, given, settings, strategies as st
 from hive_json_spark.types import (
     JsonNumber,
     Kind,
-    MapT,
     NullT,
     NumericT,
     _covers,
     _pick_number,
     canonicalize,
-    decay_wide_structs,
     infer_type,
     iter_json_documents,
     loads_first,
@@ -151,8 +149,6 @@ def test_to_spark_type_union_tagged_and_string():
     tagged = to_spark_type(t)
     u = dict((f.name, f.dataType) for f in tagged.fields)["u"]
     assert [f.name for f in u.fields] == ["tag", "field0", "field1"]
-    decayed = to_spark_type(t, union_mode="string")
-    assert dict((f.name, f.dataType) for f in decayed.fields)["u"] == T.StringType()
 
 
 # --- lattice properties (hypothesis) -----------------------------------------
@@ -292,15 +288,6 @@ def test_merge_value_is_fused_merge_types(vs):
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.lists(fold_values, max_size=6))
-def test_merge_value_map_accumulator(vs):
-    # a decayed wide struct is a MapT accumulator: the fallback path
-    acc = decay_wide_structs(infer_type(loads_first('{"a":1,"b":"x","c":[2]}')), 2)
-    assert isinstance(acc, MapT)
-    assert_fused_fold(acc, [loads_first(dump_lexical(v)) for v in vs])
-
-
-@settings(max_examples=100, deadline=None)
 @given(st.lists(json_values, min_size=1, max_size=6))
 def test_merge_value_plain_python_numbers(vs):
     # plain int/float values (not parsed lexically) take the fallback
@@ -378,10 +365,9 @@ def test_canonicalize_idempotent(v):
 @given(json_values, json_values)
 def test_to_spark_type_total(a, b):
     """Every type the lattice can produce (incl. merge-created unions) maps
-    to a Spark type in both union modes without error."""
+    to a Spark type without error."""
     t = merge_types(infer_type(via_json(a)), infer_type(via_json(b)))
     to_spark_type(t)
-    to_spark_type(t, union_mode="string")
 
 
 @settings(max_examples=100, deadline=None)
