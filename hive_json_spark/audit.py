@@ -257,7 +257,8 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
     print("Streaming (`q_stream_*`) rows show the FINAL-STATE scan only —")
     print("the stream's work happens inside foreachBatch/state-store jobs,")
     print("which a static explain of the returned frame cannot show; their")
-    print("shuffle sizing is the harness-bounded 8 partitions")
+    print("shuffle sizing is the harness-bounded 4 partitions with adaptive")
+    print("execution off, set on the entry's own session")
     print("(queries_streaming.py).")
     return 0
 

@@ -10,7 +10,7 @@ returned DataFrame gives the producer no point in time at which it can
 
 ``scoped_persist`` solves the lifecycle by REGISTRATION instead of
 ownership: the frame is persisted and recorded, and the graded-query
-wrapper (``registry.py``) releases everything recorded by the PREVIOUS
+wrapper (``registry.query``) releases everything recorded by the PREVIOUS
 query when the next one starts — by then the previous result has been
 acted on (the driver, bench, and parity harness all materialize each
 query before moving to the next). Library users who call operators

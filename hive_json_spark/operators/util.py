@@ -43,16 +43,18 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
        read as planned, before any RDD is built, because building the
        RDD finalizes an AQE plan, which runs its exchanges as jobs.
     3. Otherwise the frame is spread, ``repartition(defaultParallelism)``,
-       when ``min(planned partitions, parquet row groups)`` is below
-       ``max(defaultParallelism // 2, 2)``. Planned partitions catch a
-       small file or a single ``.gz`` that arrives as one partition.
-       Row groups catch a large single-row-group parquet file: it plans
-       ``size / maxPartitionBytes`` byte-range splits, but a row group is
-       atomic, so one split gets every row and the rest are empty (the
-       zipf-sf10 minhash signature kernel ran 39 s on one core behind 24
-       planned splits, 6 s spread). Row groups are summed from the
-       footers of ``df.inputFiles()`` on every call, and count only when
-       every input is a readable local parquet file.
+       when ``min(parquet row groups, planned partitions)`` is below
+       ``max(defaultParallelism // 2, 2)``, so when either one is; the
+       row groups are checked first. They are summed from the footers of
+       ``df.inputFiles()`` on every call (a few ms), and count only when
+       every input is a readable local parquet file. They catch a large
+       single-row-group parquet file: it plans ``size / maxPartitionBytes``
+       byte-range splits, but a row group is atomic, so one split gets
+       every row and the rest are empty (the zipf-sf10 minhash signature
+       kernel ran 39 s on one core behind 24 planned splits, 6 s spread).
+       Planned partitions, read only when the row groups do not already
+       decide, catch a small file or a single ``.gz`` that arrives as one
+       partition; counting them builds the frame's RDD (~30 ms).
 
     The one case this narrows: a shuffled frame whose AQE-coalesced
     output falls below the floor is left as it is, since counting that
@@ -68,7 +70,7 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     floor = max(target // 2, 2)
-    if qe.toRdd().getNumPartitions() < floor:
-        return df.repartition(target)
     rg = _scan_row_groups(df)
-    return df.repartition(target) if rg is not None and rg < floor else df
+    if (rg is not None and rg < floor) or qe.toRdd().getNumPartitions() < floor:
+        return df.repartition(target)
+    return df

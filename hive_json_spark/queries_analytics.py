@@ -17,21 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from hive_json_spark.functions.exact import avg_exact, int_units, sum_exact
 from hive_json_spark.operators.relational import bloom_semi_join, grouped_value_ranks
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table, table_row_count
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --- behavioral analytics on events -----------------------------------------
 

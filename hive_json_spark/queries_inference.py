@@ -8,23 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hive_json_spark.infer import infer_schema_by_group, infer_schema_of_column
+from hive_json_spark.registry import query
 from hive_json_spark.shred import shred_column
 from hive_json_spark.sources import load_table
 from hive_json_spark.types import NullT, to_spark_type
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # The oracle re-derives the numeric-sizing lattice for the single-key
 # ``{"k": int}`` corpus: byte/short/int/long thresholds off the value range

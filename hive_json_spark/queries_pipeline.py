@@ -1,7 +1,8 @@
 """LLM-data-pipeline queries: dedup, similarity search, text analysis —
-each oracled in DuckDB where SQL can express the semantics; approximate /
-hash-dependent operators (MinHash-LSH, SimHash, hyperplane-LSH, IVF) are
-declared without oracles (the driver records rows-only checks for them).
+each oracled in DuckDB. Approximate / hash-dependent operators (SimHash,
+hyperplane-LSH, IVF) have no SQL form for their raw output, so their
+entries grade an acceptance verdict (exact truth counts plus a recall
+floor) instead.
 """
 
 from __future__ import annotations
@@ -27,21 +28,8 @@ from hive_json_spark.operators.multimodal import (
 )
 from hive_json_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
 from hive_json_spark.operators.textstats import fingerprint, lang_id, text_profile
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --- deduplication -----------------------------------------------------------
 
@@ -245,37 +233,6 @@ def _dedup_method_stats(spark: SparkSession, sf_dir: str) -> list:
     slowest of all (4.4 s). Identical output rows in all variants."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from hive_json_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        shingle_jaccard_truth_pairs,
-        simhash_near_dup_pairs,
-        substring_dup_pairs,
-        winnow_dup_pairs,
-    )
-
-    # Eval on a bounded, GROUP-COMPLETE prefix (doc_id < 2000 keeps whole
-    # planted near-dup groups): an acceptance harness's cost must not
-    # scale with the corpus — the methods' own scale behavior is audited
-    # separately (SCALE.md); only their quality is graded here. The
-    # checkpoint is bounded by the same constant the prefix is.
-    #
-    # Shuffle partitions are sized to the harness's CONSTANT data (2000
-    # docs), not the session default: five concurrent ~6-stage pipelines
-    # x 32 tasks/stage is ~1000 near-empty task dispatches, and the
-    # scheduler overhead was the wall (measured min-of-3 solo sf0.1:
-    # 3.32 s at 32 partitions -> 2.36 s at 8). Corpus-scale operators
-    # keep the session default; restored in finally.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _dedup_method_stats_run(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _dedup_method_stats_run(spark: SparkSession, sf_dir: str) -> list:
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.storagelevel import StorageLevel
 
     from hive_json_spark.operators.dedup import (
@@ -287,6 +244,12 @@ def _dedup_method_stats_run(spark: SparkSession, sf_dir: str) -> list:
         winnow_dup_pairs,
     )
 
+    # Eval on a bounded, GROUP-COMPLETE prefix (doc_id < 2000 keeps whole
+    # planted near-dup groups): an acceptance harness's cost must not
+    # scale with the corpus — the methods' own scale behavior is audited
+    # separately (SCALE.md); only their quality is graded here. The
+    # checkpoint is bounded by the same constant the prefix is.
+    #
     # Shared base (r10): ONE corpus read + ONE Arrow tokenize+shingle pass
     # feeds all five arms — truth and minhash consume the precomputed
     # 3-gram shingle sets via shingles_col=, the span/simhash arms read
@@ -699,11 +662,17 @@ _SHINGLE_TRUTH_CTE = """
       WHERE CAST(i.ic AS DOUBLE) >= 0.5 * (sa.n + sb.n - i.ic))
 """
 
-# q_dedup_method_eval registers HERE (not via decorator): its oracle is
-# built from _SHINGLE_TRUTH_CTE, which is defined after the function body.
-QUERIES["q_dedup_method_eval"] = q_dedup_method_eval
-ORACLES["q_dedup_method_eval"] = _eval_oracle_sql()
-
+# q_dedup_method_eval registers HERE, not at its def: its oracle is built
+# from _SHINGLE_TRUTH_CTE, which is defined after the function body.
+# Shuffle partitions are sized to the harness's CONSTANT data (2000 docs),
+# not the session default: five concurrent ~6-stage pipelines x 32
+# tasks/stage is ~1000 near-empty task dispatches, and the scheduler
+# overhead was the wall (measured min-of-3 solo sf0.1: 3.32 s at 32
+# partitions -> 2.36 s at 8). The entry runs on a session of its own
+# (registry.query), so corpus-scale operators keep the caller's value.
+query("q_dedup_method_eval", _eval_oracle_sql(), session_conf={"spark.sql.shuffle.partitions": "8"})(
+    q_dedup_method_eval
+)
 
 
 @query(

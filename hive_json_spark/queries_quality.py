@@ -24,21 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from hive_json_spark.functions.exact import avg_exact, int_units, sum_exact
 from hive_json_spark.functions.text import tokens
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --- gaps and islands: per-user activity streaks -----------------------------
 

@@ -28,21 +28,8 @@ from hive_json_spark.operators.relational import (
     top_k,
     top_k_per_group,
 )
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table, table_row_count
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --- aggregation + filter (TPC-H Q1 shape) -----------------------------------
 

@@ -15,12 +15,17 @@ snapshot — bounded by the RESULT cardinality, never the stream volume.
 Harness cost (the r8 trim): a 2-file slice still exercises both state
 paths (batch 1 creates, batch 2 merges with committed state) at ~2/3 the
 fixed per-batch engine cost of the r7 3-slice harness; the staged inputs
-are written ONCE per process per (entry, sf_dir) — staging is test-input
-preparation, not the graded operator — and a one-time noop stream warms
-the streaming engine (classloading + state-store init, ~2s) out of every
-entry. State and checkpoint dirs stay fresh per invocation, so the
-operator itself replays its full create→merge→finalize lifecycle on every
-call.
+are written ONCE per process per (entry, input files) — staging is
+test-input preparation, not the graded operator, and a table rewritten in
+place is a new input — and a one-time noop stream warms the streaming
+engine (classloading + state-store init, ~2s) out of every entry. State
+and checkpoint dirs stay fresh per invocation, so the operator itself
+replays its full create→merge→finalize lifecycle on every call.
+
+Every entry registers with ``session_conf=_HARNESS_CONF`` (shuffle
+partitions sized to the bounded harness, adaptive execution off), so it
+runs on a session of its own (``registry.query``); the caller's session
+conf is never changed.
 
 Determinism notes per entry:
 - topk/cms/drift counts are integer sums — associative, slice-free.
@@ -37,7 +42,6 @@ Determinism notes per entry:
 from __future__ import annotations
 
 import atexit
-import functools
 import glob
 import hashlib
 import os
@@ -48,27 +52,22 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hive_json_spark.functions.exact import int_units
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table
 
-QUERIES = {}
-ORACLES = {}
-
 # Every entry in this module is a BOUNDED streaming harness (k rows /
-# depth*width cells / |categories| / days*types of state), so the graded
-# wrapper sizes shuffle partitions — which for stateful streaming also
-# fixes the number of STATE STORE instances per batch — to the harness,
-# the same bounded-input sizing q_dedup_method_eval uses. Measured 2x on
-# the state-store entries (join 7.4->3.5 s, merge 8.3->4.0 s). Production
-# streams on real volumes keep the session default; the operators
-# themselves never assume a partition count.
-_HARNESS_SHUFFLE_PARTITIONS = "4"
-
-# AQE is also turned OFF inside the harness (r9 streaming-tail trim): a
-# micro-batch here is metadata-sized, so adaptive re-planning buys nothing
-# and its per-shuffle query-stage materialization barriers cost a visible
-# slice of each foreachBatch job (measured ~0.3-0.7 s per entry at sf0.1).
-# Production streams on real volumes keep the session default — this is
-# harness sizing, not an operator assumption.
+# depth*width cells / |categories| / days*types of state), so it registers
+# with shuffle partitions — which for stateful streaming also fix the
+# number of STATE STORE instances per batch — sized to the harness, the
+# same bounded-input sizing q_dedup_method_eval uses. Measured 2x on the
+# state-store entries (join 7.4->3.5 s, merge 8.3->4.0 s).
+# Adaptive execution is off too: a micro-batch here is metadata-sized, so
+# adaptive re-planning buys nothing and its per-shuffle query-stage
+# barriers cost each foreachBatch job (merge, rollup and session measured
+# 0.2-0.4 s slower per call at sf0.1 with it on). Both run on the entry's
+# own session, never the caller's; production streams on real volumes keep
+# the session defaults, and the operators never assume a partition count.
+_HARNESS_CONF = {"spark.sql.shuffle.partitions": "4", "spark.sql.adaptive.enabled": "false"}
 
 # sessions whose streaming engine has already run one query (keyed by the
 # JVM SparkContext identity — survives getOrCreate() returning the same
@@ -82,7 +81,7 @@ def _stage_root() -> str:
     """Process-scoped cache root for staged stream inputs (removed at
     interpreter exit). State/checkpoint dirs NEVER live here — only the
     immutable staged source files, which are pure functions of
-    (entry, sf_dir)."""
+    (entry, input files)."""
     global _STAGE_ROOT
     if _STAGE_ROOT is None:
         _STAGE_ROOT = tempfile.mkdtemp(prefix="hjs_stream_stage_")
@@ -115,65 +114,47 @@ def _warm_stream_engine(spark: SparkSession) -> None:
     _WARMED.add(key)
 
 
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        @functools.wraps(fn)
-        def sized(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _warm_stream_engine(spark)
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-            spark.conf.set("spark.sql.shuffle.partitions", _HARNESS_SHUFFLE_PARTITIONS)
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-        QUERIES[name] = sized
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return sized
-
-    return deco
+def _two_files(df: DataFrame, path: str) -> None:
+    df.repartition(2).write.parquet(path)
 
 
-def _staged(name: str, sf_dir: str, build, n_files: int = 2, by=None, range_by=None) -> str:
-    """Return a directory holding ``build()`` written as ``n_files`` parquet
-    files, staging it on first use per (entry, sf_dir) and reusing it for
-    the rest of the process. ``by`` hash-partitions on a column
-    (key-colocated slicing); ``range_by`` range-partitions (time-ordered
-    slicing — each batch covers a contiguous span, the realistic arrival
-    shape); default is round-robin."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+def _staged(name: str, spark: SparkSession, sf_dir: str, table: str, write=_two_files) -> str:
+    """Return a directory that ``write(df, dir)`` fills from ``table``'s
+    frame (default: two round-robin parquet files), staged on first use and
+    reused for the rest of the process. The copy is keyed on the (path,
+    size, mtime_ns) of every file of the table, read with ``os.stat`` (no
+    frame is built on a reuse), so a table rewritten in place under the
+    same path is staged afresh. It is built in a scratch directory and
+    renamed into place only once ``write`` returns: a failed or
+    multi-write build never leaves a half-staged directory that later calls
+    reuse (the rename keeps file mtimes)."""
+    path = os.path.abspath(f"{sf_dir}/{table}.parquet")
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, names in os.walk(path) for f in names
+    )
+    stats = [(f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)]]
+    tag = hashlib.md5(repr(stats).encode()).hexdigest()[:12]
     src = f"{_stage_root()}/{name}_{tag}"
-    if not os.path.exists(f"{src}/_SUCCESS"):
-        df = build()
-        if range_by is not None:
-            rep = df.repartitionByRange(n_files, F.col(range_by))
-        elif by is not None:
-            rep = df.repartition(n_files, by)
-        else:
-            rep = df.repartition(n_files)
-        rep.write.mode("overwrite").parquet(src)
+    if not os.path.exists(src):
+        build = f"{src}.build"
+        shutil.rmtree(build, ignore_errors=True)
+        write(load_table(spark, sf_dir, table), build)
+        os.rename(build, src)
     return src
 
 
-def _staged_schema(spark: SparkSession, src: str):
-    """Schema of a staged dir: driver-side footer read (zero Spark jobs;
-    r11 — each ``spark.read.parquet().schema`` probe was a 1-task
-    inference JOB billed to the entry). Falls back to Spark inference for
-    any layout/type the footer mapping doesn't cover — same contract as
-    ``sources.tables.parquet_schema``, which pins mapping equality."""
+def _stream_over(spark: SparkSession, src: str) -> DataFrame:
+    """File-source stream over a staged dir, ONE FILE PER MICRO-BATCH.
+    Its schema is a driver-side footer read (zero Spark jobs; r11 — each
+    ``spark.read.parquet().schema`` probe was a 1-task inference JOB
+    billed to the entry), with Spark inference for any layout/type the
+    footer mapping doesn't cover (``sources.tables.parquet_schema``)."""
     from hive_json_spark.sources.tables import parquet_schema
 
+    _warm_stream_engine(spark)
     schema = parquet_schema(src)
-    return schema if schema is not None else spark.read.parquet(src).schema
-
-
-def _stream_over(spark: SparkSession, src: str) -> DataFrame:
-    """File-source stream over a staged dir, ONE FILE PER MICRO-BATCH."""
-    schema = _staged_schema(spark, src)
+    if schema is None:
+        schema = spark.read.parquet(src).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -220,6 +201,7 @@ def _finalize(result: DataFrame, tmp: str) -> DataFrame:
     FROM events GROUP BY user_id
     ORDER BY n DESC, key ASC LIMIT 10
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_topk_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/topk.py run to completion over a 2-micro-batch event
@@ -228,7 +210,7 @@ def q_stream_topk_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-desc/key-asc tiebreak makes the k-row view totally ordered."""
     from hive_json_spark.streaming.topk import streaming_topk
 
-    src = _staged("topk", sf_dir, lambda: load_table(spark, sf_dir, "events"))
+    src = _staged("topk", spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="q_stream_topk_")
     q = streaming_topk(_stream_over(spark, src), "user_id", f"{tmp}/state", f"{tmp}/ckpt", k=10)
     q.awaitTermination()
@@ -252,6 +234,7 @@ def q_stream_topk_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e CROSS JOIN depths d
     GROUP BY 1, 2
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/cms.py run to completion over a 2-micro-batch event
@@ -262,7 +245,7 @@ def q_stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the estimates."""
     from hive_json_spark.streaming.cms import streaming_cms
 
-    src = _staged("cms", sf_dir, lambda: load_table(spark, sf_dir, "events"))
+    src = _staged("cms", spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="q_stream_cms_")
     q = streaming_cms(_stream_over(spark, src), "user_id", f"{tmp}/state", f"{tmp}/ckpt", depth=4, width=512)
     q.awaitTermination()
@@ -285,6 +268,7 @@ def q_stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
     FROM events GROUP BY 1, 2
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_rollup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/rollup.py (the hypertable continuous-aggregate pattern)
@@ -299,14 +283,11 @@ def q_stream_rollup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing would make every batch rewrite every day."""
     from hive_json_spark.streaming.rollup import continuous_rollup
 
-    src = _staged(
-        "rollup",
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "events").select(
-            "ts", "event_type", int_units("value").alias("cents")
-        ),
-        range_by="ts",
-    )
+    def write_time_ranges(ev: DataFrame, path: str) -> None:
+        cents = ev.select("ts", "event_type", int_units("value").alias("cents"))
+        cents.repartitionByRange(2, "ts").write.parquet(path)
+
+    src = _staged("rollup", spark, sf_dir, "events", write_time_ranges)
     tmp = tempfile.mkdtemp(prefix="q_stream_rollup_")
     q = continuous_rollup(
         _stream_over(spark, src), "ts", ["event_type"], "cents", f"{tmp}/state", f"{tmp}/ckpt"
@@ -340,6 +321,7 @@ def q_stream_rollup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey, o_totalprice, o_orderdate
     FROM chg WHERE rn = 1 AND op = 'U'
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/merge.py (CDC apply) run to completion over a changelog
@@ -355,16 +337,17 @@ def q_stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number window."""
     from hive_json_spark.streaming.merge import streaming_merge_upsert
 
-    def build():
-        return load_table(spark, sf_dir, "orders").select(
+    def write_changelog(orders: DataFrame, path: str) -> None:
+        changes = orders.select(
             "o_custkey",
             "o_orderkey",
             F.when(F.col("o_orderkey") % 7 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
             "o_totalprice",
             "o_orderdate",
         )
+        changes.repartition(2, F.pmod(F.hash("o_custkey"), F.lit(8))).write.parquet(path)
 
-    src = _staged("merge", sf_dir, build, by=F.pmod(F.hash("o_custkey"), F.lit(8)))
+    src = _staged("merge", spark, sf_dir, "orders", write_changelog)
     tmp = tempfile.mkdtemp(prefix="q_stream_merge_")
     q = streaming_merge_upsert(
         _stream_over(spark, src),
@@ -404,6 +387,7 @@ def q_stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                       / (r.n_ref / (SELECT SUM(n_ref) FROM ref))), 6) AS psi_term
     FROM ref r FULL OUTER JOIN cur c ON r.category = c.category
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_psi_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/drift.py run to completion: the monitored stream is the
@@ -415,7 +399,9 @@ def q_stream_psi_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_json_spark.streaming.drift import streaming_psi
 
     ev = load_table(spark, sf_dir, "events")
-    src = _staged("psi", sf_dir, lambda: ev.filter(F.col("event_id") % 2 == 0))
+    src = _staged(
+        "psi", spark, sf_dir, "events", lambda events, path: _two_files(events.filter(F.col("event_id") % 2 == 0), path)
+    )
     tmp = tempfile.mkdtemp(prefix="q_stream_psi_")
     q = streaming_psi(_stream_over(spark, src), "event_type", ev, f"{tmp}/state", f"{tmp}/ckpt")
     q.awaitTermination()
@@ -447,6 +433,7 @@ def q_stream_psi_final(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM sessions GROUP BY user_id, seq
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window_counts (streaming/infer_stream.py) drained over a
@@ -464,17 +451,16 @@ def q_stream_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the end."""
     from hive_json_spark.streaming.infer_stream import session_window_counts
 
-    def build_src(src: str) -> None:
-        ev = load_table(spark, sf_dir, "events")
+    def write_time_halves(ev: DataFrame, path: str) -> None:
         mid = ev.agg(
             F.timestamp_micros(
                 ((F.unix_micros(F.min("ts")) + F.unix_micros(F.max("ts"))) / 2).cast("long")
             ).alias("m")
         ).first()["m"]
-        ev.filter(F.col("ts") <= F.lit(mid)).coalesce(1).write.parquet(src)
-        older = sorted(glob.glob(f"{src}/part-*"))
-        ev.filter(F.col("ts") > F.lit(mid)).coalesce(1).write.mode("append").parquet(src)
-        newer = [p for p in sorted(glob.glob(f"{src}/part-*")) if p not in set(older)]
+        ev.filter(F.col("ts") <= F.lit(mid)).coalesce(1).write.parquet(path)
+        older = sorted(glob.glob(f"{path}/part-*"))
+        ev.filter(F.col("ts") > F.lit(mid)).coalesce(1).write.mode("append").parquet(path)
+        newer = [p for p in sorted(glob.glob(f"{path}/part-*")) if p not in set(older)]
         # pin source ordering: the watermark argument needs the older half
         # processed FIRST, and the file source orders by mtime — force the
         # halves one hour apart instead of trusting write-time granularity
@@ -484,27 +470,9 @@ def q_stream_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in newer:
             os.utime(p, (base, base))
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    src = f"{_stage_root()}/session_{tag}"
-    if not os.path.exists(src):
-        # build into a scratch dir and rename INTO PLACE only after the
-        # second write and the mtime pinning both land: unlike _staged's
-        # single overwrite write (where _SUCCESS is an end-of-build
-        # marker), this staging is two writes + utime, and _SUCCESS
-        # exists after the FIRST — a mid-build failure must not leave a
-        # half-staged dir that later calls silently reuse. The rename
-        # preserves the pinned per-file mtimes.
-        build = f"{src}.build"
-        shutil.rmtree(build, ignore_errors=True)
-        build_src(build)
-        os.rename(build, src)
+    src = _staged("session", spark, sf_dir, "events", write_time_halves)
     tmp = tempfile.mkdtemp(prefix="q_stream_session_")
-    stream = (
-        spark.readStream.schema(_staged_schema(spark, src))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = session_window_counts(stream, gap="30 minutes", watermark="1 hour")
+    out = session_window_counts(_stream_over(spark, src), gap="30 minutes", watermark="1 hour")
     name = f"stream_session_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.format("memory")
@@ -537,6 +505,7 @@ def q_stream_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND r.ts >= l.ts
      AND r.ts <= l.ts + INTERVAL 30 MINUTE
     """,
+    session_conf=_HARNESS_CONF,
 )
 def q_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream_stream_join (streaming/infer_stream.py) drained: clicks
@@ -547,26 +516,18 @@ def q_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs."""
     from hive_json_spark.streaming.infer_stream import stream_stream_join
 
-    # the join keeps FOUR state stores per shuffle partition (left/right x
-    # keyToNumValues/keyWithIndexToValue) and availableNow adds a flush
-    # batch that re-commits them all, so this entry is the most
-    # store-commit-bound of the module: 4 partitions measured faster than
-    # the module's 8 in three independent A/Bs (~0.8 s); the wrapper
-    # restores the session value afterwards
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    def side(name: str, event_type: str, id_alias: str, ts_alias: str) -> DataFrame:
+        def write_one_file(ev: DataFrame, path: str) -> None:
+            events = ev.filter(F.col("event_type") == event_type).select(
+                "user_id", F.col("event_id").alias(id_alias), F.col("ts").alias(ts_alias)
+            )
+            events.repartition(1).write.parquet(path)
 
-    def side(event_type: str, id_alias: str, ts_alias: str):
-        return lambda: (
-            load_table(spark, sf_dir, "events")
-            .filter(F.col("event_type") == event_type)
-            .select("user_id", F.col("event_id").alias(id_alias), F.col("ts").alias(ts_alias))
-        )
+        return _stream_over(spark, _staged(name, spark, sf_dir, "events", write_one_file))
 
-    lsrc = _staged("join_clicks", sf_dir, side("click", "click_id", "click_ts"), n_files=1)
-    rsrc = _staged("join_purchases", sf_dir, side("purchase", "purchase_id", "purchase_ts"), n_files=1)
+    ls = side("join_clicks", "click", "click_id", "click_ts")
+    rs = side("join_purchases", "purchase", "purchase_id", "purchase_ts")
     tmp = tempfile.mkdtemp(prefix="q_stream_join_")
-    ls = spark.readStream.schema(_staged_schema(spark, lsrc)).parquet(lsrc)
-    rs = spark.readStream.schema(_staged_schema(spark, rsrc)).parquet(rsrc)
     joined = stream_stream_join(
         ls, rs, "user_id", "click_ts", "purchase_ts", watermark="1 hour", within="30 minutes"
     ).select("user_id", "click_id", "purchase_id", "purchase_ts")

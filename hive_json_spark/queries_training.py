@@ -21,21 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from hive_json_spark.functions.text import quality_score, tokens
+from hive_json_spark.registry import query
 from hive_json_spark.sources import load_table
-
-QUERIES = {}
-ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --- sequence packing --------------------------------------------------------
 

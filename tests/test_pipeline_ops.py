@@ -1327,7 +1327,7 @@ def test_asof_nearest_matches_bruteforce(spark):
 def test_repetition_filter_hand_computed(spark, sf_dir):
     """Fractions match a hand count on constructed docs: a pathologically
     repetitive doc fails, a diverse one passes."""
-    from hive_json_spark.queries_quality import QUERIES as QQ
+    from hive_json_spark.registry import QUERIES as QQ
     import hive_json_spark.sources as src
 
     rows = {r.doc_id: r for r in QQ["q_repetition_filter"](spark, sf_dir).collect()}
@@ -1349,7 +1349,7 @@ def test_pii_scan_planted_counts(spark, sf_dir):
     """Exactly the planted PII is found: docs ≡0 (mod 3) carry one email,
     ≡1 carry one phone + one IP, ≡2 are clean; redaction shortens
     exactly the found spans."""
-    from hive_json_spark.queries_quality import QUERIES as QQ
+    from hive_json_spark.registry import QUERIES as QQ
 
     rows = QQ["q_pii_scan"](spark, sf_dir).collect()
     assert rows
@@ -1361,7 +1361,7 @@ def test_pii_scan_planted_counts(spark, sf_dir):
 
 
 def test_gopher_rules_hand_computed(spark, sf_dir):
-    from hive_json_spark.queries_quality import QUERIES as QQ
+    from hive_json_spark.registry import QUERIES as QQ
     import hive_json_spark.sources as src
 
     rows = {r.doc_id: r for r in QQ["q_gopher_rules"](spark, sf_dir).collect()}

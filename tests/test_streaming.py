@@ -1052,3 +1052,44 @@ def test_session_windows_under_rocksdb_state_store(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == expected and len(got) > 0
+
+
+def test_stream_stage_follows_a_table_rewritten_in_place(spark, sf_dir, tmp_path):
+    """A graded stream entry stages its input once per process, keyed on
+    the input files' (path, size, mtime): rewriting the table in place
+    under the same path must restage it, not replay the old copy."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hive_json_spark.registry import QUERIES
+    from hive_json_spark.sources import load_table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(f"{sf_dir}/events.parquet", sf / "events.parquet")
+
+    def graded():
+        return [(r.key, r.n) for r in QUERIES["q_stream_topk_final"](spark, str(sf))
+                .orderBy(F.col("n").desc(), F.col("key").asc()).collect()]
+
+    def batch():
+        return [
+            (r.key, r.n)
+            for r in load_table(spark, str(sf), "events")
+            .groupBy(F.col("user_id").alias("key"))
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.col("n").desc(), F.col("key").asc())
+            .limit(10)
+            .collect()
+        ]
+
+    before = graded()
+    assert before == batch()
+    top = before[0][0]
+    table = pq.read_table(sf / "events.parquet")
+    pq.write_table(table.filter(pc.not_equal(table["user_id"], top)), sf / "events.parquet")
+    after = graded()
+    assert top not in [k for k, _ in after]
+    assert after == batch()
